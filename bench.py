@@ -449,6 +449,13 @@ def main() -> None:
                     n: v["median"] for n, v in headline_adjudicated.items()
                 },
                 "sf": sf_val,
+                # scaling evidence: the requested cores, what the master
+                # resolved them to, and the partition count that follows
+                "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
+                "default_parallelism": spark.sparkContext.defaultParallelism,
+                "shuffle_partitions": int(
+                    spark.conf.get("spark.sql.shuffle.partitions")
+                ),
             }
         )
     )

@@ -2712,6 +2712,43 @@ def test_deletion_vectors_cdf(spark, tmp_path):
     }
 
 
+def test_rewrite_dml_after_dv_commit(spark, tmp_path):
+    """Rewrite-mode DELETE and UPDATE on files that already carry deletion
+    vectors: the hit-file scan reads through the vector's anti-join, so its
+    file identity must come from the scan's ``_metadata``. One file per
+    region, set explicitly, so the layout does not follow the core count."""
+    t = str(tmp_path / "t")
+    lake.create_table(
+        spark.createDataFrame(
+            [(k, ["eu", "us"][k % 2], float(k)) for k in range(40)],
+            "k long, region string, v double",
+        ).repartition(1),
+        t,
+        key_cols=["k"],
+        partition_by=["region"],
+    )
+    files0 = dict(lake.snapshot(t).files)
+    assert len(files0) == 2
+    lake.delete_where(spark, t, "k in (0, 1)", deletion_vectors=True)
+    snap = lake.snapshot(t)
+    assert set(snap.files) == set(files0)
+    assert all(a.get("dv") for a in snap.files.values())
+    # rewrite-mode delete: the eu file (with its vector) rewrites clean
+    lake.delete_where(spark, t, "k = 2")
+    snap = lake.snapshot(t)
+    region = {p: a["partition"]["region"] for p, a in snap.files.items()}
+    (eu,) = [p for p, r in region.items() if r == "eu"]
+    assert eu not in files0 and not snap.files[eu].get("dv")
+    # rewrite-mode update: the us file, still carrying its vector, rewrites
+    lake.update_where(spark, t, "k = 3", {"v": "v + 100"})
+    snap = lake.snapshot(t)
+    assert not set(snap.files) & set(files0)
+    assert not any(a.get("dv") for a in snap.files.values())
+    m = {r.k: r.v for r in lake.read_snapshot(spark, t).collect()}
+    assert set(m) == set(range(3, 40))
+    assert m[3] == 103.0 and m[4] == 4.0 and m[5] == 5.0
+
+
 def test_update_where_rewrite_and_dv(spark, tmp_path):
     """UPDATE ... SET ... WHERE in both modes: rewrite touches only the
     files containing matches; DV mode never rewrites (vector + one new

@@ -1,0 +1,50 @@
+"""Local-mode session sizing: shuffle partitions follow the master's core
+count and the driver heap follows physical memory, unless the caller sets
+them. The shared test session pins 8 partitions, so the end-to-end check
+runs in a fresh interpreter."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+from zio_analytics_spark.session import local_driver_memory
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_driver_memory_is_half_of_physical_capped():
+    gib = 1 << 30
+    assert local_driver_memory(16 * gib) == "8192m"
+    assert local_driver_memory(15 * gib + 700 * (1 << 20)) == "8030m"
+    assert local_driver_memory(256 * gib) == "24576m"  # the old fixed 24g
+    assert local_driver_memory(gib) == "1024m"  # floor
+
+
+def test_fresh_local_session_sizes_to_its_cores():
+    code = (
+        "import json, sys; sys.path.insert(0, %r)\n"
+        "from zio_analytics_spark.session import get_spark\n"
+        "spark = get_spark('sizing')\n"
+        "sc = spark.sparkContext\n"
+        "rec = {'dp': sc.defaultParallelism,\n"
+        "       'parts': spark.conf.get('spark.sql.shuffle.partitions'),\n"
+        "       'mem': sc.getConf().get('spark.driver.memory')}\n"
+        "spark = get_spark('sizing', extra_conf={'spark.sql.shuffle.partitions': '5'})\n"
+        "rec['explicit'] = spark.conf.get('spark.sql.shuffle.partitions')\n"
+        "spark.stop()\n"
+        "print(json.dumps(rec))\n" % REPO
+    )
+    env = dict(os.environ, SPARK_GRAFT_CPUS="3", SPARK_LOCAL_MODE="1")
+    env.pop("SPARK_DRIVER_MEMORY", None)
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    rec = json.loads(out.stdout.strip().splitlines()[-1])
+    assert rec == {
+        "dp": 3, "parts": "3", "mem": local_driver_memory(), "explicit": "5"
+    }

@@ -5093,12 +5093,13 @@ def _run_complete(out: DataFrame, prefix: str, partitions: int = 8) -> DataFrame
     """Drive a bounded aggregated stream to completion (complete mode →
     batch-equivalent results) and return the materialized memory table.
 
-    State-partition sizing (round-7): each micro-batch loads + commits one
-    state-store instance per shuffle partition, so a tiny local stream at
-    32 partitions pays 32× state lifecycle per batch for nothing — the
-    helper runs the query at ``partitions`` (the streaming plan captures
-    the value at query START) and restores the session conf after. A
-    cluster makes the same sizing decision upward."""
+    State-partition sizing: each micro-batch loads + commits one
+    state-store instance per shuffle partition (stateful streams run with
+    AQE off, so nothing coalesces them). The session default is the core
+    count; these bounded catalog streams pin ``partitions`` instead so
+    their state layout does not vary with the host (the streaming plan
+    captures the value at query START) and restore the session conf
+    after."""
     import uuid
 
     spark = out.sparkSession
@@ -5144,27 +5145,6 @@ def q_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
     )
     return _run_complete(out, "stream_slide")
-
-
-def _run_append(out: DataFrame, prefix: str, partitions: int = 8) -> DataFrame:
-    """Drive a bounded stateful stream to completion in APPEND mode (the
-    only mode applyInPandasWithState emits in) and return the memory table.
-    State-partition sizing as in :func:`_run_complete`."""
-    import uuid
-
-    spark = out.sparkSession
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
-        q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 @register(

@@ -1,12 +1,18 @@
 """SparkSession bootstrap tuned for this engine.
 
-Local-mode defaults match the test container (local[32], single JVM), but every
-setting here is chosen to also be the right default on a real cluster:
+Local mode (``local[$SPARK_GRAFT_CPUS]``, single JVM) sizes itself to the
+host; the other settings are also the right defaults on a real cluster:
 
 - AQE on (runtime re-plan: partition coalescing, skew-join splitting, join
   strategy demotion) — the primary scale lever at 100 TB.
-- ``spark.sql.shuffle.partitions`` is a *starting* value; AQE coalesces it at
-  runtime, so a moderate local value doesn't bake in a cluster bottleneck.
+- ``spark.sql.shuffle.partitions``: for batch queries a *starting* value
+  that AQE coalesces at runtime. Stateful streams run with AQE off, so for
+  them it is the fixed number of state stores every micro-batch loads and
+  commits, recorded in the checkpoint at the query's first start. A cluster
+  keeps 32 as AQE's starting value; local mode uses the master's core count
+  (``sc.defaultParallelism``): one state store per core per trigger.
+- Local-mode driver heap: half the host's physical memory (MemTotal),
+  at most 24g; ``$SPARK_DRIVER_MEMORY`` overrides it.
 - UTC session timezone so results are comparable with the (UTC-naive) DuckDB
   oracle and deterministic across deployments.
 - Arrow enabled so the Pandas-UDF escape hatches are vectorized.
@@ -21,6 +27,7 @@ from pyspark.sql import SparkSession
 __all__ = ["get_spark", "DEFAULT_CONFIG"]
 
 DEFAULT_CONFIG: dict[str, str] = {
+    # AQE's starting value on a cluster; local mode resizes it (see module doc)
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -46,7 +53,9 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``) when
     no cluster master is configured; on a real deployment the submitter's
-    ``--master`` wins because an existing session is reused.
+    ``--master`` wins because an existing session is reused. In local mode
+    the shuffle partitions follow the master's core count unless
+    ``extra_conf`` sets them.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -54,12 +63,28 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in DEFAULT_CONFIG.items():
         builder = builder.config(k, v)
-    if os.environ.get("SPARK_LOCAL_MODE", "1") != "0":
+    extra_conf = extra_conf or {}
+    local = os.environ.get("SPARK_LOCAL_MODE", "1") != "0"
+    if local:
         # Single-JVM local mode: the driver is the only executor.
-        builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-    for k, v in (extra_conf or {}).items():
+        builder = builder.config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or local_driver_memory(),
+        )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if local:
+        # Stateful streams run with AQE off, so nothing coalesces a fixed
+        # 32: every micro-batch would load and commit 32 state stores and
+        # stage up to 32 sink files on a 4-core host.
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            extra_conf.get(
+                "spark.sql.shuffle.partitions",
+                str(spark.sparkContext.defaultParallelism),
+            ),
+        )
     spark.sparkContext.setLogLevel("WARN")
     _hook_scratch_cleanup(spark)
     # Crash-robust scratch hygiene: atexit cleanup cannot run when a prior
@@ -69,6 +94,14 @@ def get_spark(
 
     tmpdirs.sweep_stale()
     return spark
+
+
+def local_driver_memory(total_bytes: int | None = None) -> str:
+    """Local-mode driver heap: half of physical memory (MemTotal), capped
+    at 24g and floored at 1g, in MiB."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(max(total_bytes // 2, 1 << 30), 24 << 30) >> 20}m"
 
 
 def _hook_scratch_cleanup(spark: SparkSession) -> None:

@@ -1941,6 +1941,22 @@ def merge(
     raise ConcurrentCommitError(snapshot(table).version + 1)
 
 
+def _hit_files(
+    spark: SparkSession, table: str, snap: LakeSnapshot, predicate: str
+) -> list[str]:
+    """Rel paths of the live files holding at least one row where
+    ``predicate`` is TRUE (one filtered scan). The file identity is the
+    read's ``__dv_base``, taken from ``_metadata.file_path`` BEFORE any
+    deletion-vector anti-join: ``input_file_name()`` above that join is
+    rejected by Spark (MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION)."""
+    by_name = {os.path.basename(p): p for p in snap.files}
+    live = _read_files(spark, table, snap, with_pos=True)
+    return [
+        by_name[r["__dv_base"]]
+        for r in live.where(predicate).select("__dv_base").distinct().collect()
+    ]
+
+
 def delete_where(
     spark: SparkSession,
     table: str,
@@ -1976,14 +1992,7 @@ def delete_where(
             extra_info={"mode": "dv"},
         )
     snap = snapshot(table)
-    live = _read_files(spark, table, snap).withColumn(
-        "__file", F.input_file_name()
-    )
-    by_name = {os.path.basename(p): p for p in snap.files}
-    hit_files = [
-        by_name[r["__file"].split("/")[-1]]
-        for r in live.where(predicate).select("__file").distinct().collect()
-    ]
+    hit_files = _hit_files(spark, table, snap, predicate)
     if not hit_files:
         return snap.version  # no-op: nothing matched
     # SQL DELETE semantics: a row whose predicate evaluates to NULL is
@@ -2078,14 +2087,7 @@ def update_where(
             "UPDATE",
             extra_info={"mode": "dv"},
         )
-    live = _read_files(spark, table, snap).withColumn(
-        "__file", F.input_file_name()
-    )
-    by_name = {os.path.basename(p): p for p in snap.files}
-    hit_files = [
-        by_name[r["__file"].split("/")[-1]]
-        for r in live.where(predicate).select("__file").distinct().collect()
-    ]
+    hit_files = _hit_files(spark, table, snap, predicate)
     if not hit_files:
         return snap.version  # no-op: nothing matched
     rewritten = mutate(
