@@ -1,7 +1,8 @@
 """Local-mode session sizing: shuffle partitions follow the master's core
 count and the driver heap follows physical memory, unless the caller sets
-them. The shared test session pins 8 partitions, so the end-to-end check
-runs in a fresh interpreter."""
+them; the generated-code cache holds a repeated multi-entry pass. The shared
+test session pins 8 partitions, so the end-to-end check runs in a fresh
+interpreter."""
 
 from __future__ import annotations
 
@@ -10,7 +11,9 @@ import os
 import subprocess
 import sys
 
-from zio_analytics_spark.session import local_driver_memory
+from pyspark.sql import functions as F
+
+from zio_analytics_spark.session import codegen_stats, local_driver_memory
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -31,7 +34,8 @@ def test_fresh_local_session_sizes_to_its_cores():
         "sc = spark.sparkContext\n"
         "rec = {'dp': sc.defaultParallelism,\n"
         "       'parts': spark.conf.get('spark.sql.shuffle.partitions'),\n"
-        "       'mem': sc.getConf().get('spark.driver.memory')}\n"
+        "       'mem': sc.getConf().get('spark.driver.memory'),\n"
+        "       'codegen_cap': sc.getConf().get('spark.sql.codegen.cache.maxEntries')}\n"
         "spark = get_spark('sizing', extra_conf={'spark.sql.shuffle.partitions': '5'})\n"
         "rec['explicit'] = spark.conf.get('spark.sql.shuffle.partitions')\n"
         "spark.stop()\n"
@@ -46,5 +50,22 @@ def test_fresh_local_session_sizes_to_its_cores():
     assert out.returncode == 0, out.stderr[-2000:]
     rec = json.loads(out.stdout.strip().splitlines()[-1])
     assert rec == {
-        "dp": 3, "parts": "3", "mem": local_driver_memory(), "explicit": "5"
+        "dp": 3, "parts": "3", "mem": local_driver_memory(), "explicit": "5",
+        "codegen_cap": "4096",
     }
+
+
+def test_repeated_plans_reuse_generated_code(spark):
+    """150 distinct plans (integer literals are inlined into the generated
+    source, so each is its own class) run twice: the second round must hit
+    Spark's generated-code cache. Under Spark's default 100-entry cache the
+    first round's classes are evicted and every plan recompiles."""
+
+    def one_round():
+        for i in range(150):
+            spark.range(1).select(F.col("id") + i).collect()
+
+    one_round()
+    before = codegen_stats(spark)["codegen_compiles"]
+    one_round()
+    assert codegen_stats(spark)["codegen_compiles"] - before == 0

@@ -11,6 +11,15 @@ host; the other settings are also the right defaults on a real cluster:
   commits, recorded in the checkpoint at the query's first start. A cluster
   keeps 32 as AQE's starting value; local mode uses the master's core count
   (``sc.defaultParallelism``): one state store per core per trigger.
+- Generated-code cache: Spark compiles each whole-stage-codegen class with
+  Janino and caches it by source text, but the cache is a static conf whose
+  default (100 entries) is below one pass of the 17 headline catalog entries
+  (199-215 distinct classes), so repeating that pass recompiled 160-170 of
+  them every time. 4096 holds the whole catalog: an oracle sweep of all 347
+  entries at sf0.001 compiles 3,298 classes (4,699 compiles under the
+  default), retained for about 24 MB of metaspace and 16 MB of code heap.
+  Static: a reused session keeps the cap it started with.
+  :func:`codegen_stats` reads the compile counters.
 - Local-mode driver heap: half the host's physical memory (MemTotal),
   at most 24g; ``$SPARK_DRIVER_MEMORY`` overrides it.
 - UTC session timezone so results are comparable with the (UTC-naive) DuckDB
@@ -24,7 +33,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_CONFIG"]
+__all__ = ["get_spark", "DEFAULT_CONFIG", "codegen_stats"]
 
 DEFAULT_CONFIG: dict[str, str] = {
     # AQE's starting value on a cluster; local mode resizes it (see module doc)
@@ -41,6 +50,8 @@ DEFAULT_CONFIG: dict[str, str] = {
     # Streaming state at scale would use RocksDB; harmless default locally.
     "spark.sql.shuffle.spill.compress": "true",
     "spark.ui.enabled": "false",
+    # Static: above the catalog's working set of generated classes (module doc)
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 
@@ -102,6 +113,19 @@ def local_driver_memory(total_bytes: int | None = None) -> str:
     if total_bytes is None:
         total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{min(max(total_bytes // 2, 1 << 30), 24 << 30) >> 20}m"
+
+
+def codegen_stats(spark: SparkSession) -> dict[str, float]:
+    """JVM-wide codegen counters since the driver started: Janino compiles
+    (generated-code cache misses) and the seconds they took. Subtract two
+    readings to attribute compiles to a region."""
+    jvm = spark.sparkContext._jvm
+    return {
+        "codegen_compiles": jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount(),
+        "codegen_compile_s": jvm.org.apache.spark.sql.catalyst.expressions
+        .codegen.CodeGenerator.compileTime() / 1e9,
+    }
 
 
 def _hook_scratch_cleanup(spark: SparkSession) -> None:

@@ -4,6 +4,13 @@ Thin passthrough over ``spark.read.parquet`` — Catalyst gives us column
 pruning, predicate pushdown, and partition pruning for free, which is the
 whole point of expressing scans declaratively (SURVEY.md §4.1).
 
+What runs when a driver table is read: :func:`read_table` opens the one
+parquet file's footer on the driver (:func:`footer_schema`, Spark's own
+footer-to-schema converter) and hands the schema to the reader, so building
+the DataFrame launches no Spark job; ``spark.read.parquet`` without a schema
+would launch a schema-inference job per read. A directory path still goes
+through inference (it may hold several files or partition columns).
+
 At 100 TB the scan IS the query plan's foundation: never cache a fact table,
 never infer schema per-file, and let ``spark.sql.files.maxPartitionBytes``
 (default 128 MB) drive split sizing so a 1000-executor cluster gets even work.
@@ -11,12 +18,14 @@ never infer schema per-file, and let ``spark.sql.files.maxPartitionBytes``
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-__all__ = ["TABLES", "read_parquet", "read_table", "load_tables"]
+__all__ = ["TABLES", "footer_schema", "read_parquet", "read_table", "load_tables"]
 
 # The driver's star schema + stream/LLM tables (TESTDATA.md).
 TABLES = (
@@ -87,10 +96,36 @@ def normalize_event_ts(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
     return df
 
 
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of a parquet file from its footer, read on the driver with
+    Spark's own converter (``ParquetFileFormat.readSchema``), so nanosAsLong
+    and TIMESTAMP_NTZ follow the session conf exactly as inference would.
+    Launches no job. Anything but a plain file (a directory, a missing
+    path) goes through ``spark.read.parquet``'s inference and its errors."""
+    jvm = spark.sparkContext._jvm
+    jss = spark._jsparkSession
+    hconf = jss.sessionState().newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(hconf)
+    if not fs.isFile(hpath):
+        return spark.read.parquet(path).schema
+    pkg = jvm.org.apache.spark.sql.execution.datasources.parquet
+    fmt = getattr(getattr(pkg, "ParquetFileFormat$"), "MODULE$")
+    statuses = jvm.scala.jdk.javaapi.CollectionConverters.asScala(
+        jvm.java.util.List.of(fs.getFileStatus(hpath))
+    ).toSeq()
+    footers = fmt.readParquetFootersInParallel(hconf, statuses, False)
+    return StructType.fromJson(json.loads(fmt.readSchema(footers, jss).get().json()))
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver table, e.g. ``read_table(spark, '/root/testdata/sf0.01', 'lineitem')``."""
+    """Load one driver table, e.g. ``read_table(spark, 'testdata/sf0.01', 'lineitem')``.
+
+    The schema comes from the file's footer (:func:`footer_schema`), so the
+    read itself launches no Spark job."""
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(footer_schema(spark, path)).parquet(path)
     return normalize_event_ts(df, _EVENT_TS_COLS.get(name, ()))
 
 

@@ -43,19 +43,21 @@ def stream_parquet(spark: SparkSession, path: str, schema: StructType | str) -> 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Bounded file-stream over a driver table, normalized like
-    ``read_table``: the declared schema comes from the parquet footer (one
-    metadata-only batch open), so the stream works with either event-time
-    storage the driver has generated (long nanos or µs TIMESTAMP_NTZ), and
-    the same ts normalization as the batch reader is applied on top."""
+    ``read_table``: the declared schema is read from the parquet footer on
+    the driver (``footer_schema``, no Spark job), so the stream works with
+    either event-time storage the driver has generated (long nanos or µs
+    TIMESTAMP_NTZ), and the same ts normalization as the batch reader is
+    applied on top."""
     from zio_analytics_spark.sources.parquet import (
         _EVENT_TS_COLS,
         ensure_session_confs,
+        footer_schema,
         normalize_event_ts,
     )
 
     ensure_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = spark.read.parquet(path).schema
     return normalize_event_ts(
-        stream_parquet(spark, path, schema), _EVENT_TS_COLS.get(name, ())
+        stream_parquet(spark, path, footer_schema(spark, path)),
+        _EVENT_TS_COLS.get(name, ()),
     )
