@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from zio_analytics_spark import DataStream, get_spark, tumbling
 from zio_analytics_spark.sources.parquet import read_table
-from zio_analytics_spark.streaming.windowed import run_windowed_stream, windowed_counts
+from zio_analytics_spark.streaming import to_memory, windowed_counts
 
 
 def batch(spark, sf_dir: str):
@@ -41,7 +41,7 @@ def streaming(spark, sf_dir: str):
 
     ev = stream_table(spark, sf_dir, "events")
     agg = windowed_counts(ev, tumbling("1 hour"), "ts", ["event_type"], watermark_delay="10 minutes")
-    out = run_windowed_stream(agg, "wc_stream")
+    out = to_memory(agg, "append", "wc_stream")
     print("— streaming (events, tumbling 1h, append mode) —")
     out.orderBy("window_start", "event_type").show(5, truncate=False)
 

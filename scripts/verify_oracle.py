@@ -8,6 +8,10 @@ Usage: python scripts/verify_oracle.py [sf_dir] [query ...]
 
 ``--sample`` draws N catalog entries with a seeded RNG (default seed 7 —
 the judge's round-7 convention) so an audit subset is reproducible.
+
+Every entry must also leave the session conf as it found it: a key that
+the entry adds, removes or changes (``spark.conf.getAll`` before the entry
+vs after its rows are collected) fails the entry.
 """
 
 from __future__ import annotations
@@ -48,6 +52,16 @@ def norm_rows(rows, cols):
     return sorted(normed, key=lambda row: tuple((x is None, str(x)) for x in row))
 
 
+def conf_diff(before: dict[str, str], after: dict[str, str]) -> list[str]:
+    """Keys added, removed or changed between two ``spark.conf.getAll``
+    snapshots, each as ``key: old -> new`` (``None`` = unset)."""
+    return [
+        f"{k}: {before.get(k)} -> {after.get(k)}"
+        for k in sorted(before.keys() | after.keys())
+        if before.get(k) != after.get(k)
+    ]
+
+
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = args.pop(0) if args and not args[0].startswith("--") else "/root/testdata/sf0.01"
@@ -83,6 +97,7 @@ def main() -> int:
         if only and name not in only:
             continue
         attempted += 1
+        conf_before = spark.conf.getAll
         try:
             sdf = spec.fn(spark, sf_dir)
             s_cols = sdf.columns
@@ -90,6 +105,11 @@ def main() -> int:
         except Exception:
             failures.append(name)
             print(f"FAIL  {name}: spark error\n{traceback.format_exc()}")
+            continue
+        leaked = conf_diff(conf_before, spark.conf.getAll)
+        if leaked:
+            failures.append(name)
+            print(f"FAIL  {name}: session conf leak: {'; '.join(leaked)}")
             continue
         if spec.oracle is None:
             print(f"ok?   {name}: rows-only ({len(s_rows)} rows, no oracle)")

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from zio_analytics_spark.sources.streaming import stream_parquet
 from zio_analytics_spark.tmpdirs import scratch_dir
 from zio_analytics_spark.streaming.stateful import running_sum_stream
-from zio_analytics_spark.streaming.windowed import run_windowed_stream, windowed_counts
+from zio_analytics_spark.streaming import drive, to_memory, windowed_counts
 from zio_analytics_spark.windows import tumbling
 
 SCHEMA = "ts timestamp, word string"
@@ -65,7 +65,7 @@ def test_streaming_windowed_counts_and_late_drop(spark):
     )
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src_dir)
     agg = windowed_counts(stream, tumbling("10 seconds"), "ts", ["word"], watermark_delay="5 seconds")
-    out = run_windowed_stream(agg, "stream_wc")
+    out = to_memory(agg, "append", "stream_wc")
     got = {(r.window_start.second, r.word): r.n for r in out.collect()}
     # [0,10) emitted once with the on-time count; the late (2,'a') must not
     # re-emit or bump it. [50,60) never emits (watermark never passes 60).
@@ -74,6 +74,44 @@ def test_streaming_windowed_counts_and_late_drop(spark):
     assert got[(30, "c")] == 1
     assert (50, "d") not in got
     assert sum(1 for (s, w) in got if w == "a") == 1
+
+
+@pytest.mark.parametrize("mode", ["append", "complete", "update"])
+def test_to_memory_equals_batch(spark, mode):
+    """``to_memory`` drives a two-trigger bounded file stream to completion in
+    each output mode; the memory table equals the same plan run as a batch,
+    and the session conf is untouched. Keys are disjoint across the two
+    files, so update mode emits every key exactly once."""
+    src_dir = _write_batches(spark, [[(1, "a"), (5, "a"), (6, "b")], [(12, "c")]])
+    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src_dir)
+    batch = spark.read.schema(SCHEMA).parquet(src_dir)
+
+    def plan(df):
+        if mode == "append":
+            return df.select("word", F.second("ts").alias("s"))
+        return df.groupBy("word").agg(F.count("*").alias("n"))
+
+    before = spark.conf.getAll
+    out = to_memory(plan(stream), mode, f"to_memory_{mode}")
+    assert spark.conf.getAll == before
+    assert sorted(out.collect()) == sorted(plan(batch).collect())
+
+
+def test_drive_propagates_batch_error_and_stops(spark):
+    """A failing foreachBatch function surfaces from ``drive`` and leaves no
+    query running."""
+    src_dir = _write_batches(spark, [[(1, "a")]])
+    stream = spark.readStream.schema(SCHEMA).parquet(src_dir)
+
+    def fail(batch_df, batch_id):
+        raise ValueError("batch function failed")
+
+    writer = stream.writeStream.foreachBatch(fail).option(
+        "checkpointLocation", scratch_dir(prefix="drive_err_")
+    )
+    with pytest.raises(Exception, match="batch function failed"):
+        drive(writer)
+    assert spark.streams.active == []
 
 
 def test_streaming_running_sum_stateful(spark):
@@ -153,7 +191,7 @@ def test_streaming_sliding_windows(spark):
     )
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src_dir)
     agg = windowed_counts(stream, sliding("20 seconds", "10 seconds"), "ts", ["word"], watermark_delay="5 seconds")
-    out = run_windowed_stream(agg, "stream_sliding")
+    out = to_memory(agg, "append", "stream_sliding")
     got = sorted((r.window_start.second, r.word) for r in out.collect() if r.word == "a")
     assert got == [(0, "a"), (10, "a")]
 
@@ -172,7 +210,7 @@ def test_streaming_session_windows(spark):
     )
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src_dir)
     agg = windowed_counts(stream, session("10 seconds"), "ts", ["word"], watermark_delay="5 seconds")
-    out = run_windowed_stream(agg, "stream_session")
+    out = to_memory(agg, "append", "stream_session")
     got = sorted((r.window_start.second, r.n) for r in out.collect() if r.word == "u")
     assert got == [(1, 2), (30, 1)]
 
@@ -265,7 +303,8 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
 
 def test_run_kill_restart_mid_stream(spark, tmp_path):
     """The kill-mid-stream driver helper: stops after >=2 non-empty batches,
-    restarts from the checkpoint, drains; result equals batch."""
+    restarts from the checkpoint, drains; result equals batch, and the
+    RocksDB provider it switches to does not outlive the call."""
     from pyspark.sql import functions as F
 
     from zio_analytics_spark.streaming import recovery
@@ -274,6 +313,7 @@ def test_run_kill_restart_mid_stream(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     df = spark.createDataFrame([(i, f"k{i % 5}") for i in range(200)], "v long, k string")
     recovery.split_into_files(df, src, n_files=6)
+    before = spark.conf.getAll
     out = recovery.run_kill_restart(
         spark,
         src,
@@ -282,6 +322,7 @@ def test_run_kill_restart_mid_stream(spark, tmp_path):
         ckpt,
         stop_after_batches=2,
     )
+    assert spark.conf.getAll == before
     got = {r.k: (r.s, r.n) for r in out.collect()}
     want = {
         r.k: (r.s, r.n)

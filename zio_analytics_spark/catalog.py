@@ -30,6 +30,7 @@ from zio_analytics_spark.operators import dedup, similarity, text
 from zio_analytics_spark.operators.asof import asof_join
 from zio_analytics_spark.operators.topk import top_k, top_k_per_group
 from zio_analytics_spark.sources.parquet import read_table
+from zio_analytics_spark.streaming.drive import drive, to_memory
 from zio_analytics_spark.windows import session, sliding, tumbling
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -4576,7 +4577,7 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "total",
     )
-    return _run_complete(out, "stream_wc")
+    return to_memory(out, "complete", "stream_wc")
 
 
 # =====================================================================
@@ -5089,34 +5090,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_table(spark, sf_dir, "events")
 
 
-def _run_complete(out: DataFrame, prefix: str, partitions: int = 8) -> DataFrame:
-    """Drive a bounded aggregated stream to completion (complete mode →
-    batch-equivalent results) and return the materialized memory table.
-
-    State-partition sizing: each micro-batch loads + commits one
-    state-store instance per shuffle partition (stateful streams run with
-    AQE off, so nothing coalesces them). The session default is the core
-    count; these bounded catalog streams pin ``partitions`` instead so
-    their state layout does not vary with the host (the streaming plan
-    captures the value at query START) and restore the session conf
-    after."""
-    import uuid
-
-    spark = out.sparkSession
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
-        q = out.writeStream.outputMode("complete").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.sql(f"SELECT * FROM {name}")
-
-
 @register(
     "streaming_sliding_counts",
     oracle="""
@@ -5144,7 +5117,7 @@ def q_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n",
     )
-    return _run_complete(out, "stream_slide")
+    return to_memory(out, "complete", "stream_slide")
 
 
 @register(
@@ -5198,7 +5171,7 @@ def q_streaming_fold_window_group_sliding(spark: SparkSession, sf_dir: str) -> D
         top2_fold,
         "window_start timestamp, window_end timestamp, event_type string, n long, top2_sum double",
     )
-    return _run_append(out, "stream_gfold_slide")
+    return to_memory(out, "append", "stream_gfold_slide")
 
 
 _SESSION_FOLD_ORACLE = CATALOG["fold_window_custom_session"].oracle
@@ -5237,7 +5210,7 @@ def q_streaming_fold_window_group_session(spark: SparkSession, sf_dir: str) -> D
         range_fold,
         "window_start timestamp, window_end timestamp, event_type string, value_range double",
     )
-    return _run_append(out, "stream_gfold_sess")
+    return to_memory(out, "append", "stream_gfold_sess")
 
 
 @register(
@@ -5273,7 +5246,7 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_orders").alias("n_orders"),
         F.max("lifetime_value").alias("lifetime_value"),
     )
-    return _run_complete(agg, "stream_enrich")
+    return to_memory(agg, "complete", "stream_enrich")
 
 
 @register(
@@ -5833,7 +5806,7 @@ def q_source_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataF
     agg = st.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n"), F.sum("doc_id").alias("id_sum")
     )
-    return _run_complete(agg, "stream_pyds")
+    return to_memory(agg, "complete", "stream_pyds")
 
 
 @register(
@@ -5913,15 +5886,7 @@ def q_streaming_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFra
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        st.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drive(st.writeStream.foreachBatch(merge_batch).option("checkpointLocation", ckpt))
     final = spark.read.schema(schema).parquet(target)
     return final.select("user_id", "n", F.round("total", 2).alias("total"))
 
@@ -5962,17 +5927,11 @@ def q_streaming_lake_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
+    drive(
         st.writeStream.foreachBatch(
             lambda df, bid: lake.append_stream_batch(df.coalesce(2), table, bid)
-        )
-        .option("checkpointLocation", ckpt)
-        .start()
+        ).option("checkpointLocation", ckpt)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
         lake.read_snapshot(spark, table)
         .groupBy("event_type")
@@ -6040,7 +5999,7 @@ def q_streaming_lake_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake.append(base.where(F.col("o_orderkey") % 3 == 1), table)  # v1
 
     def drain():
-        q = (
+        drive(
             spark.readStream.format("lake_cdf")
             .option("path", table)
             .load()
@@ -6048,10 +6007,7 @@ def q_streaming_lake_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda df, bid: df.write.mode("append").parquet(sink)
             )
             .option("checkpointLocation", ckpt)
-            .start()
         )
-        q.processAllAvailable()
-        q.stop()
 
     drain()  # consumes (0, 1]: the appended slice only
     # every multiple of 9 is %3==0, so ONLY the create file is rewritten
@@ -6139,7 +6095,7 @@ def q_streaming_lake_cdf_net(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake.merge(spark, table, changes)  # v1: updates %9==0, inserts %3==1
 
     def drain():
-        q = (
+        drive(
             spark.readStream.format("lake_cdf")
             .option("path", table)
             .option("net", "true")
@@ -6148,10 +6104,7 @@ def q_streaming_lake_cdf_net(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda df, bid: df.write.mode("append").parquet(sink)
             )
             .option("checkpointLocation", ckpt)
-            .start()
         )
-        q.processAllAvailable()
-        q.stop()
 
     drain()  # consumes (0, 1]: the merge's net changes only
     lake.delete_where(spark, table, "o_orderkey % 6 = 3")  # v2
@@ -6226,30 +6179,6 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_k(agg, [F.col("n_sessions").desc(), F.col("path")], 10)
 
 
-def _run_append(out: DataFrame, prefix: str, partitions: int = 8) -> DataFrame:
-    """Drive a bounded non-aggregated stream (stateful map / join) to
-    completion in append mode and return the materialized memory table.
-    The bounded file source delivers everything in one trigger, so append
-    output over a single batch is deterministic. State-partition sizing as
-    in the aggregated helper: one state-store instance per shuffle
-    partition per micro-batch — size to volume, restore after."""
-    import uuid
-
-    spark = out.sparkSession
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
-        q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.sql(f"SELECT * FROM {name}")
-
-
 @register(
     "streaming_stateful_running_sum",
     oracle="""
@@ -6288,7 +6217,7 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_schema="user_id long, event_id long, running_sum double",
         state_schema="acc double",
     )
-    result = _run_append(out, "stream_state")
+    result = to_memory(out, "append", "stream_state")
     return result.select(
         "user_id", "event_id", F.round("running_sum", 2).alias("running_sum")
     )
@@ -6351,7 +6280,7 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_schema="user_id long, event_id long, ewma double",
         state_schema="acc double",
     )
-    return _run_append(out, "stream_ewma")
+    return to_memory(out, "append", "stream_ewma")
 
 
 @register(
@@ -6397,11 +6326,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         upper="0 SECONDS",
     )
     out = joined.select("purchase_id", "click_id", "user_id")
-    # 4 state partitions at this volume — see streaming_interval_join_outer
-    # (per-partition state-store commits dominate; round-7 interleaved
-    # re-measure: 8 ≈ 4.1 s, 4 ≈ 3.6 s, 2 ≈ 3.5 s — 4 keeps join
-    # parallelism headroom for the ~1 s further win)
-    return _run_append(out, "stream_ijoin", partitions=4)
+    return to_memory(out, "append", "stream_ijoin")
 
 
 @register(
@@ -6596,7 +6521,7 @@ def q_streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("session_window.end")).alias("window_end"),
         "n",
     )
-    return _run_complete(out, "stream_sess")
+    return to_memory(out, "complete", "stream_sess")
 
 
 @register(
@@ -6628,27 +6553,17 @@ def q_streaming_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFra
     # complete-mode memory table would be empty — the round-3 advisory).
     hold_pred = F.pmod(F.xxhash64("user_id", "value"), F.lit(4)) == 0
     recovery.split_into_files(ev.where(~hold_pred), src, n_files=3)
-    # State-partition sizing (round-7, same rationale as the interval-join
-    # entries): every micro-batch loads + commits one RocksDB instance per
-    # shuffle partition; at this volume 32 partitions is pure state-store
-    # lifecycle overhead across ~5 batches × 2 runs. The checkpoint pins
-    # the partitioning at first start, so both runs see the same value.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return recovery.run_kill_restart(
-            spark,
-            src,
-            "user_id long, value double",
-            lambda st: st.groupBy("user_id").agg(
-                F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total")
-            ),
-            ckpt,
-            stop_after_batches=2,
-            holdback=ev.where(hold_pred),
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    return recovery.run_kill_restart(
+        spark,
+        src,
+        "user_id long, value double",
+        lambda st: st.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total")
+        ),
+        ckpt,
+        stop_after_batches=2,
+        holdback=ev.where(hold_pred),
+    )
 
 
 # =====================================================================
@@ -7111,7 +7026,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = streaming_exact_dedup(keyed, text_col="content").select(
         "event_type", "user_bucket"
     )
-    return _run_append(dd, "stream_dedup")
+    return to_memory(dd, "append", "stream_dedup")
 
 
 @register(
@@ -7919,9 +7834,11 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrame-native k-means (operators/clustering.py): Lloyd's
     algorithm, 3 fixed iterations, k=10 over the 64-dim embeddings — the
-    MLlib-shaped distributed iteration with bounded k·d driver state,
-    inlined-literal distance expressions (codegen, no UDF), and one
-    k×d-cell aggregate per round. Every determinism lever is pinned so
+    MLlib-shaped distributed iteration with bounded k·d driver state, a
+    nearest-centroid assignment per round (k·d = 640 literals is above
+    pq's 384-literal codegen ceiling, so ``engine="auto"`` runs the Arrow
+    engine: mapInPandas + numpy argmin), and one k×d-cell aggregate per
+    round. Every determinism lever is pinned so
     the DuckDB oracle replays ALL three iterations and every final
     assignment exactly: data-derived init (k smallest ids), ties to the
     lowest cluster index, centroids rounded 6 dp per update (summation-
@@ -9839,7 +9756,7 @@ def q_streaming_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("w.end").alias("window_end"),
         "n",
     )
-    return _run_complete(out, "stream_dyn_sess")
+    return to_memory(out, "complete", "stream_dyn_sess")
 
 
 @register(
@@ -9942,15 +9859,7 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
     # key), so the sentinel rows are filtered BEFORE the watermark
     # operator ever sees their event times — and advance nothing
     # (observed: offsets moved, numInputRows 0, watermark stuck).
-    #
-    # State-partition sizing: every micro-batch commits one state-store
-    # instance per shuffle partition per join side — at this data volume
-    # 32 partitions is pure commit overhead (measured ~2 s/run), so the
-    # query runs at 4 (round-7 interleaved re-measure: 8 ≈ 4.1 s,
-    # 4 ≈ 3.6 s, 2 ≈ 3.5 s — 4 keeps parallelism headroom). Sizing state
-    # partitions to volume is the same decision a cluster deployment
-    # makes (upward, there).
-    res = _run_append(out, "stream_ojoin", partitions=4)
+    res = to_memory(out, "append", "stream_ojoin")
     return res.where(F.col("user_id") >= 0)
 
 
@@ -10110,24 +10019,11 @@ def q_streaming_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     content equals the batch aggregate — which is what makes the entry
     oracle-checkable; multi-batch update semantics (same key emitted per
     revision) are exercised in tests/test_streaming.py."""
-    import uuid
-
     st = _events_stream(spark, sf_dir)
     agg = st.groupBy(F.pmod(F.col("user_id"), F.lit(50)).alias("user_bucket")).agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total")
     )
-    name = f"upd_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
+    return to_memory(agg, "update", "upd")
 
 
 @register(
@@ -10567,7 +10463,7 @@ def q_streaming_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5("text").alias("text_md5"),
         F.length("text").cast("long").alias("n_chars"),
     )
-    return _run_append(out, "stream_html_extract")
+    return to_memory(out, "append", "stream_html_extract")
 
 
 _HTML_SYNTH_V3_SQL = (
@@ -11931,7 +11827,7 @@ def q_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_schema="user_id long, event_id long, cusum_hi double, cusum_lo double",
         state_schema="s array<double>",
     )
-    result = _run_append(out, "stream_cusum")
+    result = to_memory(out, "append", "stream_cusum")
     hi6 = F.round("cusum_hi", 6)
     lo6 = F.round("cusum_lo", 6)
     return result.select(
@@ -13702,7 +13598,7 @@ def q_streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_schema="user_id long, event_id long, level double, trend double",
         state_schema="lvl double, trd double, seen int",
     )
-    return _run_append(out, "stream_holt")
+    return to_memory(out, "append", "stream_holt")
 
 
 def _holt_winters_stream_oracle(m: int = 4) -> str:
@@ -13775,7 +13671,7 @@ def q_streaming_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s1 double, s2 double, s3 double, s4 double"
         ),
     )
-    return _run_append(out, "stream_holt_winters")
+    return to_memory(out, "append", "stream_holt_winters")
 
 
 @register(
@@ -14111,15 +14007,7 @@ def q_streaming_topk_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = spark.readStream.schema("event_type string").option(
         "maxFilesPerTrigger", "1"
     ).parquet(src)
-    q = (
-        st.writeStream.foreachBatch(rank_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drive(st.writeStream.foreachBatch(rank_batch).option("checkpointLocation", ckpt))
     final = spark.read.schema(cnt_schema + ", rank int").parquet(serve)
     rows = final.orderBy("rank").collect()
     return spark.createDataFrame(rows, final.schema)
@@ -14579,7 +14467,7 @@ def q_streaming_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = logreg_score(feats(st), w, ["x1", "x2"]).select(
         "doc_id", "lang", "score", (F.col("score") >= 0.5).alias("keep")
     )
-    return _run_append(scored, "stream_quality")
+    return to_memory(scored, "append", "stream_quality")
 
 
 def _unigram_tokenize_oracle(n_iters: int = 2, L: int = 3, top_k: int = 64) -> str:
@@ -15286,7 +15174,7 @@ def q_streaming_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame
     out = decode_quarantine(payloads).select(
         "doc_id", "ok", "width", "height", "mean_byte"
     )
-    return _run_append(out, "stream_quarantine")
+    return to_memory(out, "append", "stream_quarantine")
 
 
 @register(
@@ -16787,7 +16675,7 @@ def q_streaming_frontier_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("host", F.regexp_extract("url", r"://([^/]*)", 1))
     )
     out = apply_robots(frontier, F.broadcast(rules)).select("doc_id", "url", "allowed")
-    return _run_append(out, "stream_frontier")
+    return to_memory(out, "append", "stream_frontier")
 
 
 #: synthesized robots.txt for robots_frontier_filter — one body per host,

@@ -2,17 +2,17 @@
 
 The MLlib-shaped iteration without the MLlib dependency: centroids are
 BOUNDED driver state (k·d doubles — the same materialization a broadcast
-performs), each iteration is one scan with the k distance expressions
-inlined as literals (whole-stage codegen, no UDF) plus one k×d-cell
-aggregate. At 100 TB that is: per-iteration cost = one pass over the data
-+ a k·d-sized shuffle — the known-optimal distributed Lloyd shape.
+performs), each iteration is one scan that assigns every row its nearest
+centroid plus one k×d-cell aggregate. At 100 TB that is: per-iteration
+cost = one pass over the data + a k·d-sized shuffle — the known-optimal
+distributed Lloyd shape.
 
 Determinism contract (what makes a DuckDB oracle replay possible):
 
 - init = the embeddings of the k smallest ids (data-derived, no RNG);
 - ties in the argmin break toward the LOWEST cluster index (Spark
-  ``array_position`` takes the first minimum; the oracle orders by
-  ``(dist, j)``);
+  ``array_position`` and numpy ``argmin`` take the first minimum; the
+  oracle orders by ``(dist, j)``);
 - centroid coordinates are ROUNDED (default 6 dp) after every update, so
   cross-engine summation-order ulps in the per-cluster means cannot
   accumulate across iterations;
@@ -22,15 +22,16 @@ Iteration count is FIXED (like :func:`~zio_analytics_spark.operators.
 graph.pagerank`): convergence-threshold stopping would make the plan
 data-dependent and the oracle unreplayable.
 
-PRODUCTION-PARAMETER CEILING (round-7, shared with operators/pq.py): the
-literal-inlined assign expression is k·d literals; plan CONSTRUCTION
-(py4j Column building) is literal-count-linear and hits ~80 s around 65k
-literals. ``engine="auto"`` therefore routes to an arrow (mapInPandas +
-numpy argmin) assignment above the same 2048-literal threshold pq uses —
-centroids as closure state, O(1) plan nodes — while the shipped catalog
-shapes (k=10, d=64 → 640 literals) keep the codegen path and its
-bit-exact oracle replay. Engine equivalence is asserted in
-test_clustering.
+ENGINE CHOICE (shared with operators/pq.py): the codegen assignment
+inlines the k·d centroid coordinates as literals into one whole-stage-
+codegen expression, whose plan build and Janino compile grow with that
+count. ``engine="auto"`` routes to an arrow (mapInPandas + numpy argmin)
+assignment above pq's ``_CODEGEN_MAX_LITERALS`` (384 literals) —
+centroids as closure state, O(1) plan nodes. The shipped catalog shapes
+(k=10, d=64 → 640 literals) are above it, so ``kmeans_clusters`` and
+``dedup_semantic`` run the arrow engine and replay their oracles through
+it; codegen runs for k·d ≤ 384 or ``engine="codegen"``. Engine
+equivalence is asserted in test_clustering.
 """
 
 from __future__ import annotations

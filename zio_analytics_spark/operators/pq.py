@@ -81,8 +81,8 @@ __all__ = [
     "ivfpq_search",
 ]
 
-#: codegen is preferred up to this many inlined codebook literals (~5 s of
-#: driver-side Column building); beyond it, auto switches to the arrow path.
+#: codegen is preferred up to this many inlined literals; beyond it Janino
+#: compile outweighs the arrow path (module doc), so auto switches to arrow.
 _CODEGEN_MAX_LITERALS = 384
 
 

@@ -17,7 +17,6 @@ __all__ = [
     "write_parquet",
     "write_parquet_sorted",
     "to_local",
-    "write_stream_memory",
     "write_stream_parquet",
     "write_stream_foreach_batch",
 ]
@@ -65,11 +64,6 @@ def write_parquet_sorted(
 def to_local(df: DataFrame, limit: int | None = None):
     """Collect to driver memory — test/dimension-sized frames ONLY."""
     return (df.limit(limit) if limit is not None else df).collect()
-
-
-def write_stream_memory(df: DataFrame, query_name: str, output_mode: str = "append"):
-    """Memory sink for tests/demos; returns the StreamingQuery handle."""
-    return df.writeStream.outputMode(output_mode).format("memory").queryName(query_name).start()
 
 
 def write_stream_foreach_batch(df: DataFrame, fn, checkpoint: str):

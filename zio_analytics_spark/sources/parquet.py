@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-__all__ = ["TABLES", "footer_schema", "read_parquet", "read_table", "load_tables"]
+__all__ = ["TABLES", "footer_schema", "read_parquet", "read_table"]
 
 # The driver's star schema + stream/LLM tables (TESTDATA.md).
 TABLES = (
@@ -127,11 +127,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.schema(footer_schema(spark, path)).parquet(path)
     return normalize_event_ts(df, _EVENT_TS_COLS.get(name, ()))
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    """Load several tables as a dict of DataFrames."""
-    return {name: read_table(spark, sf_dir, name) for name in names}
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

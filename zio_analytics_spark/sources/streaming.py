@@ -13,23 +13,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-__all__ = ["rate_stream", "stream_parquet", "stream_table"]
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Built-in rate source: columns ``timestamp, value`` — handy for demos/tests."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )
+__all__ = ["stream_parquet", "stream_table"]
 
 
 def stream_parquet(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
     """File-stream over a parquet directory (schema must be declared for streams).
 
     Locally this lets a bounded parquet directory drive a streaming query to
-    completion via ``processAllAvailable()``; on a cluster the same plan tails
+    completion via ``streaming.drive``; on a cluster the same plan tails
     an arriving-files directory. A single-file path works too (the file
     source itself only accepts directories, so it becomes parent +
     ``pathGlobFilter``).

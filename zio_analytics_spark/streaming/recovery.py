@@ -110,12 +110,10 @@ def run_kill_restart(
     # the caller's provider afterwards — the round-7 finding was this conf
     # LEAKING into every later streaming query in the session (an interval
     # join silently ran on RocksDB and paid ~1.5 s of extra state-store
-    # lifecycle per run).
+    # lifecycle per run). ``getAll`` holds only explicitly set keys, so an
+    # unset provider is unset again afterwards, not pinned to its default.
     _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        old_provider = spark.conf.get(_PROVIDER_KEY)
-    except Exception:
-        old_provider = None
+    old_provider = spark.conf.getAll.get(_PROVIDER_KEY)
 
     def start(name: str):
         return start_complete_query(spark, src_path, schema, build_agg, ckpt_path, name)

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from zio_analytics_spark.windows import WindowAssigner
 
-__all__ = ["windowed_counts", "run_windowed_stream"]
+__all__ = ["windowed_counts"]
 
 
 def windowed_counts(
@@ -47,22 +47,3 @@ def windowed_counts(
         *[c for c in out.columns if c != "window"],
     )
 
-
-def run_windowed_stream(agg: DataFrame, query_name: str = "windowed_out") -> DataFrame:
-    """Drive a bounded streaming source to completion into a memory sink.
-
-    Append mode reproduces the reference's emit-on-watermark + drop-late
-    policy; ``processAllAvailable`` makes the run synchronous for tests.
-    Returns the materialized result as a batch DataFrame.
-    """
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return agg.sparkSession.sql(f"SELECT * FROM {query_name}")
