@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from zio_analytics_spark import DataStream, get_spark, tumbling
 from zio_analytics_spark.sources.parquet import read_table
-from zio_analytics_spark.streaming import to_memory, windowed_counts
+from zio_analytics_spark.streaming import to_memory
 
 
 def batch(spark, sf_dir: str):
@@ -40,8 +40,13 @@ def streaming(spark, sf_dir: str):
     from zio_analytics_spark.sources.streaming import stream_table
 
     ev = stream_table(spark, sf_dir, "events")
-    agg = windowed_counts(ev, tumbling("1 hour"), "ts", ["event_type"], watermark_delay="10 minutes")
-    out = to_memory(agg, "append", "wc_stream")
+    agg = (
+        DataStream(ev)
+        .assign_timestamps("ts", "10 minutes")
+        .group_by("event_type")
+        .fold_window(tumbling("1 hour"), n=F.count("*"))
+    )
+    out = to_memory(agg.to_df(), "append", "wc_stream")
     print("— streaming (events, tumbling 1h, append mode) —")
     out.orderBy("window_start", "event_type").show(5, truncate=False)
 

@@ -686,6 +686,27 @@ def test_char_shingle_arrow_matches_expressions(spark):
     want = {r["doc_id"]: len(r["__sh"]) for r in legacy.collect()}
     assert got == want
 
+    # Several Arrow batches through ONE task (the gram→id memo is per
+    # batch): every doc keeps the same shingle ids as the one-batch run,
+    # so cross-batch intersections stay exact.
+    def one_task_shingles():
+        out = dedup._char_shingle_arrow(df.coalesce(1), "text", "doc_id", ["lang"], 5)
+        return {r["doc_id"]: (r["__sh"], r["__sz"]) for r in out.collect()}
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    one_batch = one_task_shingles()
+    prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, "2")
+    try:
+        multi_batch = one_task_shingles()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert multi_batch == one_batch
+    assert {d: sz for d, (_sh, sz) in multi_batch.items()} == want
+
     pairs = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in dedup.jaccard_pairs(

@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 from zio_analytics_spark.sources.streaming import stream_parquet
 from zio_analytics_spark.tmpdirs import scratch_dir
 from zio_analytics_spark.streaming.stateful import running_sum_stream
-from zio_analytics_spark.streaming import drive, to_memory, windowed_counts
+from zio_analytics_spark.datastream import DataStream
+from zio_analytics_spark.streaming import drive, to_memory
 from zio_analytics_spark.windows import tumbling
 
 SCHEMA = "ts timestamp, word string"
@@ -45,6 +46,18 @@ def _write_batches(spark, batches) -> str:
     return d
 
 
+def _window_counts(stream, assigner):
+    """Per-(word, window) counts with a 5 s watermark on ``ts`` — the
+    reference's FoldWindow through ``DataStream.fold_window``."""
+    return (
+        DataStream(stream)
+        .assign_timestamps("ts", "5 seconds")
+        .group_by("word")
+        .fold_window(assigner, n=F.count("*"))
+        .to_df()
+    )
+
+
 def test_streaming_windowed_counts_and_late_drop(spark):
     """Tumbling 10s counts in append mode: windows emit once the watermark
     passes their end; data later than the watermark is dropped
@@ -64,7 +77,7 @@ def test_streaming_windowed_counts_and_late_drop(spark):
         ],
     )
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src_dir)
-    agg = windowed_counts(stream, tumbling("10 seconds"), "ts", ["word"], watermark_delay="5 seconds")
+    agg = _window_counts(stream, tumbling("10 seconds"))
     out = to_memory(agg, "append", "stream_wc")
     got = {(r.window_start.second, r.word): r.n for r in out.collect()}
     # [0,10) emitted once with the on-time count; the late (2,'a') must not
@@ -190,7 +203,7 @@ def test_streaming_sliding_windows(spark):
         ],
     )
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src_dir)
-    agg = windowed_counts(stream, sliding("20 seconds", "10 seconds"), "ts", ["word"], watermark_delay="5 seconds")
+    agg = _window_counts(stream, sliding("20 seconds", "10 seconds"))
     out = to_memory(agg, "append", "stream_sliding")
     got = sorted((r.window_start.second, r.word) for r in out.collect() if r.word == "a")
     assert got == [(0, "a"), (10, "a")]
@@ -209,7 +222,7 @@ def test_streaming_session_windows(spark):
         ],
     )
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src_dir)
-    agg = windowed_counts(stream, session("10 seconds"), "ts", ["word"], watermark_delay="5 seconds")
+    agg = _window_counts(stream, session("10 seconds"))
     out = to_memory(agg, "append", "stream_session")
     got = sorted((r.window_start.second, r.n) for r in out.collect() if r.word == "u")
     assert got == [(1, 2), (30, 1)]

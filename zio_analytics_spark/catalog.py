@@ -59,9 +59,34 @@ def _fan_out(df: DataFrame) -> DataFrame:
     expensive per-row work, sized to the session's ACTUAL parallelism
     instead of a constant: the driver also benches at lower core counts,
     and on a real cluster ``defaultParallelism`` tracks the executor
-    fleet (round-16 — replaces the literal ``repartition(32)`` the
-    payload-synthesis entries carried from the round-7/round-9 lessons)."""
+    fleet. Per-document Python stages get it through :func:`_doc_rows`;
+    the expression-heavy entries (HTML extraction, byte-level BPE, the
+    redirect walk) call it directly."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def _doc_rows(
+    spark: SparkSession,
+    sf_dir: str,
+    fn: Callable,
+    schema: str,
+    cols: tuple[str, ...] = ("doc_id",),
+) -> DataFrame:
+    """``map_rows(fn, schema)`` over the ``documents`` table's ``cols`` —
+    the one entry point for per-document Python work (payload synthesis,
+    codec encode/decode). The rows are fanned out across cores
+    (:func:`_fan_out`) before the Arrow stage:
+    single-file parquet = ONE input partition, so without the fan-out the
+    codec work runs on one core (on a cluster this is the decode fan-out
+    over executors)."""
+    from zio_analytics_spark.operators._rows import map_rows
+
+    docs = read_table(spark, sf_dir, "documents").select(*cols).transform(_fan_out)
+    return map_rows(docs, fn, schema)
+
+
+# (doc_id, synthesized payload) — the input of every codec-decode entry
+_PAYLOAD = "doc_id long, payload binary"
 
 
 def _ds(spark: SparkSession, sf_dir: str, table: str) -> DataStream:
@@ -3350,41 +3375,17 @@ def q_multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pal = [(i, (2 * i + 85) % 256, (5 * i + 171) % 256) for i in range(256)]
 
-    def run(batches):
-        import pandas as pd
+    def run(i):
+        w, h = 5 + i % 6, 4 + i % 5
+        m = decode_image(encode_gif(w, h, lambda x, y: (i + 11 * x + 17 * y) % 256, pal))
+        px = m["pixels"].astype("int64")
+        r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
+        luma = int((299 * r + 587 * g + 114 * b).sum())
+        return [(i, m["width"], m["height"], int(r.sum()), int(g.sum()),
+                 int(b.sum()), luma, int(px[0, 0, 0]))]
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "width", "height", "sum_r", "sum_g", "sum_b",
-                "sum_luma", "first_r",
-            )}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 5 + i % 6, 4 + i % 5
-                payload = encode_gif(
-                    w, h, lambda x, y, i=i: (i + 11 * x + 17 * y) % 256, pal
-                )
-                m = decode_image(payload)
-                px = m["pixels"].astype("int64")
-                out["doc_id"].append(i)
-                out["width"].append(m["width"])
-                out["height"].append(m["height"])
-                out["sum_r"].append(int(px[:, :, 0].sum()))
-                out["sum_g"].append(int(px[:, :, 1].sum()))
-                out["sum_b"].append(int(px[:, :, 2].sum()))
-                out["sum_luma"].append(
-                    int((299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]).sum())
-                )
-                out["first_r"].append(int(px[0, 0, 0]))
-            yield pd.DataFrame(out)
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run,
+    return _doc_rows(
+        spark, sf_dir, run,
         "doc_id long, width int, height int, sum_r long, sum_g long, "
         "sum_b long, sum_luma long, first_r int",
     )
@@ -3424,44 +3425,25 @@ def q_multimodal_gif_interlaced(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel by its display row, and ``row1_r``/``last_r`` probe rows that
     interlacing stores LAST and in the middle — a decoder that returns
     storage order matches none of them. Oracle fully analytic."""
+    import numpy as np
+
     from zio_analytics_spark.operators.multimodal import decode_gif, encode_gif
 
     pal = [(i, (2 * i + 85) % 256, (5 * i + 171) % 256) for i in range(256)]
 
-    def run(batches):
-        import pandas as pd
+    def run(i):
+        w, h = 5 + i % 6, 4 + i % 5
+        payload = encode_gif(
+            w, h, lambda x, y: (i + 11 * x + 17 * y) % 256, pal, interlace=True,
+        )
+        m = decode_gif(payload)
+        r = m["pixels"][:, :, 0].astype("int64")
+        rows_w = np.arange(1, h + 1, dtype="int64")[:, None]
+        return [(i, m["width"], m["height"], int(r.sum()), int((rows_w * r).sum()),
+                 int(r[0, 0]), int(r[1, 0]), int(r[h - 1, 0]))]
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "width", "height", "sum_r", "wsum_r",
-                "first_r", "row1_r", "last_r",
-            )}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 5 + i % 6, 4 + i % 5
-                payload = encode_gif(
-                    w, h, lambda x, y, i=i: (i + 11 * x + 17 * y) % 256, pal,
-                    interlace=True,
-                )
-                m = decode_gif(payload)
-                px = m["pixels"].astype("int64")
-                import numpy as np
-
-                rows_w = np.arange(1, h + 1, dtype="int64")[:, None]
-                out["doc_id"].append(i)
-                out["width"].append(m["width"])
-                out["height"].append(m["height"])
-                out["sum_r"].append(int(px[:, :, 0].sum()))
-                out["wsum_r"].append(int((rows_w * px[:, :, 0]).sum()))
-                out["first_r"].append(int(px[0, 0, 0]))
-                out["row1_r"].append(int(px[1, 0, 0]))
-                out["last_r"].append(int(px[h - 1, 0, 0]))
-            yield pd.DataFrame(out)
-
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run,
+    return _doc_rows(
+        spark, sf_dir, run,
         "doc_id long, width int, height int, sum_r long, wsum_r long, "
         "first_r int, row1_r int, last_r int",
     )
@@ -3511,46 +3493,27 @@ def q_multimodal_gif_composited(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pal = [(i, i, i) for i in range(256)]
 
-    def run(batches):
-        import pandas as pd
+    def run(i):
+        w, h = 6 + i % 5, 5 + i % 4
+        bg, c0 = (i * 3) % 256, (i * 5) % 256
+        a, bb = (i * 7) % 256, (i * 11) % 256
+        l1, t1 = i % 3, i % 2
+        frames = [
+            {"index_of": lambda x, y: c0, "delay_cs": 4},
+            {"index_of": lambda x, y: a if x % 2 == 0 else (a + 1) % 256,
+             "delay_cs": 4, "left": l1, "top": t1, "width": 2,
+             "height": 2, "disposal": 2, "transparent": (a + 1) % 256},
+            {"index_of": lambda x, y: bb, "delay_cs": 4,
+             "left": w - 1, "top": h - 1, "width": 1, "height": 1},
+        ]
+        fs = decode_gif_composited(encode_gif_animation(w, h, frames, pal, bg_index=bg))
+        px = [f["pixels"][:, :, 0].astype("int64") for f in fs]
+        return [(i, len(fs), fs[0]["width"], fs[0]["height"],
+                 int(px[0].sum()), int(px[1].sum()), int(px[2].sum()),
+                 int(px[1][t1, l1 + 1]), int(px[2][t1, l1]))]
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "n_frames", "width", "height", "s0", "s1", "s2",
-                "probe_transparent", "probe_restored",
-            )}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 6 + i % 5, 5 + i % 4
-                bg, c0 = (i * 3) % 256, (i * 5) % 256
-                a, bb = (i * 7) % 256, (i * 11) % 256
-                l1, t1 = i % 3, i % 2
-                frames = [
-                    {"index_of": lambda x, y, c0=c0: c0, "delay_cs": 4},
-                    {"index_of": lambda x, y, a=a, bg=bg: a if x % 2 == 0 else (a + 1) % 256,
-                     "delay_cs": 4, "left": l1, "top": t1, "width": 2,
-                     "height": 2, "disposal": 2, "transparent": (a + 1) % 256},
-                    {"index_of": lambda x, y, bb=bb: bb, "delay_cs": 4,
-                     "left": w - 1, "top": h - 1, "width": 1, "height": 1},
-                ]
-                payload = encode_gif_animation(w, h, frames, pal, bg_index=bg)
-                fs = decode_gif_composited(payload)
-                px = [f["pixels"][:, :, 0].astype("int64") for f in fs]
-                out["doc_id"].append(i)
-                out["n_frames"].append(len(fs))
-                out["width"].append(fs[0]["width"])
-                out["height"].append(fs[0]["height"])
-                out["s0"].append(int(px[0].sum()))
-                out["s1"].append(int(px[1].sum()))
-                out["s2"].append(int(px[2].sum()))
-                out["probe_transparent"].append(int(px[1][t1, l1 + 1]))
-                out["probe_restored"].append(int(px[2][t1, l1]))
-            yield pd.DataFrame(out)
-
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run,
+    return _doc_rows(
+        spark, sf_dir, run,
         "doc_id long, n_frames int, width int, height int, s0 long, "
         "s1 long, s2 long, probe_transparent int, probe_restored int",
     )
@@ -3596,40 +3559,19 @@ def q_multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pal = [(i, (2 * i + 85) % 256, (5 * i + 171) % 256) for i in range(256)]
 
-    def run(batches):
-        import pandas as pd
+    def run(i):
+        w, h = 4 + i % 5, 3 + i % 4
+        frames = [
+            (lambda x, y, k=k: (i + 11 * x + 17 * y + 29 * k) % 256, 10 * (k + 1))
+            for k in range(3)
+        ]
+        for k, f in enumerate(decode_gif_frames(encode_gif_animation(w, h, frames, pal))):
+            px = f["pixels"].astype("int64")
+            yield (i, k, f["width"], f["height"], f["delay_cs"],
+                   int(px[:, :, 0].sum()), int(px[:, :, 1].sum()))
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "frame", "width", "height", "delay_cs", "sum_r", "sum_g",
-            )}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 4 + i % 5, 3 + i % 4
-                frames = [
-                    (lambda x, y, i=i, k=k: (i + 11 * x + 17 * y + 29 * k) % 256,
-                     10 * (k + 1))
-                    for k in range(3)
-                ]
-                payload = encode_gif_animation(w, h, frames, pal)
-                for k, f in enumerate(decode_gif_frames(payload)):
-                    px = f["pixels"].astype("int64")
-                    out["doc_id"].append(i)
-                    out["frame"].append(k)
-                    out["width"].append(f["width"])
-                    out["height"].append(f["height"])
-                    out["delay_cs"].append(f["delay_cs"])
-                    out["sum_r"].append(int(px[:, :, 0].sum()))
-                    out["sum_g"].append(int(px[:, :, 1].sum()))
-            yield pd.DataFrame(out)
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run,
+    return _doc_rows(
+        spark, sf_dir, run,
         "doc_id long, frame int, width int, height int, delay_cs int, "
         "sum_r long, sum_g long",
     )
@@ -3680,29 +3622,15 @@ def q_multimodal_gif_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pal = [(i, (2 * i + 85) % 256, (5 * i + 171) % 256) for i in range(256)]
 
-    def enc(batches):
-        import pandas as pd
+    def enc(i):
+        w, h = 4 + i % 4, 3 + i % 3
+        frames = [
+            (lambda x, y, k=k: (i + 11 * x + 17 * y + 97 * (k // 2)) % 256, 10)
+            for k in range(3)
+        ]
+        return [(i, encode_gif_animation(w, h, frames, pal))]
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 4 + i % 4, 3 + i % 3
-                frames = [
-                    (lambda x, y, i=i, k=k: (i + 11 * x + 17 * y + 97 * (k // 2)) % 256,
-                     10)
-                    for k in range(3)
-                ]
-                payloads.append(encode_gif_animation(w, h, frames, pal))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    gifs = docs.mapInPandas(enc, "doc_id long, payload binary")
-    return gif_scene_cuts(gifs, threshold=1000)
+    return gif_scene_cuts(_doc_rows(spark, sf_dir, enc, _PAYLOAD), threshold=1000)
 
 
 @register(
@@ -3738,27 +3666,14 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bugs that order-insensitive stats cannot."""
     from zio_analytics_spark.operators.multimodal import decode_pixel_stats, encode_bmp
 
-    def encode(batches):
-        import pandas as pd
+    def encode(i):
+        def gray(x, y):
+            v = (i + 3 * x + 7 * y) % 256
+            return (v, v, v)
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
+        return [(i, encode_bmp(4 + i % 5, 3 + i % 4, gray))]
 
-                def gray(x, y, i=int(i)):
-                    v = (i + 3 * x + 7 * y) % 256
-                    return (v, v, v)
-
-                payloads.append(encode_bmp(4 + int(i) % 5, 3 + int(i) % 4, gray))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return decode_pixel_stats(payloads)
+    return decode_pixel_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
 
 @register(
@@ -3802,31 +3717,14 @@ def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     seam handles real compression with zero new dependencies."""
     from zio_analytics_spark.operators.multimodal import decode_pixel_stats, encode_png
 
-    def encode(batches):
-        import pandas as pd
+    def encode(i):
+        def rgb(x, y):
+            return ((i + 3 * x + 7 * y) % 256, (2 * i + 5 * x + y) % 256,
+                    (i + x + 11 * y) % 256)
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
+        return [(i, encode_png(4 + i % 5, 5 + i % 3, rgb))]
 
-                def rgb(x, y, i=i):
-                    return (
-                        (i + 3 * x + 7 * y) % 256,
-                        (2 * i + 5 * x + y) % 256,
-                        (i + x + 11 * y) % 256,
-                    )
-
-                payloads.append(encode_png(4 + i % 5, 5 + i % 3, rgb))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return decode_pixel_stats(payloads)
+    return decode_pixel_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
 
 @register(
@@ -3867,33 +3765,14 @@ def q_multimodal_png_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stats and hash-mismatches."""
     from zio_analytics_spark.operators.multimodal import decode_pixel_stats, encode_png
 
-    def encode(batches):
-        import pandas as pd
+    def encode(i):
+        def rgb(x, y):
+            return ((i + 3 * x + 7 * y) % 256, (2 * i + 5 * x + y) % 256,
+                    (i + x + 11 * y) % 256)
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
+        return [(i, encode_png(4 + i % 9, 5 + i % 7, rgb, interlace=True))]
 
-                def rgb(x, y, i=i):
-                    return (
-                        (i + 3 * x + 7 * y) % 256,
-                        (2 * i + 5 * x + y) % 256,
-                        (i + x + 11 * y) % 256,
-                    )
-
-                payloads.append(
-                    encode_png(4 + i % 9, 5 + i % 7, rgb, interlace=True)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return decode_pixel_stats(payloads)
+    return decode_pixel_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
 
 @register(
@@ -3931,30 +3810,14 @@ def q_multimodal_png_16bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytic function of (doc_id, x, y) over the FULL 0..65535 range."""
     from zio_analytics_spark.operators.multimodal import decode_pixel_stats, encode_png
 
-    def encode(batches):
-        import pandas as pd
+    def encode(i):
+        def gray(x, y):
+            return ((i * 257 + 1031 * x + 2053 * y) % 65536,)
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
+        return [(i, encode_png(4 + i % 5, 5 + i % 3, gray, color_type=0,
+                               depth=16, interlace=bool(i % 2)))]
 
-                def gray(x, y, i=i):
-                    return ((i * 257 + 1031 * x + 2053 * y) % 65536,)
-
-                payloads.append(
-                    encode_png(4 + i % 5, 5 + i % 3, gray, color_type=0,
-                               depth=16, interlace=bool(i % 2))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return decode_pixel_stats(payloads)
+    return decode_pixel_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
 
 _IMA_STEPS_SQL = (
@@ -4021,38 +3884,25 @@ def q_multimodal_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from zio_analytics_spark.operators.multimodal import decode_audio_stats
 
-    def encode(batches):
-        import pandas as pd
+    def encode(i):
+        n_nib = 48 + (i % 5) * 2
+        p0 = ((i * 113) % 4001) - 2000
+        i0 = i % 89
+        nibs = [(i * 7 + 5 * t) % 16 for t in range(n_nib)]
+        body = bytearray(_struct.pack("<hBB", p0, i0, 0))
+        for lo, hi in zip(nibs[0::2], nibs[1::2]):
+            body.append(lo | (hi << 4))
+        block_align = len(body)
+        hdr = b"RIFF" + _struct.pack("<I", 40 + len(body)) + b"WAVE"
+        hdr += b"fmt " + _struct.pack(
+            "<IHHIIHHHH", 20, 0x11, 1, 8000,
+            8000 * block_align // (n_nib + 1), block_align, 4,
+            2, n_nib + 1,
+        )
+        hdr += b"data" + _struct.pack("<I", len(body))
+        return [(i, hdr + bytes(body))]
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n_nib = 48 + (i % 5) * 2
-                p0 = ((i * 113) % 4001) - 2000
-                i0 = i % 89
-                nibs = [(i * 7 + 5 * t) % 16 for t in range(n_nib)]
-                body = bytearray(_struct.pack("<hBB", p0, i0, 0))
-                for lo, hi in zip(nibs[0::2], nibs[1::2]):
-                    body.append(lo | (hi << 4))
-                block_align = len(body)
-                hdr = b"RIFF" + _struct.pack("<I", 40 + len(body)) + b"WAVE"
-                hdr += b"fmt " + _struct.pack(
-                    "<IHHIIHHHH", 20, 0x11, 1, 8000,
-                    8000 * block_align // (n_nib + 1), block_align, 4,
-                    2, n_nib + 1,
-                )
-                hdr += b"data" + _struct.pack("<I", len(body))
-                payloads.append(hdr + bytes(body))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return decode_audio_stats(payloads)
+    return decode_audio_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
 
 @register(
@@ -4092,32 +3942,17 @@ def q_multimodal_png_subbyte(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^depth."""
     from zio_analytics_spark.operators.multimodal import decode_pixel_stats, encode_png
 
-    def encode(batches):
-        import pandas as pd
+    def encode(i):
+        depth = (1, 2, 4)[i % 3]
+        m = 1 << depth
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                depth = (1, 2, 4)[i % 3]
-                m = 1 << depth
+        def px(x, y):
+            return ((i + 3 * x + 7 * y) % m,)
 
-                def px(x, y, i=i, m=m):
-                    return ((i + 3 * x + 7 * y) % m,)
+        return [(i, encode_png(16 + i % 17, 8 + i % 9, px, color_type=0,
+                               depth=depth, interlace=bool(i % 2)))]
 
-                payloads.append(
-                    encode_png(16 + i % 17, 8 + i % 9, px, color_type=0,
-                               depth=depth, interlace=bool(i % 2))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return decode_pixel_stats(payloads)
+    return decode_pixel_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
 
 @register(
@@ -4161,33 +3996,18 @@ def q_multimodal_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup order) shifts the stats or first_px and hash-mismatches."""
     from zio_analytics_spark.operators.multimodal import decode_pixel_stats, encode_png
 
-    def encode(batches):
-        import pandas as pd
+    def encode(i):
+        p = 17 + i % 9
+        pal = [((j * 37) % 256, (j * 59 + 13) % 256, (j * 83 + 7) % 256)
+               for j in range(p)]
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                p = 17 + i % 9
-                pal = [((j * 37) % 256, (j * 59 + 13) % 256, (j * 83 + 7) % 256)
-                       for j in range(p)]
+        def idx(x, y):
+            return ((i + 3 * x + 5 * y) % p,)
 
-                def idx(x, y, i=i, p=p):
-                    return ((i + 3 * x + 5 * y) % p,)
+        return [(i, encode_png(4 + i % 6, 5 + i % 4, idx, color_type=3,
+                               palette=pal, interlace=bool(i % 2)))]
 
-                payloads.append(
-                    encode_png(4 + i % 6, 5 + i % 4, idx, color_type=3,
-                               palette=pal, interlace=bool(i % 2))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return decode_pixel_stats(payloads)
+    return decode_pixel_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
 
 # =====================================================================
@@ -8617,29 +8437,14 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec library in a real deployment)."""
     from zio_analytics_spark.operators.multimodal import decode_audio_stats, encode_wav
 
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = 50 + i % 50
-                k = np.arange(n, dtype=np.int64)
-                amp = ((i * 31 + k * 7) % 2003) - 1001
-                payloads.append(encode_wav(amp, sample_rate=8000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(i):
+        k = np.arange(50 + i % 50, dtype=np.int64)
+        amp = ((i * 31 + k * 7) % 2003) - 1001
+        return [(i, encode_wav(amp, sample_rate=8000))]
 
-    import pandas as pd  # noqa: F401  (encode closure)
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return decode_audio_stats(payloads)
+    return decode_audio_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
 
 @register(
@@ -8685,25 +8490,11 @@ def q_multimodal_audio_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav_g711,
     )
 
-    def encode(batches):
-        import pandas as pd
+    def encode(i):
+        enc = bytes((i * 31 + k * 7) % 256 for k in range(20 + i % 13))
+        return [(i, encode_wav_g711(enc, sample_rate=8000, law="ulaw"))]
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = 20 + i % 13
-                enc = bytes((i * 31 + k * 7) % 256 for k in range(n))
-                payloads.append(encode_wav_g711(enc, sample_rate=8000, law="ulaw"))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return decode_audio_stats(payloads)
+    return decode_audio_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
 
 @register(
@@ -8772,31 +8563,19 @@ def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     codecs (H.264/VP9) stay behind the same seam."""
     from zio_analytics_spark.operators.multimodal import encode_y4m, sample_frame_stats
 
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n, w, h = 4 + i % 5, 4 + i % 3, 3 + i % 2
-                fr = np.zeros((n, h, w, 3), dtype=np.uint8)
-                for f in range(n):
-                    yy, xx = np.mgrid[0:h, 0:w]
-                    fr[f, :, :, 0] = (i + 11 * f + 3 * xx + 5 * yy) % 256
-                    fr[f, :, :, 1] = (i + f) % 256
-                    fr[f, :, :, 2] = (2 * i + f) % 256
-                payloads.append(encode_y4m(fr, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(i):
+        n, w, h = 4 + i % 5, 4 + i % 3, 3 + i % 2
+        fr = np.zeros((n, h, w, 3), dtype=np.uint8)
+        yy, xx = np.mgrid[0:h, 0:w]
+        for f in range(n):
+            fr[f, :, :, 0] = (i + 11 * f + 3 * xx + 5 * yy) % 256
+            fr[f, :, :, 1] = (i + f) % 256
+            fr[f, :, :, 2] = (2 * i + f) % 256
+        return [(i, encode_y4m(fr, w, h))]
 
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return sample_frame_stats(payloads, every_k=2)
+    return sample_frame_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD), every_k=2)
 
 
 @register(
@@ -10515,7 +10294,7 @@ def q_llm_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zio_analytics_spark.operators.html import html_text_expr
     from zio_analytics_spark.operators.splits import hash_split
 
-    # single-file parquet = ONE input partition (round-7 lesson); the
+    # the documents table is one input split (see _doc_rows); the
     # extraction chain (incl. the round-12 111-entity layer) is the
     # per-row hot path here, so fan out before it or it runs serial
     docs = read_table(spark, sf_dir, "documents").transform(_fan_out)
@@ -10929,7 +10708,7 @@ def q_bpe_byte_tokenize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "zio_analytics_spark.operators.bpe", fromlist=["bpe_model_bytes"]
         ).bpe_model_bytes(read_table(spark, sf_dir, "documents"), n_merges=4),
     )
-    # single-file parquet = one input partition (round-7 lesson); the
+    # the documents table is one input split (see _doc_rows); the
     # per-CHARACTER byte→unicode mapping is the hot path of the corpus
     # pass — fan out before it or it runs serial (4.7 s → 1.5 s at sf0.1)
     docs = read_table(spark, sf_dir, "documents").transform(_fan_out)
@@ -12555,31 +12334,14 @@ def q_multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly dedup_simhash's Hamming-band machinery."""
     from zio_analytics_spark.operators.multimodal import encode_png, perceptual_ahash
 
-    def encode(batches):
-        import pandas as pd
+    def encode(i):
+        def rgb(x, y):
+            return ((i + 3 * x + 7 * y) % 256, (2 * i + 5 * x + y) % 256,
+                    (i + x + 11 * y) % 256)
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
+        return [(i, encode_png(8 * (1 + i % 3), 8 * (1 + i % 2), rgb))]
 
-                def rgb(x, y, i=i):
-                    return (
-                        (i + 3 * x + 7 * y) % 256,
-                        (2 * i + 5 * x + y) % 256,
-                        (i + x + 11 * y) % 256,
-                    )
-
-                payloads.append(encode_png(8 * (1 + i % 3), 8 * (1 + i % 2), rgb))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return perceptual_ahash(payloads)
+    return perceptual_ahash(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
 
 @register(
@@ -12639,30 +12401,14 @@ def q_dedup_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the banding loses nothing."""
     from zio_analytics_spark.operators.multimodal import encode_png, perceptual_ahash
 
-    def encode(batches):
-        import pandas as pd
+    def encode(i):
+        def rgb(x, y):
+            return ((i + 3 * x + 7 * y) % 256, (2 * i + 5 * x + y) % 256,
+                    (i + x + 11 * y) % 256)
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
+        return [(i, encode_png(8 * (1 + i % 3), 8 * (1 + i % 2), rgb))]
 
-                def rgb(x, y, i=i):
-                    return (
-                        (i + 3 * x + 7 * y) % 256,
-                        (2 * i + 5 * x + y) % 256,
-                        (i + x + 11 * y) % 256,
-                    )
-
-                payloads.append(encode_png(8 * (1 + i % 3), 8 * (1 + i % 2), rgb))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    hashed = perceptual_ahash(docs.mapInPandas(encode, "doc_id long, payload binary"))
+    hashed = perceptual_ahash(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
     groups = hashed.groupBy("ahash").agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("rep_doc")
     )
@@ -12826,27 +12572,14 @@ def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav,
     )
 
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = 192 + i % 129
-                k = np.arange(n, dtype=np.int64)
-                amp = ((i * 31 + k * 7) % 2003) - 1001
-                payloads.append(encode_wav(amp, sample_rate=8000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(i):
+        k = np.arange(192 + i % 129, dtype=np.int64)
+        amp = ((i * 31 + k * 7) % 2003) - 1001
+        return [(i, encode_wav(amp, sample_rate=8000))]
 
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return audio_frame_features(payloads, frame_len=64)
+    return audio_frame_features(_doc_rows(spark, sf_dir, encode, _PAYLOAD), frame_len=64)
 
 
 @register(
@@ -12899,8 +12632,8 @@ def q_multimodal_dtmf_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     tone by doc_id mod 4, column tone by doc_id div 4 mod 3, plus
     deterministic integer noise); the operator decodes the WAV and
     recovers the dialed key from single-bin DFT band powers (the Goertzel
-    closed form — a (clips × samples) · (samples × 7 bands) matrix product
-    per Arrow batch, no FFT library). The DuckDB oracle replays the SAME
+    closed form — one (14 × samples) cos/sin projection per clip, no FFT
+    library). The DuckDB oracle replays the SAME
     physics: it synthesizes the identical samples analytically (sin/floor
     produce bit-identical doubles across numpy and DuckDB — probed), runs
     the same 7 band-power sums in SQL, and argmaxes per band group.
@@ -12908,35 +12641,24 @@ def q_multimodal_dtmf_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     tone margins) can never flip a compared value."""
     from zio_analytics_spark.operators.multimodal import dtmf_detect, encode_wav
 
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        rows_hz = (697, 770, 852, 941)
-        cols_hz = (1209, 1336, 1477)
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                f1 = rows_hz[i % 4]
-                f2 = cols_hz[(i // 4) % 3]
-                k = np.arange(320, dtype=np.int64)
-                amp = (
-                    np.floor(3000 * np.sin(2 * np.pi * f1 * k / 8000.0))
-                    + np.floor(3000 * np.sin(2 * np.pi * f2 * k / 8000.0))
-                    + ((31 * i + 7 * k) % 201)
-                    - 100
-                ).astype(np.int64)
-                payloads.append(encode_wav(amp, sample_rate=8000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    rows_hz = (697, 770, 852, 941)
+    cols_hz = (1209, 1336, 1477)
 
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return dtmf_detect(payloads)
+    def encode(i):
+        f1 = rows_hz[i % 4]
+        f2 = cols_hz[(i // 4) % 3]
+        k = np.arange(320, dtype=np.int64)
+        amp = (
+            np.floor(3000 * np.sin(2 * np.pi * f1 * k / 8000.0))
+            + np.floor(3000 * np.sin(2 * np.pi * f2 * k / 8000.0))
+            + ((31 * i + 7 * k) % 201)
+            - 100
+        ).astype(np.int64)
+        return [(i, encode_wav(amp, sample_rate=8000))]
+
+    return dtmf_detect(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
 
 @register(
@@ -13066,33 +12788,19 @@ def q_multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction (asserted in test_multimodal)."""
     from zio_analytics_spark.operators.multimodal import encode_y4m, scene_cuts
 
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                s = 3 + i % 4
-                fr = np.zeros((8, 4, 6, 3), dtype=np.uint8)
-                yy, xx = np.mgrid[0:4, 0:6]
-                for f in range(8):
-                    fr[f, :, :, 0] = (i + 3 * xx + 5 * yy + 2 * f) % 100 + (
-                        120 if f >= s else 0
-                    )
-                    fr[f, :, :, 1] = (i + f) % 256
-                    fr[f, :, :, 2] = (2 * i) % 256
-                payloads.append(encode_y4m(fr, 6, 4))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(i):
+        s = 3 + i % 4
+        fr = np.zeros((8, 4, 6, 3), dtype=np.uint8)
+        yy, xx = np.mgrid[0:4, 0:6]
+        for f in range(8):
+            fr[f, :, :, 0] = (i + 3 * xx + 5 * yy + 2 * f) % 100 + (120 if f >= s else 0)
+            fr[f, :, :, 1] = (i + f) % 256
+            fr[f, :, :, 2] = (2 * i) % 256
+        return [(i, encode_y4m(fr, 6, 4))]
 
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
-    return scene_cuts(payloads, threshold=1000)
+    return scene_cuts(_doc_rows(spark, sf_dir, encode, _PAYLOAD), threshold=1000)
 
 
 @register(
@@ -13146,31 +12854,14 @@ def q_multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_resize_box,
     )
 
-    def encode(batches):
-        import pandas as pd
+    def encode(i):
+        def rgb(x, y):
+            return ((i + 3 * x + 7 * y) % 256, (2 * i + 5 * x + y) % 256,
+                    (i + x + 11 * y) % 256)
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 8 * (1 + i % 3), 8 * (1 + i % 2)
+        return [(i, encode_png(8 * (1 + i % 3), 8 * (1 + i % 2), rgb))]
 
-                def rgb(x, y, i=i):
-                    return (
-                        (i + 3 * x + 7 * y) % 256,
-                        (2 * i + 5 * x + y) % 256,
-                        (i + x + 11 * y) % 256,
-                    )
-
-                payloads.append(encode_png(w, h, rgb))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(encode, "doc_id long, payload binary")
+    payloads = _doc_rows(spark, sf_dir, encode, _PAYLOAD)
     return decode_pixel_stats(image_resize_box(payloads, factor=2))
 
 
@@ -14605,40 +14296,52 @@ def q_multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q8 = np.full((8, 8), 8, dtype=np.int32)
 
-    def run(batches):
-        import pandas as pd
+    def run(i):
+        w, h = 13 + i % 9, 11 + i % 7
+        bx, by = np.meshgrid(np.arange(w) // 8, np.arange(h) // 8)
+        img = ((i + 37 * bx + 59 * by) % 256).astype(np.uint8)
+        m = decode_image(encode_jpeg(img, quant_luma=q8))
+        px = m["pixels"][:, :, 0].astype("int64")
+        return [(i, m["width"], m["height"], int(px.sum()), int(px.min()),
+                 int(px.max()), int(px[0, 0]))]
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "width", "height", "sum_px", "min_px", "max_px",
-                "first_px",
-            )}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 13 + i % 9, 11 + i % 7
-                bx, by = np.meshgrid(np.arange(w) // 8, np.arange(h) // 8)
-                img = ((i + 37 * bx + 59 * by) % 256).astype(np.uint8)
-                m = decode_image(encode_jpeg(img, quant_luma=q8))
-                px = m["pixels"][:, :, 0].astype("int64")
-                out["doc_id"].append(i)
-                out["width"].append(m["width"])
-                out["height"].append(m["height"])
-                out["sum_px"].append(int(px.sum()))
-                out["min_px"].append(int(px.min()))
-                out["max_px"].append(int(px.max()))
-                out["first_px"].append(int(px[0, 0]))
-            yield pd.DataFrame(out)
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run,
+    return _doc_rows(
+        spark, sf_dir, run,
         "doc_id long, width int, height int, sum_px long, min_px int, "
         "max_px int, first_px int",
     )
+
+
+def _jpeg_color_rows(progressive: bool) -> Callable:
+    """Per-doc ``(doc_id, sum_r, sum_g, sum_b, first_r)`` of the
+    MCU-constant 4:2:0 color JPEG round trip (multimodal_jpeg_color and
+    its progressive twin). Built as a closure so Spark ships it by value:
+    a module-level function would make every Python worker import this
+    catalog."""
+    import numpy as np
+
+    from zio_analytics_spark.operators.jpeg import encode_jpeg
+    from zio_analytics_spark.operators.multimodal import decode_image
+
+    q8 = np.full((8, 8), 8, dtype=np.int32)
+
+    def run(i):
+        w, h = 13 + i % 9, 11 + i % 7
+        mx, my = np.meshgrid(np.arange(w) // 16, np.arange(h) // 16)
+        img = np.stack([
+            (i + 83 * mx + 29 * my) % 256,
+            (2 * i + 53 * mx + 97 * my) % 256,
+            (3 * i + 41 * mx + 13 * my) % 256,
+        ], axis=2).astype(np.uint8)
+        m = decode_image(encode_jpeg(
+            img, subsampling="4:2:0", quant_luma=q8, quant_chroma=q8,
+            progressive=progressive,
+        ))
+        px = m["pixels"].astype("int64")
+        return [(i, int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
+                 int(px[:, :, 2].sum()), int(px[0, 0, 0]))]
+
+    return run
 
 
 @register(
@@ -14689,45 +14392,9 @@ def q_multimodal_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     double paths, verified over 20k random colors). Odd dims exercise
     MCU pad + crop; multiple MCUs exercise the per-component DC
     prediction chains."""
-    import numpy as np
-
-    from zio_analytics_spark.operators.jpeg import encode_jpeg
-    from zio_analytics_spark.operators.multimodal import decode_image
-
-    q8 = np.full((8, 8), 8, dtype=np.int32)
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sum_r", "sum_g", "sum_b", "first_r")}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 13 + i % 9, 11 + i % 7
-                mx, my = np.meshgrid(np.arange(w) // 16, np.arange(h) // 16)
-                img = np.stack([
-                    (i + 83 * mx + 29 * my) % 256,
-                    (2 * i + 53 * mx + 97 * my) % 256,
-                    (3 * i + 41 * mx + 13 * my) % 256,
-                ], axis=2).astype(np.uint8)
-                m = decode_image(encode_jpeg(
-                    img, subsampling="4:2:0", quant_luma=q8, quant_chroma=q8
-                ))
-                px = m["pixels"].astype("int64")
-                out["doc_id"].append(i)
-                out["sum_r"].append(int(px[:, :, 0].sum()))
-                out["sum_g"].append(int(px[:, :, 1].sum()))
-                out["sum_b"].append(int(px[:, :, 2].sum()))
-                out["first_r"].append(int(px[0, 0, 0]))
-            yield pd.DataFrame(out)
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run, "doc_id long, sum_r long, sum_g long, sum_b long, first_r int"
+    return _doc_rows(
+        spark, sf_dir, _jpeg_color_rows(progressive=False),
+        "doc_id long, sum_r long, sum_g long, sum_b long, first_r int",
     )
 
 
@@ -14762,34 +14429,20 @@ def q_multimodal_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_mp3_meta,
     )
 
-    def run(batches):
-        import pandas as pd
+    def run(i):
+        payload = encode_mp3_frames(
+            bitrate_index=1 + i % 14,
+            samplerate_index=i % 3,
+            n_frames=3 + i % 5,
+            padding=i % 2 == 1,
+            id3_size=(10 + i % 7) if i % 3 == 0 else 0,
+        )
+        m = parse_mp3_meta(payload)
+        keys = ("bitrate_kbps", "sample_rate", "n_frames", "duration_ms", "has_id3")
+        return [(i, *(m[k] for k in keys))]
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "bitrate_kbps", "sample_rate", "n_frames",
-                "duration_ms", "has_id3",
-            )}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                payload = encode_mp3_frames(
-                    bitrate_index=1 + i % 14,
-                    samplerate_index=i % 3,
-                    n_frames=3 + i % 5,
-                    padding=i % 2 == 1,
-                    id3_size=(10 + i % 7) if i % 3 == 0 else 0,
-                )
-                m = parse_mp3_meta(payload)
-                out["doc_id"].append(i)
-                for k in ("bitrate_kbps", "sample_rate", "n_frames",
-                          "duration_ms", "has_id3"):
-                    out[k].append(m[k])
-            yield pd.DataFrame(out)
-
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run,
+    return _doc_rows(
+        spark, sf_dir, run,
         "doc_id long, bitrate_kbps int, sample_rate int, n_frames int, "
         "duration_ms double, has_id3 boolean",
     )
@@ -14831,45 +14484,27 @@ def q_multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle; photometric-0 inversion and reject paths pinned by
     spec-assembled payloads in test_multimodal (the encoder never writes
     them, so they cannot self-certify)."""
-    import numpy as np  # noqa: F401
-
     from zio_analytics_spark.operators.multimodal import decode_image, encode_tiff
 
-    def run(batches):
-        import pandas as pd
+    def run(i):
+        w, h = 5 + i % 6, 4 + i % 5
+        payload = encode_tiff(
+            w, h,
+            lambda x, y: (
+                (i + 11 * x + 17 * y) % 256,
+                (2 * i + 5 * x + 3 * y) % 256,
+                (3 * i + 7 * x + y) % 256,
+            ),
+            byte_order="II" if i % 2 == 0 else "MM",
+            rows_per_strip=1 + i % 3,
+        )
+        m = decode_image(payload)
+        px = m["pixels"].astype("int64")
+        return [(i, m["width"], m["height"], int(px[:, :, 0].sum()),
+                 int(px[:, :, 1].sum()), int(px[:, :, 2].sum()), int(px[0, 0, 0]))]
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "width", "height", "sum_r", "sum_g", "sum_b", "first_r",
-            )}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 5 + i % 6, 4 + i % 5
-                payload = encode_tiff(
-                    w, h,
-                    lambda x, y, i=i: (
-                        (i + 11 * x + 17 * y) % 256,
-                        (2 * i + 5 * x + 3 * y) % 256,
-                        (3 * i + 7 * x + y) % 256,
-                    ),
-                    byte_order="II" if i % 2 == 0 else "MM",
-                    rows_per_strip=1 + i % 3,
-                )
-                m = decode_image(payload)
-                px = m["pixels"].astype("int64")
-                out["doc_id"].append(i)
-                out["width"].append(m["width"])
-                out["height"].append(m["height"])
-                out["sum_r"].append(int(px[:, :, 0].sum()))
-                out["sum_g"].append(int(px[:, :, 1].sum()))
-                out["sum_b"].append(int(px[:, :, 2].sum()))
-                out["first_r"].append(int(px[0, 0, 0]))
-            yield pd.DataFrame(out)
-
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run,
+    return _doc_rows(
+        spark, sf_dir, run,
         "doc_id long, width int, height int, sum_r long, sum_g long, "
         "sum_b long, first_r int",
     )
@@ -14916,39 +14551,26 @@ def q_multimodal_jpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from zio_analytics_spark.operators.jpeg import encode_jpeg, parse_jpeg_meta
 
-    def run(batches):
-        import pandas as pd
+    def run(i):
+        w, h = 16 + i % 9, 16 + i % 7
+        q = 40 + (i % 6) * 10
+        prog = i % 3 == 0
+        if i % 7 == 0:
+            img = np.full((h, w), (i * 5) % 256, dtype=np.uint8)
+            payload = encode_jpeg(img, quality=q, progressive=prog)
+        else:
+            img = np.full((h, w, 3), (i * 5) % 256, dtype=np.uint8)
+            payload = encode_jpeg(
+                img, quality=q, progressive=prog,
+                subsampling="4:2:0" if i % 2 == 0 else "4:4:4",
+            )
+        m = parse_jpeg_meta(payload)
+        keys = ("width", "height", "n_components", "progressive", "sampling",
+                "dqt00", "n_scans")
+        return [(i, *(m[k] for k in keys))]
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "width", "height", "n_components", "progressive",
-                "sampling", "dqt00", "n_scans",
-            )}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 16 + i % 9, 16 + i % 7
-                q = 40 + (i % 6) * 10
-                prog = i % 3 == 0
-                if i % 7 == 0:
-                    img = np.full((h, w), (i * 5) % 256, dtype=np.uint8)
-                    payload = encode_jpeg(img, quality=q, progressive=prog)
-                else:
-                    img = np.full((h, w, 3), (i * 5) % 256, dtype=np.uint8)
-                    payload = encode_jpeg(
-                        img, quality=q, progressive=prog,
-                        subsampling="4:2:0" if i % 2 == 0 else "4:4:4",
-                    )
-                m = parse_jpeg_meta(payload)
-                out["doc_id"].append(i)
-                for k in ("width", "height", "n_components", "progressive",
-                          "sampling", "dqt00", "n_scans"):
-                    out[k].append(m[k])
-            yield pd.DataFrame(out)
-
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run,
+    return _doc_rows(
+        spark, sf_dir, run,
         "doc_id long, width int, height int, n_components int, "
         "progressive boolean, sampling string, dqt00 int, n_scans int",
     )
@@ -14991,47 +14613,56 @@ def q_multimodal_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_jpeg_meta,
     )
 
-    def run(batches):
-        import pandas as pd
+    def run(i):
+        w, h = 16 + i % 9, 16 + i % 7
+        img = np.full((h, w), (i * 5) % 256, dtype=np.uint8)
+        payload = encode_jpeg(img, quality=80)
+        if i % 11 != 0:
+            app1 = encode_exif_app1(
+                orientation=1 + i % 8,
+                datetime=f"2026:08:{1 + i % 28:02d} 12:34:56",
+                make=f"cam-{i % 5}",
+                byte_order="II" if i % 2 == 0 else "MM",
+            )
+            if i % 13 == 0:  # corrupt the TIFF magic inside APP1
+                app1 = bytearray(app1)
+                app1[12] = 0x99
+                app1 = bytes(app1)
+            payload = insert_app1(payload, app1)
+        m = parse_jpeg_meta(payload)
+        keys = ("orientation", "exif_datetime", "exif_make", "width", "height")
+        return [(i, *(m[k] for k in keys))]
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "orientation", "exif_datetime", "exif_make",
-                "width", "height",
-            )}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 16 + i % 9, 16 + i % 7
-                img = np.full((h, w), (i * 5) % 256, dtype=np.uint8)
-                payload = encode_jpeg(img, quality=80)
-                if i % 11 != 0:
-                    app1 = encode_exif_app1(
-                        orientation=1 + i % 8,
-                        datetime=f"2026:08:{1 + i % 28:02d} 12:34:56",
-                        make=f"cam-{i % 5}",
-                        byte_order="II" if i % 2 == 0 else "MM",
-                    )
-                    if i % 13 == 0:  # corrupt the TIFF magic inside APP1
-                        app1 = bytearray(app1)
-                        app1[12] = 0x99
-                        app1 = bytes(app1)
-                    payload = insert_app1(payload, app1)
-                m = parse_jpeg_meta(payload)
-                out["doc_id"].append(i)
-                out["orientation"].append(m["orientation"])
-                out["exif_datetime"].append(m["exif_datetime"])
-                out["exif_make"].append(m["exif_make"])
-                out["width"].append(m["width"])
-                out["height"].append(m["height"])
-            yield pd.DataFrame(out)
-
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run,
+    return _doc_rows(
+        spark, sf_dir, run,
         "doc_id long, orientation int, exif_datetime string, "
         "exif_make string, width int, height int",
     )
+
+
+def _quarantine_rows() -> Callable:
+    """Per-doc ``(doc_id, payload)`` of the planted quarantine mix, by
+    doc_id % 5: three good constant-color BMPs, one GIF cut mid-LZW, one
+    unknown magic (PSD). A closure for the same reason as
+    :func:`_jpeg_color_rows`."""
+    from zio_analytics_spark.operators.multimodal import encode_bmp, encode_gif
+
+    pal = [(i, i, i) for i in range(256)]
+
+    def build(i):
+        cls = i % 5
+        if cls < 3:
+            w, h = 5 + i % 6, 4 + i % 5
+            color = ((i * 7) % 256, (i * 11) % 256, (i * 13) % 256)
+            p = encode_bmp(w, h, lambda x, y: color)
+        elif cls == 3:
+            full = encode_gif(6, 5, lambda x, y: (x + y + i) % 256, pal)
+            p = full[: len(full) // 2]  # cut mid-LZW: corrupt
+        else:
+            p = b"8BPS" + bytes([i % 256]) * 8  # unknown magic (PSD)
+        return [(i, p)]
+
+    return build
 
 
 @register(
@@ -15069,40 +14700,9 @@ def q_multimodal_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFram
     still fail loudly. One Arrow scan; error text kept in the operator
     output but projected off here (message wording is not part of the
     cross-engine contract)."""
-    import numpy as np  # noqa: F401
+    from zio_analytics_spark.operators.multimodal import decode_quarantine
 
-    from zio_analytics_spark.operators.multimodal import (
-        decode_quarantine,
-        encode_bmp,
-        encode_gif,
-    )
-
-    pal = [(i, i, i) for i in range(256)]
-
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                cls = i % 5
-                if cls < 3:
-                    w, h = 5 + i % 6, 4 + i % 5
-                    color = ((i * 7) % 256, (i * 11) % 256, (i * 13) % 256)
-                    p = encode_bmp(w, h, lambda x, y, c=color: c)
-                elif cls == 3:
-                    full = encode_gif(6, 5, lambda x, y, i=i: (x + y + i) % 256, pal)
-                    p = full[: len(full) // 2]  # cut mid-LZW: corrupt
-                else:
-                    p = b"8BPS" + bytes([i % 256]) * 8  # unknown magic (PSD)
-                ids.append(i)
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    payloads = docs.mapInPandas(build, "doc_id long, payload binary")
+    payloads = _doc_rows(spark, sf_dir, _quarantine_rows(), _PAYLOAD)
     out = decode_quarantine(payloads)
     return out.select("doc_id", "ok", "width", "height", "mean_byte")
 
@@ -15139,38 +14739,12 @@ def q_streaming_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame
     Same planted payload mix and analytic oracle as
     multimodal_decode_quarantine; a stateless map over a bounded stream
     is batch-equivalent by construction."""
-    from zio_analytics_spark.operators.multimodal import (
-        decode_quarantine,
-        encode_bmp,
-        encode_gif,
-    )
+    from zio_analytics_spark.operators._rows import map_rows
+    from zio_analytics_spark.operators.multimodal import decode_quarantine
     from zio_analytics_spark.sources.streaming import stream_table
 
-    pal = [(i, i, i) for i in range(256)]
-
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                cls = i % 5
-                if cls < 3:
-                    w, h = 5 + i % 6, 4 + i % 5
-                    color = ((i * 7) % 256, (i * 11) % 256, (i * 13) % 256)
-                    p = encode_bmp(w, h, lambda x, y, c=color: c)
-                elif cls == 3:
-                    full = encode_gif(6, 5, lambda x, y, i=i: (x + y + i) % 256, pal)
-                    p = full[: len(full) // 2]
-                else:
-                    p = b"8BPS" + bytes([i % 256]) * 8  # unknown magic (PSD)
-                ids.append(i)
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
     st = stream_table(spark, sf_dir, "documents").select("doc_id")
-    payloads = st.mapInPandas(build, "doc_id long, payload binary")
+    payloads = map_rows(st, _quarantine_rows(), _PAYLOAD)
     out = decode_quarantine(payloads).select(
         "doc_id", "ok", "width", "height", "mean_byte"
     )
@@ -15227,43 +14801,9 @@ def q_multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame
     against baseline across a quality sweep in test_jpeg. Closes the
     web-corpus ingest gap the round-8 seam left: progressive is the
     default output of many web image processors."""
-    import numpy as np
-
-    from zio_analytics_spark.operators.jpeg import encode_jpeg
-    from zio_analytics_spark.operators.multimodal import decode_image
-
-    q8 = np.full((8, 8), 8, dtype=np.int32)
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sum_r", "sum_g", "sum_b", "first_r")}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 13 + i % 9, 11 + i % 7
-                mx, my = np.meshgrid(np.arange(w) // 16, np.arange(h) // 16)
-                img = np.stack([
-                    (i + 83 * mx + 29 * my) % 256,
-                    (2 * i + 53 * mx + 97 * my) % 256,
-                    (3 * i + 41 * mx + 13 * my) % 256,
-                ], axis=2).astype(np.uint8)
-                m = decode_image(encode_jpeg(
-                    img, subsampling="4:2:0", quant_luma=q8, quant_chroma=q8,
-                    progressive=True,
-                ))
-                px = m["pixels"].astype("int64")
-                out["doc_id"].append(i)
-                out["sum_r"].append(int(px[:, :, 0].sum()))
-                out["sum_g"].append(int(px[:, :, 1].sum()))
-                out["sum_b"].append(int(px[:, :, 2].sum()))
-                out["first_r"].append(int(px[0, 0, 0]))
-            yield pd.DataFrame(out)
-
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run, "doc_id long, sum_r long, sum_g long, sum_b long, first_r int"
+    return _doc_rows(
+        spark, sf_dir, _jpeg_color_rows(progressive=True),
+        "doc_id long, sum_r long, sum_g long, sum_b long, first_r int",
     )
 
 
@@ -15313,35 +14853,18 @@ def q_multimodal_jpeg_coeffs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q1 = np.ones((8, 8), dtype=np.int32)
 
-    def run(batches):
-        import pandas as pd
+    def run(i):
+        coef = np.zeros((1, 1, 8, 8), dtype=np.int32)
+        coef[0, 0, 0, 0] = (i % 48) - 24
+        coef[0, 0, 0, 1] = 7
+        coef[0, 0, 2, 0] = -5
+        coef[0, 0, 5, 3] = 1 + i % 5
+        coef[0, 0, 7, 7] = 3
+        m = decode_jpeg(encode_jpeg_coefficients(8, 8, coef, q1))
+        px = m["pixels"][:, :, 0].astype("int64")
+        return [(i, int(px.sum()), int(px.min()), int(px.max()))]
 
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sum_px", "min_px", "max_px")}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                coef = np.zeros((1, 1, 8, 8), dtype=np.int32)
-                coef[0, 0, 0, 0] = (i % 48) - 24
-                coef[0, 0, 0, 1] = 7
-                coef[0, 0, 2, 0] = -5
-                coef[0, 0, 5, 3] = 1 + i % 5
-                coef[0, 0, 7, 7] = 3
-                m = decode_jpeg(encode_jpeg_coefficients(8, 8, coef, q1))
-                px = m["pixels"][:, :, 0].astype("int64")
-                out["doc_id"].append(i)
-                out["sum_px"].append(int(px.sum()))
-                out["min_px"].append(int(px.min()))
-                out["max_px"].append(int(px.max()))
-            yield pd.DataFrame(out)
-
-    # single-file parquet = ONE input partition: fan the per-doc
-    # codec work out across cores before the Arrow stage (round-7
-    # lesson; on a cluster this is the decode fan-out over executors)
-    docs = (read_table(spark, sf_dir, "documents")
-            .select("doc_id").transform(_fan_out))
-    return docs.mapInPandas(
-        run, "doc_id long, sum_px long, min_px int, max_px int"
-    )
+    return _doc_rows(spark, sf_dir, run, "doc_id long, sum_px long, min_px int, max_px int")
 
 
 def _wordpiece_oracle_ctes(n_merges: int) -> list:
@@ -15895,23 +15418,13 @@ def q_text_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle here)."""
     from zio_analytics_spark.operators.charset import transcode
 
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    def synth(i, text):
+        cs, label, salt = _WARC_CS_SPEC[i % 3]
+        return [(i, f"{text} {salt}".encode(cs), f"text/plain; charset={label}")]
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "payload": [], "content_type": []}
-            for r in pdf.itertuples(index=False):
-                i = int(r.doc_id)
-                cs, label, salt = _WARC_CS_SPEC[i % 3]
-                out["doc_id"].append(i)
-                out["payload"].append(f"{r.text} {salt}".encode(cs))
-                out["content_type"].append(f"text/plain; charset={label}")
-            yield pd.DataFrame(out)
-
-    payloads = docs.transform(_fan_out).mapInPandas(
-        synth, "doc_id long, payload binary, content_type string"
+    payloads = _doc_rows(
+        spark, sf_dir, synth, "doc_id long, payload binary, content_type string",
+        cols=("doc_id", "text"),
     )
     out = transcode(payloads, content_type_col="content_type")
     return out.select(

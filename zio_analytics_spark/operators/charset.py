@@ -32,8 +32,10 @@ Rows recovered below their declaration (rungs 3-4 after a declaration
 existed, or rung 4 at all) carry ``ok = false`` + the reason — the
 triage lane; ``ok`` rows are clean-lane text for the HTML/cleaning tier.
 
-Scale shape: the codec work is the same Arrow ``mapInPandas`` task-grain
-seam as the multimodal decoders — payload bytes never cross an exchange,
+Scale shape: :func:`transcode` is one per-row function through
+:func:`~zio_analytics_spark.operators._rows.map_rows`, the same Arrow
+``mapInPandas`` stage as the multimodal decoders — payload bytes never
+cross an exchange,
 Python's built-in codecs are C-backed, output is text-sized. The sniff
 itself reads O(1 KB) per row.
 
@@ -46,11 +48,10 @@ from __future__ import annotations
 
 import codecs
 import re
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from zio_analytics_spark.operators._rows import map_rows
 
 __all__ = ["CHARSET_ALIASES", "sniff_charset", "decode_text", "transcode"]
 
@@ -184,21 +185,9 @@ def transcode(
     bytes never leave the task."""
     cols = [id_col, bin_col] + ([content_type_col] if content_type_col else [])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cts = pdf[content_type_col] if content_type_col else None
-            out = {k: [] for k in ("id", "text", "charset", "ok", "error")}
-            for j, (i, p) in enumerate(zip(pdf[id_col], pdf[bin_col])):
-                ct = None if cts is None else cts.iloc[j]
-                text, used, err = decode_text(bytes(p), ct)
-                out["id"].append(i)
-                out["text"].append(text)
-                out["charset"].append(used)
-                out["ok"].append(err is None)
-                out["error"].append(err)
-            yield pd.DataFrame(
-                {id_col if k == "id" else k: v for k, v in out.items()}
-            )
+    def decode(i, p, ct=None):
+        text, used, err = decode_text(bytes(p), ct)
+        return [(i, text, used, err is None, err)]
 
     schema = f"{id_col} long, text string, charset string, ok boolean, error string"
-    return df.select(*cols).mapInPandas(run, schema)
+    return map_rows(df.select(*cols), decode, schema)

@@ -169,9 +169,7 @@ def _char_shingle_arrow(
     def shingle(batches):
         from hashlib import blake2b
 
-        memo: dict = {}
-
-        def h(g: str) -> int:
+        def h(memo: dict, g: str) -> int:
             v = memo.get(g)
             if v is None:
                 v = int.from_bytes(
@@ -183,12 +181,15 @@ def _char_shingle_arrow(
             return v
 
         for pdf in batches:
+            # gram→id memo per Arrow batch: bounded by the batch's text
+            # (maxRecordsPerBatch docs), never by the whole task's vocabulary
+            memo: dict = {}
             keep, out_sh, out_sz = [], [], []
             for i, t in enumerate(pdf[text_col]):
                 if t is None or len(t) < k:
                     continue
                 grams = dict.fromkeys(t[j : j + k] for j in range(len(t) - k + 1))
-                out_sh.append([h(g) for g in grams])
+                out_sh.append([h(memo, g) for g in grams])
                 out_sz.append(len(grams))
                 keep.append(i)
             if not keep:
@@ -221,7 +222,7 @@ def _shingle_table(
         # the nested transform() lambdas (substr per position, then a hash
         # per gram) are CodegenFallback and evaluate INTERPRETED per
         # character position; one mapInPandas slices/dedups/hashes each
-        # text with a per-task gram→hash memo (the dense regime's tiny
+        # text with a per-batch gram→hash memo (the dense regime's tiny
         # vocabulary makes hashing ~free). Shingle ids switch from
         # xxhash64(gram) to blake2b-64(gram) — both deterministic 64-bit
         # with the same 2^-64 collision acceptance; no declared output

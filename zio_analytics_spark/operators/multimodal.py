@@ -5,8 +5,10 @@ The decode stage is REAL for the formats a pure-Python parser can own:
 uncompressed 24-bit BMP (BI_RGB), binary PPM (P6), GIF87a/89a (palette +
 REAL spec LZW: 9→12-bit code growth, clear-code resets, sub-block
 framing), and — compression included — PNG (stdlib ``zlib`` inflate + the
-five scanline unfilters, 8-bit gray/RGB/RGBA), inside the Arrow-batched
-``mapInPandas`` seam.
+five scanline unfilters, 8-bit gray/RGB/RGBA). Every DataFrame stage here
+is one per-payload function run through
+:func:`~zio_analytics_spark.operators._rows.map_rows` — one Arrow
+``mapInPandas`` scan, payload bytes never leave the task.
 Codecs that genuinely need external libraries (JPEG/MP3/H.264) stay
 behind the same seam as a documented ``ValueError``: swap ``decode_image``
 for a PIL/libvips call and nothing else changes.
@@ -25,15 +27,15 @@ decode stage so pruning happens at the parquet scan.
 from __future__ import annotations
 
 import struct
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from zio_analytics_spark.operators._codec_guard import corrupt_guard
+from zio_analytics_spark.operators._rows import map_rows
 
 __all__ = [
     "attach_binary",
@@ -539,38 +541,20 @@ def decode_quarantine(
     ``mapInPandas`` scan, payload bytes never leave the task, output is
     metadata-sized either way."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "id", "ok", "width", "height", "mode", "mean_byte", "error",
-            )}
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                out["id"].append(i)
-                try:
-                    m = decode_image(p)
-                    px = m["pixels"]
-                    out["ok"].append(True)
-                    out["width"].append(m["width"])
-                    out["height"].append(m["height"])
-                    out["mode"].append(m["mode"])
-                    out["mean_byte"].append(
-                        float(int(px.sum(dtype=np.int64))) / px.size
-                    )
-                    out["error"].append(None)
-                except ValueError as e:
-                    out["ok"].append(False)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["mode"].append(None)
-                    out["mean_byte"].append(None)
-                    out["error"].append(str(e))
-            yield pd.DataFrame({id_col if k == "id" else k: v for k, v in out.items()})
+    def quarantine(i, p):
+        try:
+            m = decode_image(p)
+        except ValueError as e:
+            return [(i, False, None, None, None, None, str(e))]
+        px = m["pixels"]
+        mean = float(int(px.sum(dtype=np.int64))) / px.size
+        return [(i, True, m["width"], m["height"], m["mode"], mean, None)]
 
     schema = (
         f"{id_col} long, ok boolean, width int, height int, mode string, "
         "mean_byte double, error string"
     )
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), quarantine, schema)
 
 
 def decode_pixel_stats(
@@ -585,28 +569,19 @@ def decode_pixel_stats(
     catches row-order/padding/offset parser bugs that order-insensitive
     stats would miss."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "width", "height", "n_pixels", "mean_byte", "min_byte", "max_byte", "first_px")}
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                m = decode_image(p)
-                px = m["pixels"]
-                out["id"].append(i)
-                out["width"].append(m["width"])
-                out["height"].append(m["height"])
-                out["n_pixels"].append(m["width"] * m["height"])
-                # exact int sum, one double division: bitwise-reproducible
-                out["mean_byte"].append(float(int(px.sum(dtype=np.int64))) / px.size)
-                out["min_byte"].append(int(px.min()))
-                out["max_byte"].append(int(px.max()))
-                out["first_px"].append(int(px[0, 0, 0]))
-            yield pd.DataFrame({id_col if k == "id" else k: v for k, v in out.items()})
+    def stats(i, p):
+        m = decode_image(p)
+        px = m["pixels"]
+        w, h = m["width"], m["height"]
+        # exact int sum, one double division: bitwise-reproducible
+        mean = float(int(px.sum(dtype=np.int64))) / px.size
+        return [(i, w, h, w * h, mean, int(px.min()), int(px.max()), int(px[0, 0, 0]))]
 
     schema = (
         f"{id_col} long, width int, height int, n_pixels long, "
         "mean_byte double, min_byte int, max_byte int, first_px int"
     )
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), stats, schema)
 
 
 def decode_image_stub(payload: bytes) -> dict:
@@ -639,27 +614,17 @@ def map_decode(
     out_schema: str = "doc_id long, width int, height int, mode string",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Arrow-batched decode stage: ``mapInPandas`` over (id, payload) batches.
-
-    This is the real plumbing a decode/feature-extract/resize stage uses —
-    batch iterator in, batch iterator out, metadata-only output schema so
-    payload bytes don't round-trip through Python unless requested.
+    """Arrow-batched decode stage: one ``decode(payload)`` per (id, payload)
+    row through :func:`~zio_analytics_spark.operators._rows.map_rows`, with
+    a metadata-only output schema so payload bytes don't round-trip
+    through Python unless requested.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decode(p) for p in pdf[bin_col]]
-            out = pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "mode": [m["mode"] for m in metas],
-                }
-            )
-            yield out
+    def meta(i, p):
+        m = decode(p)
+        return [(i, m["width"], m["height"], m["mode"])]
 
-    return df.select(id_col, bin_col).mapInPandas(run, out_schema)
+    return map_rows(df.select(id_col, bin_col), meta, out_schema)
 
 
 def encode_wav(samples: "np.ndarray", sample_rate: int = 8000) -> bytes:
@@ -879,29 +844,20 @@ def decode_audio_stats(
     offset the way ``first_px`` does for images; ``mean_amp`` uses an
     exact integer sum with one double division (bitwise-reproducible)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "id", "sample_rate", "n_samples", "duration_ms",
-                "mean_amp", "max_abs", "first_sample",
-            )}
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                m = decode_audio(p)
-                s = m["samples"][:, 0].astype(np.int64)
-                out["id"].append(i)
-                out["sample_rate"].append(m["sample_rate"])
-                out["n_samples"].append(len(s))
-                out["duration_ms"].append(len(s) * 1000.0 / m["sample_rate"])
-                out["mean_amp"].append(float(int(s.sum())) / len(s))
-                out["max_abs"].append(int(np.abs(s).max()))
-                out["first_sample"].append(int(s[0]))
-            yield pd.DataFrame({id_col if k == "id" else k: v for k, v in out.items()})
+    def stats(i, p):
+        m = decode_audio(p)
+        s = m["samples"][:, 0].astype(np.int64)
+        rate = m["sample_rate"]
+        return [(
+            i, rate, len(s), len(s) * 1000.0 / rate,
+            float(int(s.sum())) / len(s), int(np.abs(s).max()), int(s[0]),
+        )]
 
     schema = (
         f"{id_col} long, sample_rate int, n_samples long, duration_ms double, "
         "mean_amp double, max_abs int, first_sample int"
     )
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), stats, schema)
 
 
 def encode_y4m(
@@ -973,30 +929,21 @@ def sample_frame_stats(
     frames only — ``first_luma`` (frame 0, top-left Y) pins plane order
     and frame offsets the way first_px/first_sample do for image/audio."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "id", "width", "height", "n_frames", "n_sampled",
-                "mean_luma", "first_luma",
-            )}
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                m = decode_video(p)
-                sampled = m["frames"][::every_k]
-                y = sampled[:, :, :, 0].astype(np.int64)
-                out["id"].append(i)
-                out["width"].append(m["width"])
-                out["height"].append(m["height"])
-                out["n_frames"].append(m["n_frames"])
-                out["n_sampled"].append(len(sampled))
-                out["mean_luma"].append(float(int(y.sum())) / y.size if y.size else None)
-                out["first_luma"].append(int(y[0, 0, 0]) if y.size else None)
-            yield pd.DataFrame({id_col if k == "id" else k: v for k, v in out.items()})
+    def stats(i, p):
+        m = decode_video(p)
+        sampled = m["frames"][::every_k]
+        y = sampled[:, :, :, 0].astype(np.int64)
+        return [(
+            i, m["width"], m["height"], m["n_frames"], len(sampled),
+            float(int(y.sum())) / y.size if y.size else None,
+            int(y[0, 0, 0]) if y.size else None,
+        )]
 
     schema = (
         f"{id_col} long, width int, height int, n_frames int, n_sampled int, "
         "mean_luma double, first_luma int"
     )
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), stats, schema)
 
 
 def _exif_upright(px: "np.ndarray", payload: bytes) -> "np.ndarray":
@@ -1070,38 +1017,30 @@ def perceptual_ahash(
         # while n_bits_set still counted it — reject rather than corrupt.
         raise ValueError("grid*grid must be even (odd bit counts don't pack)")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "width", "height", "ahash", "n_bits_set")}
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                m = decode_image(p)
-                # EXIF-orientation normalization BEFORE hashing: rotated
-                # duplicates must fingerprint identically (verdict r9 #3)
-                px = _exif_upright(m["pixels"], p).astype(np.int64)
-                h, w = px.shape[0], px.shape[1]
-                if h % grid or w % grid:
-                    raise ValueError(
-                        f"aHash exact-integer contract needs dims divisible by "
-                        f"{grid}, got {w}x{h} — resize upstream"
-                    )
-                gray = 299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]
-                bh, bw = h // grid, w // grid
-                blocks = gray.reshape(grid, bh, grid, bw).sum(axis=(1, 3))
-                total = int(gray.sum())
-                bits = (blocks * (grid * grid) >= total).flatten()
-                half = (grid * grid) // 2
-                hi = sum(1 << (half - 1 - k) for k in range(half) if bits[k])
-                lo = sum(1 << (half - 1 - k) for k in range(half) if bits[half + k])
-                width_hex = (half + 3) // 4
-                out["id"].append(i)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["ahash"].append(f"{hi:0{width_hex}x}{lo:0{width_hex}x}")
-                out["n_bits_set"].append(int(bits.sum()))
-            yield pd.DataFrame({id_col if k == "id" else k: v for k, v in out.items()})
+    def ahash(i, p):
+        m = decode_image(p)
+        # EXIF-orientation normalization BEFORE hashing: rotated
+        # duplicates must fingerprint identically (verdict r9 #3)
+        px = _exif_upright(m["pixels"], p).astype(np.int64)
+        h, w = px.shape[0], px.shape[1]
+        if h % grid or w % grid:
+            raise ValueError(
+                f"aHash exact-integer contract needs dims divisible by "
+                f"{grid}, got {w}x{h} — resize upstream"
+            )
+        gray = 299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]
+        bh, bw = h // grid, w // grid
+        blocks = gray.reshape(grid, bh, grid, bw).sum(axis=(1, 3))
+        total = int(gray.sum())
+        bits = (blocks * (grid * grid) >= total).flatten()
+        half = (grid * grid) // 2
+        hi = sum(1 << (half - 1 - k) for k in range(half) if bits[k])
+        lo = sum(1 << (half - 1 - k) for k in range(half) if bits[half + k])
+        width_hex = (half + 3) // 4
+        return [(i, w, h, f"{hi:0{width_hex}x}{lo:0{width_hex}x}", int(bits.sum()))]
 
     schema = f"{id_col} long, width int, height int, ahash string, n_bits_set long"
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), ahash, schema)
 
 
 def audio_frame_features(
@@ -1131,27 +1070,20 @@ def audio_frame_features(
     if frame_len < 2:
         raise ValueError("frame_len must be >= 2")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frames, energy, zcr, peak = [], [], [], [], []
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                m = decode_audio(p)
-                s = m["samples"][:, 0].astype(np.int64)
-                nf = len(s) // frame_len
-                if nf == 0:
-                    continue
-                fr = s[: nf * frame_len].reshape(nf, frame_len)
-                ids.extend([i] * nf)
-                frames.extend(range(nf))
-                energy.extend((fr * fr).sum(axis=1).tolist())
-                zcr.extend((fr[:, 1:] * fr[:, :-1] < 0).sum(axis=1).tolist())
-                peak.extend(np.abs(fr).max(axis=1).tolist())
-            yield pd.DataFrame(
-                {id_col: ids, "frame": frames, "energy": energy, "zcr": zcr, "peak": peak}
-            )
+    def features(i, p):
+        s = decode_audio(p)["samples"][:, 0].astype(np.int64)
+        nf = len(s) // frame_len
+        fr = s[: nf * frame_len].reshape(nf, frame_len)
+        return zip(
+            [i] * nf,
+            range(nf),
+            (fr * fr).sum(axis=1).tolist(),
+            (fr[:, 1:] * fr[:, :-1] < 0).sum(axis=1).tolist(),
+            np.abs(fr).max(axis=1).tolist(),
+        )
 
     schema = f"{id_col} long, frame int, energy long, zcr int, peak int"
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), features, schema)
 
 
 #: DTMF keypad: row tones × column tones → dialed symbol (ITU-T Q.23 —
@@ -1170,9 +1102,10 @@ def dtmf_detect(
     """DTMF tone detection — per-band spectral energy via the single-bin
     DFT (the Goertzel filter's closed form: ``P_f = (Σ x_k·cos ω_f k)² +
     (Σ x_k·sin ω_f k)²``), the classic telephony-decoding / tone-keying
-    task and the simplest REAL spectral front end: no FFT library, just a
-    (n_clips × n_samples) · (n_samples × 7-band) matrix product per Arrow
-    batch.
+    task and the simplest REAL spectral front end: no FFT library, just
+    one (14 × n_samples) · (n_samples) projection per clip — a cos and a
+    sin row for each of the 7 bands, built from the clip's own length and
+    sample rate.
 
     REAL decode via :func:`decode_audio` (mono channel 0, the clip's own
     sample rate), then the 4 row-tone + 3 column-tone band powers; the
@@ -1187,34 +1120,25 @@ def dtmf_detect(
     One mapInPandas scan, payload bytes never leave the task — the same
     decode-grain seam as :func:`audio_frame_features`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, row_hz, col_hz, digits = [], [], [], []
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                m = decode_audio(p)
-                s = m["samples"][:, 0].astype(np.float64)
-                k = np.arange(len(s), dtype=np.float64)
-                w = 2.0 * np.pi * k / float(m["sample_rate"])
-                basis = np.concatenate(
-                    [
-                        np.stack([fn(f * w) for f in DTMF_ROW_HZ + DTMF_COL_HZ])
-                        for fn in (np.cos, np.sin)
-                    ]
-                )  # (14, n): 7 cos rows then 7 sin rows
-                proj = basis @ s
-                powers = proj[:7] ** 2 + proj[7:] ** 2
-                r = int(np.argmax(powers[:4]))
-                c = int(np.argmax(powers[4:]))
-                ids.append(i)
-                row_hz.append(DTMF_ROW_HZ[r])
-                col_hz.append(DTMF_COL_HZ[c])
-                digits.append(_DTMF_KEYPAD[r * 4 + c])
-            yield pd.DataFrame(
-                {id_col: ids, "row_hz": row_hz, "col_hz": col_hz, "digit": digits}
-            )
+    def detect(i, p):
+        m = decode_audio(p)
+        s = m["samples"][:, 0].astype(np.float64)
+        k = np.arange(len(s), dtype=np.float64)
+        w = 2.0 * np.pi * k / float(m["sample_rate"])
+        basis = np.concatenate(
+            [
+                np.stack([trig(f * w) for f in DTMF_ROW_HZ + DTMF_COL_HZ])
+                for trig in (np.cos, np.sin)
+            ]
+        )  # (14, n): 7 cos rows then 7 sin rows
+        proj = basis @ s
+        powers = proj[:7] ** 2 + proj[7:] ** 2
+        r = int(np.argmax(powers[:4]))
+        c = int(np.argmax(powers[4:]))
+        return [(i, DTMF_ROW_HZ[r], DTMF_COL_HZ[c], _DTMF_KEYPAD[r * 4 + c])]
 
     schema = f"{id_col} long, row_hz int, col_hz int, digit string"
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), detect, schema)
 
 
 def scene_cuts(
@@ -1238,24 +1162,22 @@ def scene_cuts(
     Compressed codecs stay behind the decode seam; a histogram- or
     edge-based detector plugs into the same SAD slot."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frames, sads = [], [], []
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                m = decode_video(p)
-                luma = m["frames"][:, :, :, 0].astype(np.int64)
-                if len(luma) < 2:
-                    continue
-                sad = np.abs(np.diff(luma, axis=0)).sum(axis=(1, 2))
-                ids.extend([i] * len(sad))
-                frames.extend(range(1, len(sad) + 1))
-                sads.extend(sad.tolist())
-            out = pd.DataFrame({id_col: ids, "frame": frames, "sad": sads})
-            out["is_cut"] = out["sad"] >= threshold
-            yield out
+    def cuts(i, p):
+        luma = decode_video(p)["frames"][:, :, :, 0].astype(np.int64)
+        return _sad_rows(i, luma, threshold)
 
     schema = f"{id_col} long, frame int, sad long, is_cut boolean"
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), cuts, schema)
+
+
+def _sad_rows(i, luma: "np.ndarray", threshold: int) -> list[tuple]:
+    """``(i, frame, sad, is_cut)`` per consecutive pair of the (n, h, w)
+    luma stack, ``frame`` the 1-based index of the later frame; fewer
+    than two frames give no rows."""
+    if len(luma) < 2:
+        return []
+    sad = np.abs(np.diff(luma, axis=0)).sum(axis=(1, 2)).tolist()
+    return [(i, k, v, v >= threshold) for k, v in enumerate(sad, 1)]
 
 
 def image_resize_box(
@@ -1283,38 +1205,27 @@ def image_resize_box(
     if factor < 1:
         raise ValueError("factor must be >= 1")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, payloads = [], [], [], []
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                m = decode_image(p)
-                px = m["pixels"].astype(np.int64)
-                h, w = px.shape[0], px.shape[1]
-                nh, nw = h // factor, w // factor
-                if nh == 0 or nw == 0:
-                    continue
-                blocks = px[: nh * factor, : nw * factor].reshape(
-                    nh, factor, nw, factor, px.shape[2]
-                )
-                small = (blocks.sum(axis=(1, 3)) // (factor * factor)).astype(np.uint8)
-                ids.append(i)
-                ws.append(nw)
-                hs.append(nh)
-                payloads.append(
-                    encode_png(
-                        nw,
-                        nh,
-                        lambda x, y, s=small: tuple(int(v) for v in s[y, x, :3]),
-                        color_type=2,
-                        filter_cycle=False,
-                    )
-                )
-            yield pd.DataFrame(
-                {id_col: ids, "width": ws, "height": hs, "payload": payloads}
-            )
+    def resize(i, p):
+        px = decode_image(p)["pixels"].astype(np.int64)
+        h, w = px.shape[0], px.shape[1]
+        nh, nw = h // factor, w // factor
+        if nh == 0 or nw == 0:
+            return []
+        blocks = px[: nh * factor, : nw * factor].reshape(
+            nh, factor, nw, factor, px.shape[2]
+        )
+        small = (blocks.sum(axis=(1, 3)) // (factor * factor)).astype(np.uint8)
+        payload = encode_png(
+            nw,
+            nh,
+            lambda x, y: tuple(int(v) for v in small[y, x, :3]),
+            color_type=2,
+            filter_cycle=False,
+        )
+        return [(i, nw, nh, payload)]
 
     schema = f"{id_col} long, width int, height int, payload binary"
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), resize, schema)
 
 
 # --- GIF (round-8): palette + LZW, the third real still-image codec ---------
@@ -1718,31 +1629,22 @@ def gif_scene_cuts(
     frames never leave the task; one row per transition ``(id, frame,
     sad, is_cut)``; single-frame GIFs emit no rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frames, sads = [], [], []
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                fs = decode_gif_composited(p)
-                if len(fs) < 2:
-                    continue
-                luma = np.stack(
-                    [
-                        299 * f["pixels"][:, :, 0].astype(np.int64)
-                        + 587 * f["pixels"][:, :, 1].astype(np.int64)
-                        + 114 * f["pixels"][:, :, 2].astype(np.int64)
-                        for f in fs
-                    ]
-                )
-                sad = np.abs(np.diff(luma, axis=0)).sum(axis=(1, 2))
-                ids.extend([i] * len(sad))
-                frames.extend(range(1, len(sad) + 1))
-                sads.extend(sad.tolist())
-            out = pd.DataFrame({id_col: ids, "frame": frames, "sad": sads})
-            out["is_cut"] = out["sad"] >= threshold
-            yield out
+    def cuts(i, p):
+        fs = decode_gif_composited(p)
+        if len(fs) < 2:
+            return []
+        luma = np.stack(
+            [
+                299 * f["pixels"][:, :, 0].astype(np.int64)
+                + 587 * f["pixels"][:, :, 1].astype(np.int64)
+                + 114 * f["pixels"][:, :, 2].astype(np.int64)
+                for f in fs
+            ]
+        )
+        return _sad_rows(i, luma, threshold)
 
     schema = f"{id_col} long, frame int, sad long, is_cut boolean"
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), cuts, schema)
 
 
 def encode_tiff(

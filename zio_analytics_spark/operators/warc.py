@@ -19,8 +19,10 @@ codecs (multimodal.py):
 - **O(bytes) single pass** per file: headers parse with one find of the
   blank line; the block is sliced by Content-Length, never scanned.
 - **Arrow seam**: :func:`warc_records` explodes file bytes → one row per
-  record inside ``mapInPandas``; payload bytes never cross an exchange,
-  the output carries only headers + the (much smaller) response body.
+  record through :func:`~zio_analytics_spark.operators._rows.map_rows`
+  (one ``mapInPandas`` scan, as every DataFrame stage here); payload
+  bytes never cross an exchange, the output carries only headers + the
+  (much smaller) response body.
 - **Quarantine, not stage death**: a truncated gzip member or malformed
   header yields ONE ``ok = false`` row with the reason; in gzip-member
   mode the walk RESYNCS at the next member (that is what per-record
@@ -48,12 +50,11 @@ import gzip
 import zlib
 from collections.abc import Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from zio_analytics_spark.operators._codec_guard import corrupt_guard
+from zio_analytics_spark.operators._rows import map_rows
 from zio_analytics_spark.operators.charset import decode_text
 
 __all__ = [
@@ -244,60 +245,45 @@ def warc_records(
     corrupt-member/tail reason with everything else NULL. One Arrow
     ``mapInPandas`` scan (module docstring scale shape)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keys = (
-            "id", "rec_idx", "ok", "warc_type", "target_uri", "warc_date",
-            "content_type", "http_status", "http_content_type",
-            "http_location", "body", "error",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in keys}
+    keys = (
+        "ok", "warc_type", "target_uri", "warc_date", "content_type",
+        "http_status", "http_content_type", "http_location", "body", "error",
+    )
 
-            def emit(i, idx, **kw):
-                row = dict.fromkeys(keys)
-                row.update({"id": i, "rec_idx": idx, **kw})
-                for k in keys:
-                    out[k].append(row[k])
-
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                for idx, (st, headers, block, err) in enumerate(
-                    parse_warc_records(bytes(p))
+    def records(i, p):
+        for idx, (st, headers, block, err) in enumerate(
+            parse_warc_records(bytes(p))
+        ):
+            if st == "err":
+                rec = dict(ok=False, error=err)
+            else:
+                ct = headers.get("content-type", "")
+                rec = dict(
+                    ok=True,
+                    warc_type=headers.get("warc-type"),
+                    target_uri=headers.get("warc-target-uri"),
+                    warc_date=headers.get("warc-date"),
+                    content_type=ct,
+                    body=block,
+                )
+                # only response records hold an HTTP *response*; a
+                # request record's block (request line + headers) is
+                # valid WARC content and stays raw, not quarantine
+                if (
+                    ct.split(";")[0].strip() == "application/http"
+                    and headers.get("warc-type") == "response"
                 ):
-                    if st == "err":
-                        emit(i, idx, ok=False, error=err)
-                        continue
-                    ct = headers.get("content-type", "")
-                    rec = dict(
-                        ok=True,
-                        warc_type=headers.get("warc-type"),
-                        target_uri=headers.get("warc-target-uri"),
-                        warc_date=headers.get("warc-date"),
-                        content_type=ct,
-                    )
-                    # only response records hold an HTTP *response*; a
-                    # request record's block (request line + headers) is
-                    # valid WARC content and stays raw, not quarantine
-                    if (
-                        ct.split(";")[0].strip() == "application/http"
-                        and headers.get("warc-type") == "response"
-                    ):
-                        try:
-                            status, hh, body = parse_http_response(block)
-                            rec.update(
-                                http_status=status,
-                                http_content_type=hh.get("content-type"),
-                                http_location=hh.get("location"),
-                                body=body,
-                            )
-                        except ValueError as e:
-                            emit(i, idx, ok=False, error=str(e))
-                            continue
-                    else:
-                        rec["body"] = block
-                    emit(i, idx, **rec)
-            yield pd.DataFrame(
-                {id_col if k == "id" else k: v for k, v in out.items()}
-            )
+                    try:
+                        status, hh, body = parse_http_response(block)
+                        rec.update(
+                            http_status=status,
+                            http_content_type=hh.get("content-type"),
+                            http_location=hh.get("location"),
+                            body=body,
+                        )
+                    except ValueError as e:
+                        rec = dict(ok=False, error=str(e))
+            yield (i, idx, *(rec.get(k) for k in keys))
 
     schema = (
         f"{id_col} long, rec_idx int, ok boolean, warc_type string, "
@@ -305,7 +291,7 @@ def warc_records(
         "http_status int, http_content_type string, http_location string, "
         "body binary, error string"
     )
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), records, schema)
 
 
 def warc_html_lane(
@@ -333,35 +319,22 @@ def warc_html_lane(
         & F.col("http_content_type").startswith("text/html")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "id", "rec_idx", "target_uri", "http_status", "html",
-                "charset", "ok",
-            )}
-            for row in pdf.itertuples(index=False):
-                text, used, err = decode_text(
-                    bytes(row.body), row.http_content_type
-                )
-                out["id"].append(getattr(row, id_col))
-                out["rec_idx"].append(row.rec_idx)
-                out["target_uri"].append(row.target_uri)
-                out["http_status"].append(row.http_status)
-                out["html"].append(text)
-                out["charset"].append(used)
-                out["ok"].append(err is None)
-            yield pd.DataFrame(
-                {id_col if k == "id" else k: v for k, v in out.items()}
-            )
+    def decode(i, idx, uri, status, content_type, body):
+        text, used, err = decode_text(bytes(body), content_type)
+        return [(i, idx, uri, status, text, used, err is None)]
 
     schema = (
         f"{id_col} long, rec_idx int, target_uri string, http_status int, "
         "html string, charset string, ok boolean"
     )
-    return html_recs.select(
-        id_col, "rec_idx", "target_uri", "http_status",
-        "http_content_type", "body",
-    ).mapInPandas(run, schema)
+    return map_rows(
+        html_recs.select(
+            id_col, "rec_idx", "target_uri", "http_status",
+            "http_content_type", "body",
+        ),
+        decode,
+        schema,
+    )
 
 
 # ---------------------------------------------------------------------
@@ -471,22 +444,14 @@ def warc_cdx(
     result by ``surt_key_expr(target_uri)`` downstream to get the
     classic host-clustered CDX ordering."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keys = (
-            "id", "rec_idx", "ok", "warc_type", "target_uri", "ts", "mime",
-            "http_status", "redirect", "digest", "offset", "length", "error",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in keys}
-            for i, p in zip(pdf[id_col], pdf[bin_col]):
-                for idx, r in enumerate(parse_warc_cdx(bytes(p))):
-                    out["id"].append(i)
-                    out["rec_idx"].append(idx)
-                    for k in keys[2:]:
-                        out[k].append(r.get(k))
-            yield pd.DataFrame(
-                {id_col if k == "id" else k: v for k, v in out.items()}
-            )
+    keys = (
+        "ok", "warc_type", "target_uri", "ts", "mime", "http_status",
+        "redirect", "digest", "offset", "length", "error",
+    )
+
+    def index(i, p):
+        for idx, r in enumerate(parse_warc_cdx(bytes(p))):
+            yield (i, idx, *(r.get(k) for k in keys))
 
     schema = (
         f"{id_col} long, rec_idx int, ok boolean, warc_type string, "
@@ -494,7 +459,7 @@ def warc_cdx(
         "redirect string, digest string, offset long, length long, "
         "error string"
     )
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, bin_col), index, schema)
 
 
 def recrawl_delta(
@@ -566,48 +531,37 @@ def fetch_member_records(
     )
     todo = files.join(F.broadcast(span_lists), id_col, "inner")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gzip as _gzip
-
-        keys = ("id", "offset", "warc_type", "target_uri", "http_status", "body")
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in keys}
-            for fid, content, sp in zip(pdf[id_col], pdf[bin_col], pdf["__spans"]):
-                buf = bytes(content)
-                for span in sp:
-                    off, ln = int(span["offset"]), int(span["length"])
-                    member = buf[off : off + ln]
-                    data = (
-                        _gzip.decompress(member)
-                        if member[:2] == b"\x1f\x8b"
-                        else member
-                    )
-                    for st, headers, block, _err in _walk_raw(data):
-                        if st != "ok":
-                            continue
-                        body = block
-                        status = None
-                        ct = headers.get("content-type", "")
-                        if (
-                            ct.split(";")[0].strip() == "application/http"
-                            and headers.get("warc-type") == "response"
-                        ):
-                            try:
-                                status, _hh, body = parse_http_response(block)
-                            except ValueError:
-                                continue
-                        out["id"].append(fid)
-                        out["offset"].append(off)
-                        out["warc_type"].append(headers.get("warc-type"))
-                        out["target_uri"].append(headers.get("warc-target-uri"))
-                        out["http_status"].append(status)
-                        out["body"].append(body)
-            yield pd.DataFrame(
-                {id_col if k == "id" else k: v for k, v in out.items()}
+    def replay(fid, content, sp):
+        buf = bytes(content)
+        for span in sp:
+            off, ln = int(span["offset"]), int(span["length"])
+            member = buf[off : off + ln]
+            data = (
+                gzip.decompress(member)
+                if member[:2] == b"\x1f\x8b"
+                else member
             )
+            for st, headers, block, _err in _walk_raw(data):
+                if st != "ok":
+                    continue
+                body = block
+                status = None
+                ct = headers.get("content-type", "")
+                if (
+                    ct.split(";")[0].strip() == "application/http"
+                    and headers.get("warc-type") == "response"
+                ):
+                    try:
+                        status, _hh, body = parse_http_response(block)
+                    except ValueError:
+                        continue
+                yield (
+                    fid, off, headers.get("warc-type"),
+                    headers.get("warc-target-uri"), status, body,
+                )
 
     schema = (
         f"{id_col} long, offset long, warc_type string, "
         "target_uri string, http_status int, body binary"
     )
-    return todo.select(id_col, bin_col, "__spans").mapInPandas(run, schema)
+    return map_rows(todo.select(id_col, bin_col, "__spans"), replay, schema)

@@ -9,6 +9,5 @@ translation layer (DataStream methods) over ``readStream`` frames.
 from zio_analytics_spark.streaming.drive import drive, to_memory
 from zio_analytics_spark.streaming.joins import interval_join
 from zio_analytics_spark.streaming.stateful import map_accumulate_stream
-from zio_analytics_spark.streaming.windowed import windowed_counts
 
-__all__ = ["drive", "interval_join", "map_accumulate_stream", "to_memory", "windowed_counts"]
+__all__ = ["drive", "interval_join", "map_accumulate_stream", "to_memory"]

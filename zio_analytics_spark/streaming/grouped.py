@@ -3,7 +3,7 @@
 DataStream.scala:51-56) on the STREAMING runtime, for assigners whose fold
 native streaming aggregates cannot express.
 
-Native streaming windowed aggs (streaming/windowed.py) cover incremental
+Native streaming windowed aggs (``DataStream.fold_window``) cover incremental
 folds with O(1) state per (key, window). The GENERAL fold — arbitrary
 Python over the whole group — needs the group materialized, exactly as the
 reference's ``Fold`` does (Local.scala:170-174); here the buffer lives in
