@@ -167,7 +167,8 @@ def main() -> None:
         head_runs.append(run_timed(catalog.bench_queries().items(), isolate=True))
     calib_samples.append(round(calib_probe(), 3))
     # Janino compiles over the headline reps: the first rep compiles the
-    # set's ~200 classes, later reps should hit the generated-code cache
+    # set's ~200 classes, later reps should hit the generated-code cache;
+    # jit_compile_s is the JVM's JIT compile time over the same reps
     codegen = {
         k: round(v - codegen_before[k], 3) for k, v in codegen_stats(spark).items()
     }

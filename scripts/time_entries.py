@@ -3,6 +3,8 @@ of the named catalog entries, with cache cleared between entries — the same
 adjudication protocol bench.py uses for at-risk entries (guide §1.4).
 
 Usage: python scripts/time_entries.py q1 q2 ...  [--reps N] [--json PATH]
+The --json record also carries the timed region's compile counters
+(``session.codegen_stats`` deltas: Janino compiles and seconds, JIT seconds).
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 """
 
@@ -15,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from zio_analytics_spark import catalog  # noqa: E402
-from zio_analytics_spark.session import get_spark  # noqa: E402
+from zio_analytics_spark.session import codegen_stats, get_spark  # noqa: E402
 
 
 def main() -> int:
@@ -57,6 +59,7 @@ def main() -> int:
 
     fns = catalog.queries()
     out = {}
+    compile_before = codegen_stats(spark)
     for name in args:
         spark.sparkContext.setJobDescription(f"time_entries: {name}")
         samples = []
@@ -68,9 +71,13 @@ def main() -> int:
             samples.append(round(time.perf_counter() - t0, 3))
         out[name] = {"median": round(statistics.median(samples), 3), "reps": samples}
         print(f"{name}: median {out[name]['median']:.3f}s  reps {samples}")
+    # Janino and JIT compile time over the timed region (fields only)
+    compiles = {
+        k: round(v - compile_before[k], 3) for k, v in codegen_stats(spark).items()
+    }
     if json_path:
         with open(json_path, "w") as f:
-            json.dump({"sf_dir": sf_dir, "measured": out}, f, indent=1)
+            json.dump({"sf_dir": sf_dir, "measured": out, **compiles}, f, indent=1)
     return 0
 
 

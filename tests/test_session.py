@@ -1,8 +1,9 @@
 """Local-mode session sizing: shuffle partitions follow the master's core
 count and the driver heap follows physical memory, unless the caller sets
-them; the generated-code cache holds a repeated multi-entry pass. The shared
-test session pins 8 partitions, so the end-to-end check runs in a fresh
-interpreter."""
+them; the generated-code cache holds a repeated multi-entry pass; the driver
+JVM starts with raised C2 compile thresholds. The shared test session pins 8
+partitions and JVM flags only apply at JVM start, so the end-to-end checks
+run in fresh interpreters."""
 
 from __future__ import annotations
 
@@ -17,6 +18,44 @@ from zio_analytics_spark.session import codegen_stats, local_driver_memory
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# The JIT policy: ten times JDK 17's C2 thresholds of 5000 / 600 / 15000 / 40000
+POLICY = {
+    "Tier4InvocationThreshold": 50000,
+    "Tier4MinInvocationThreshold": 6000,
+    "Tier4CompileThreshold": 150000,
+    "Tier4BackEdgeThreshold": 400000,
+}
+
+
+def _fresh_session(body: str, **env_overrides: str) -> dict:
+    """Run ``body`` (which builds its own sessions) in a fresh interpreter,
+    so a new driver JVM starts, and return the JSON object it prints last."""
+    code = (
+        "import json, sys; sys.path.insert(0, %r)\n"
+        "from zio_analytics_spark.session import codegen_stats, get_spark\n"
+        % REPO
+    ) + body
+    env = dict(os.environ, SPARK_LOCAL_MODE="1", **env_overrides)
+    env.pop("SPARK_DRIVER_MEMORY", None)
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+# Reads the driver JVM's live values of the C2 thresholds
+_READ_TIER4 = (
+    "jvm = spark.sparkContext._jvm\n"
+    "bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(\n"
+    "    jvm.java.lang.Class.forName('com.sun.management.HotSpotDiagnosticMXBean'))\n"
+    "rec = {f: int(bean.getVMOption(f).getValue()) for f in %r}\n"
+    "rec['jit_compile_s'] = codegen_stats(spark)['jit_compile_s']\n"
+    "spark.stop()\n"
+    "print(json.dumps(rec))\n" % (list(POLICY),)
+)
+
 
 def test_driver_memory_is_half_of_physical_capped():
     gib = 1 << 30
@@ -27,9 +66,7 @@ def test_driver_memory_is_half_of_physical_capped():
 
 
 def test_fresh_local_session_sizes_to_its_cores():
-    code = (
-        "import json, sys; sys.path.insert(0, %r)\n"
-        "from zio_analytics_spark.session import get_spark\n"
+    rec = _fresh_session(
         "spark = get_spark('sizing')\n"
         "sc = spark.sparkContext\n"
         "rec = {'dp': sc.defaultParallelism,\n"
@@ -39,20 +76,30 @@ def test_fresh_local_session_sizes_to_its_cores():
         "spark = get_spark('sizing', extra_conf={'spark.sql.shuffle.partitions': '5'})\n"
         "rec['explicit'] = spark.conf.get('spark.sql.shuffle.partitions')\n"
         "spark.stop()\n"
-        "print(json.dumps(rec))\n" % REPO
+        "print(json.dumps(rec))\n",
+        SPARK_GRAFT_CPUS="3",
     )
-    env = dict(os.environ, SPARK_GRAFT_CPUS="3", SPARK_LOCAL_MODE="1")
-    env.pop("SPARK_DRIVER_MEMORY", None)
-    out = subprocess.run(
-        [sys.executable, "-c", code], env=env, capture_output=True, text=True,
-        timeout=300,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    rec = json.loads(out.stdout.strip().splitlines()[-1])
     assert rec == {
         "dp": 3, "parts": "3", "mem": local_driver_memory(), "explicit": "5",
         "codegen_cap": "4096",
     }
+
+
+def test_fresh_local_jvm_raises_c2_thresholds():
+    rec = _fresh_session("spark = get_spark('jit')\n" + _READ_TIER4)
+    assert rec.pop("jit_compile_s") > 0
+    assert rec == POLICY
+
+
+def test_caller_java_options_win_flag_by_flag():
+    """``spark.driver.extraJavaOptions`` comes after the policy on the JVM
+    command line, so the caller's flag wins and the others keep the policy."""
+    rec = _fresh_session(
+        "spark = get_spark('jit', extra_conf={'spark.driver.extraJavaOptions':"
+        " '-XX:Tier4InvocationThreshold=7000'})\n" + _READ_TIER4
+    )
+    rec.pop("jit_compile_s")
+    assert rec == {**POLICY, "Tier4InvocationThreshold": 7000}
 
 
 def test_repeated_plans_reuse_generated_code(spark):

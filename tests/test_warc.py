@@ -162,6 +162,20 @@ def test_html_lane_charset_and_routing(spark):
     assert all(r["ok"] for r in out.values())
 
 
+def test_html_lane_media_type_is_case_insensitive(spark):
+    """``Text/HTML`` is the same media type as ``text/html`` (RFC 9110
+    §8.3.1), so both responses reach the lane."""
+    recs = [
+        _response("https://ex.org/lower", b"<p>a</p>", "text/html"),
+        _response("https://ex.org/mixed", b"<p>b</p>", "Text/HTML; charset=utf-8"),
+    ]
+    df = spark.createDataFrame(
+        [(3, bytearray(encode_warc(recs)))], "file_id long, content binary"
+    )
+    out = {r["target_uri"]: r["html"] for r in warc_html_lane(df).collect()}
+    assert out == {"https://ex.org/lower": "<p>a</p>", "https://ex.org/mixed": "<p>b</p>"}
+
+
 def test_html_lane_feeds_extraction(spark):
     """End-to-end composition: WARC bytes → html lane → html_text_expr —
     the llm_pipeline_v4 head on a crafted fixture."""

@@ -14344,9 +14344,9 @@ def _jpeg_color_rows(progressive: bool) -> Callable:
     return run
 
 
-@register(
-    "multimodal_jpeg_color",
-    oracle="""
+# The analytic YCbCr round trip, shared by the baseline and progressive
+# entries (progressive re-encodes the identical quantized coefficients)
+_JPEG_COLOR_ORACLE = """
     WITH dims AS (
       SELECT doc_id, 13 + doc_id % 9 AS w, 11 + doc_id % 7 AS h FROM documents
     ), xs AS (
@@ -14378,8 +14378,10 @@ def _jpeg_color_rows(progressive: bool) -> Callable:
            sum(b)::BIGINT AS sum_b,
            max(r * (x = 0 AND y = 0)::INT)::INT AS first_r
     FROM rgb GROUP BY doc_id
-    """,
-)
+    """
+
+
+@register("multimodal_jpeg_color", oracle=_JPEG_COLOR_ORACLE)
 def q_multimodal_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL 4:2:0 color JPEG path — RGB→YCbCr, 2×2 chroma subsample,
     per-plane FDCT/quant/Huffman, then decode with dequant, IDCT, box
@@ -14665,9 +14667,9 @@ def _quarantine_rows() -> Callable:
     return build
 
 
-@register(
-    "multimodal_decode_quarantine",
-    oracle="""
+# The planted payload mix's analytic decode stats, shared by the batch and
+# streaming entries (a stateless map over a bounded stream is batch-equivalent)
+_QUARANTINE_ORACLE = """
     WITH d AS (
       SELECT doc_id, doc_id % 5 AS cls,
              5 + doc_id % 6 AS w, 4 + doc_id % 5 AS h,
@@ -14683,8 +14685,10 @@ def _quarantine_rows() -> Callable:
                 THEN ((w * h) * (r + g + b))::DOUBLE / ((w * h) * 3)
            END AS mean_byte
     FROM d
-    """,
-)
+    """
+
+
+@register("multimodal_decode_quarantine", oracle=_QUARANTINE_ORACLE)
 def q_multimodal_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fault-isolating ingest decode (multimodal.decode_quarantine): the
     operator a 100 TB scrape actually needs — corrupt or unsupported
@@ -14707,26 +14711,7 @@ def q_multimodal_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFram
     return out.select("doc_id", "ok", "width", "height", "mean_byte")
 
 
-@register(
-    "streaming_decode_quarantine",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id, doc_id % 5 AS cls,
-             5 + doc_id % 6 AS w, 4 + doc_id % 5 AS h,
-             (doc_id * 7) % 256 AS r, (doc_id * 11) % 256 AS g,
-             (doc_id * 13) % 256 AS b
-      FROM documents
-    )
-    SELECT doc_id,
-           (cls < 3) AS ok,
-           CASE WHEN cls < 3 THEN w END::INT AS width,
-           CASE WHEN cls < 3 THEN h END::INT AS height,
-           CASE WHEN cls < 3
-                THEN ((w * h) * (r + g + b))::DOUBLE / ((w * h) * 3)
-           END AS mean_byte
-    FROM d
-    """,
-)
+@register("streaming_decode_quarantine", oracle=_QUARANTINE_ORACLE)
 def q_streaming_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quarantine decode on the STREAMING runtime — the first
     multimodal streaming entry, and the shape a live scrape-ingest
@@ -14751,42 +14736,7 @@ def q_streaming_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame
     return to_memory(out, "append", "stream_quarantine")
 
 
-@register(
-    "multimodal_jpeg_progressive",
-    oracle="""
-    WITH dims AS (
-      SELECT doc_id, 13 + doc_id % 9 AS w, 11 + doc_id % 7 AS h FROM documents
-    ), xs AS (
-      SELECT doc_id, w, h, unnest(range(0, w)) AS x FROM dims
-    ), px AS (
-      SELECT doc_id, w, h, x, unnest(range(0, h)) AS y FROM xs
-    ), src AS (
-      SELECT doc_id, x, y,
-             ((doc_id + 83 * (x // 16) + 29 * (y // 16)) % 256)::DOUBLE AS r0,
-             ((2 * doc_id + 53 * (x // 16) + 97 * (y // 16)) % 256)::DOUBLE AS g0,
-             ((3 * doc_id + 41 * (x // 16) + 13 * (y // 16)) % 256)::DOUBLE AS b0
-      FROM px
-    ), ycc AS (
-      SELECT doc_id, x, y,
-             floor(0.299 * r0 + 0.587 * g0 + 0.114 * b0 + 0.5) AS yv,
-             floor(128 - 0.168736 * r0 - 0.331264 * g0 + 0.5 * b0 + 0.5) AS cb,
-             floor(128 + 0.5 * r0 - 0.418688 * g0 - 0.081312 * b0 + 0.5) AS cr
-      FROM src
-    ), rgb AS (
-      SELECT doc_id, x, y,
-        least(greatest(floor(yv + 1.402 * (cr - 128) + 0.5), 0), 255) AS r,
-        least(greatest(floor(yv - 0.344136 * (cb - 128)
-                             - 0.714136 * (cr - 128) + 0.5), 0), 255) AS g,
-        least(greatest(floor(yv + 1.772 * (cb - 128) + 0.5), 0), 255) AS b
-      FROM ycc
-    )
-    SELECT doc_id,
-           sum(r)::BIGINT AS sum_r, sum(g)::BIGINT AS sum_g,
-           sum(b)::BIGINT AS sum_b,
-           max(r * (x = 0 AND y = 0)::INT)::INT AS first_r
-    FROM rgb GROUP BY doc_id
-    """,
-)
+@register("multimodal_jpeg_progressive", oracle=_JPEG_COLOR_ORACLE)
 def q_multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROGRESSIVE JPEG (SOF2, T.81 Annex G) end to end: the same
     MCU-constant 4:2:0 color construction as multimodal_jpeg_color, but

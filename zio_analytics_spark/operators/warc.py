@@ -300,7 +300,8 @@ def warc_html_lane(
     id_col: str = "file_id",
 ) -> DataFrame:
     """The composed ingest head: WARC bytes → ``response`` records with
-    an HTML content-type → charset-decoded page text column.
+    an HTML content-type (matched case-insensitively) → charset-decoded
+    page text column.
 
     Output ``(id, rec_idx, target_uri, http_status, html, charset,
     ok)`` — ``html`` ready for ``html.html_text_expr`` /
@@ -313,10 +314,11 @@ def warc_html_lane(
     recs = warc_records(df, bin_col=bin_col, id_col=id_col)
     from pyspark.sql import functions as F
 
+    # media types are case-insensitive (RFC 9110 §8.3.1): Text/HTML is HTML
     html_recs = recs.where(
         F.col("ok")
         & (F.col("warc_type") == "response")
-        & F.col("http_content_type").startswith("text/html")
+        & F.lower(F.col("http_content_type")).startswith("text/html")
     )
 
     def decode(i, idx, uri, status, content_type, body):
