@@ -2960,3 +2960,23 @@ def test_compact_small_incremental(spark, tmp_path):
     )
     lake.compact_small(spark, t, small_bytes=1)  # nothing qualifies
     assert files_now <= set(lake.snapshot(t).files)
+
+
+def test_stage_writes_leave_no_success_marker(spark, tmp_path, monkeypatch):
+    """When the data and deletion-vector stages are dropped, all that is
+    left of them is the published part files' checksums: the committer
+    wrote no `_SUCCESS` marker."""
+    staged = []
+    rmtree = lake.shutil.rmtree
+
+    def record_stage(path, *args, **kwargs):
+        if os.path.basename(path).startswith("_stage-"):
+            staged.extend(n for _, _, names in os.walk(path) for n in names)
+        rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(lake.shutil, "rmtree", record_stage)
+    t = str(tmp_path / "t")
+    lake.create_table(_orders(spark, 100), t, key_cols=["k"])
+    lake.delete_where(spark, t, "k % 10 = 3", deletion_vectors=True)
+    assert staged
+    assert [n for n in staged if not n.startswith(".part-")] == []

@@ -1,9 +1,10 @@
 """Local-mode session sizing: shuffle partitions follow the master's core
 count and the driver heap follows physical memory, unless the caller sets
 them; the generated-code cache holds a repeated multi-entry pass; the driver
-JVM starts with raised C2 compile thresholds. The shared test session pins 8
-partitions and JVM flags only apply at JVM start, so the end-to-end checks
-run in fresh interpreters."""
+JVM starts with raised C2 compile thresholds; stream checkpoints go through
+Hadoop's FileSystem API. The shared test session pins 8 partitions and JVM
+flags only apply at JVM start, so the end-to-end checks run in fresh
+interpreters."""
 
 from __future__ import annotations
 
@@ -12,9 +13,15 @@ import os
 import subprocess
 import sys
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from zio_analytics_spark.session import codegen_stats, local_driver_memory
+from zio_analytics_spark.session import (
+    LOCAL_CHECKPOINT_FILE_MANAGER,
+    codegen_stats,
+    local_driver_memory,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -35,7 +42,7 @@ def _fresh_session(body: str, **env_overrides: str) -> dict:
         "from zio_analytics_spark.session import codegen_stats, get_spark\n"
         % REPO
     ) + body
-    env = dict(os.environ, SPARK_LOCAL_MODE="1", **env_overrides)
+    env = {**os.environ, "SPARK_LOCAL_MODE": "1", **env_overrides}
     env.pop("SPARK_DRIVER_MEMORY", None)
     out = subprocess.run(
         [sys.executable, "-c", code], env=env, capture_output=True, text=True,
@@ -100,6 +107,63 @@ def test_caller_java_options_win_flag_by_flag():
     )
     rec.pop("jit_compile_s")
     assert rec == {**POLICY, "Tier4InvocationThreshold": 7000}
+
+
+def _checkpoint_manager(spark, path: str):
+    """The checkpoint manager Spark builds for ``path`` under the session's
+    Hadoop conf, as a stream's offset, commit and state-store logs get it."""
+    jvm = spark.sparkContext._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(path),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+
+
+def test_local_checkpoints_use_filesystem_manager(spark, tmp_path):
+    """Local checkpoints rename through Hadoop's FileSystem API; an atomic
+    create keeps Spark's contract: without overwrite, closing onto an
+    existing file raises. With overwrite the attempt is best effort and must
+    not raise: ``FileSystem.rename`` never replaces a file, so the first
+    complete file stays (Spark asks for overwrite on state-store files,
+    which a replayed batch rewrites for the same version)."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == LOCAL_CHECKPOINT_FILE_MANAGER
+    manager = _checkpoint_manager(spark, str(tmp_path))
+    assert manager.getClass().getName() == LOCAL_CHECKPOINT_FILE_MANAGER
+
+    target = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
+        str(tmp_path / "log")
+    )
+
+    def write(data: bytes, overwrite: bool) -> None:
+        out = manager.createAtomic(target, overwrite)
+        out.write(data)
+        out.close()
+
+    write(b"first", False)
+    with pytest.raises(Py4JJavaError, match="destination already exists"):
+        write(b"second", False)
+    assert (tmp_path / "log").read_bytes() == b"first"
+    write(b"third", True)
+    assert (tmp_path / "log").read_bytes() == b"first"
+
+
+def test_cluster_session_keeps_spark_checkpoint_manager(tmp_path):
+    """Outside local mode Spark's own FileContext-based manager stays."""
+    rec = _fresh_session(
+        "sys.path.insert(0, %r)\n" % os.path.join(REPO, "tests")
+        + "from test_session import _checkpoint_manager\n"
+        "spark = get_spark('cluster')\n"
+        "rec = {'conf': spark.conf.get("
+        "'spark.sql.streaming.checkpointFileManagerClass', None),\n"
+        "       'manager': _checkpoint_manager(spark, %r)"
+        ".getClass().getSimpleName()}\n"
+        "spark.stop()\n"
+        "print(json.dumps(rec))\n" % str(tmp_path),
+        SPARK_LOCAL_MODE="0",
+    )
+    assert rec == {"conf": None, "manager": "FileContextBasedCheckpointFileManager"}
 
 
 def test_repeated_plans_reuse_generated_code(spark):

@@ -3715,14 +3715,11 @@ def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot silently survive a broken predictor. The reference has no
     multimodal tier ([EXT]); unlike BMP/PPM this path proves the decode
     seam handles real compression with zero new dependencies."""
+    from zio_analytics_spark.operators._pattern import rgb_pattern
     from zio_analytics_spark.operators.multimodal import decode_pixel_stats, encode_png
 
     def encode(i):
-        def rgb(x, y):
-            return ((i + 3 * x + 7 * y) % 256, (2 * i + 5 * x + y) % 256,
-                    (i + x + 11 * y) % 256)
-
-        return [(i, encode_png(4 + i % 5, 5 + i % 3, rgb))]
+        return [(i, encode_png(4 + i % 5, 5 + i % 3, rgb_pattern(i)))]
 
     return decode_pixel_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
@@ -3763,14 +3760,13 @@ def q_multimodal_png_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry — Adam7 changes byte layout, never pixel values — so a
     scatter/geometry bug in any of the seven passes shifts first_px or
     the stats and hash-mismatches."""
+    from zio_analytics_spark.operators._pattern import rgb_pattern
     from zio_analytics_spark.operators.multimodal import decode_pixel_stats, encode_png
 
     def encode(i):
-        def rgb(x, y):
-            return ((i + 3 * x + 7 * y) % 256, (2 * i + 5 * x + y) % 256,
-                    (i + x + 11 * y) % 256)
-
-        return [(i, encode_png(4 + i % 9, 5 + i % 7, rgb, interlace=True))]
+        return [
+            (i, encode_png(4 + i % 9, 5 + i % 7, rgb_pattern(i), interlace=True))
+        ]
 
     return decode_pixel_stats(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
@@ -12332,14 +12328,11 @@ def q_multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hex analytically from the pixel formulas. This is the IMAGE near-dup
     fingerprint tier: downstream candidate blocking over these 64 bits is
     exactly dedup_simhash's Hamming-band machinery."""
+    from zio_analytics_spark.operators._pattern import rgb_pattern
     from zio_analytics_spark.operators.multimodal import encode_png, perceptual_ahash
 
     def encode(i):
-        def rgb(x, y):
-            return ((i + 3 * x + 7 * y) % 256, (2 * i + 5 * x + y) % 256,
-                    (i + x + 11 * y) % 256)
-
-        return [(i, encode_png(8 * (1 + i % 3), 8 * (1 + i % 2), rgb))]
+        return [(i, encode_png(8 * (1 + i % 3), 8 * (1 + i % 2), rgb_pattern(i)))]
 
     return perceptual_ahash(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
 
@@ -12399,14 +12392,11 @@ def q_dedup_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(XOR) on the two 32-bit halves, all codegen. The oracle is
     the naive all-pairs distance join over distinct hashes, so the gate
     proves the banding loses nothing."""
+    from zio_analytics_spark.operators._pattern import rgb_pattern
     from zio_analytics_spark.operators.multimodal import encode_png, perceptual_ahash
 
     def encode(i):
-        def rgb(x, y):
-            return ((i + 3 * x + 7 * y) % 256, (2 * i + 5 * x + y) % 256,
-                    (i + x + 11 * y) % 256)
-
-        return [(i, encode_png(8 * (1 + i % 3), 8 * (1 + i % 2), rgb))]
+        return [(i, encode_png(8 * (1 + i % 3), 8 * (1 + i % 2), rgb_pattern(i)))]
 
     hashed = perceptual_ahash(_doc_rows(spark, sf_dir, encode, _PAYLOAD))
     groups = hashed.groupBy("ahash").agg(
@@ -12848,6 +12838,7 @@ def q_multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec. Integer arithmetic end to end, so the DuckDB oracle predicts
     every stat of the RESIZED image (mean/min/max byte, top-left red)
     analytically from the source pixel formulas."""
+    from zio_analytics_spark.operators._pattern import rgb_pattern
     from zio_analytics_spark.operators.multimodal import (
         decode_pixel_stats,
         encode_png,
@@ -12855,11 +12846,7 @@ def q_multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def encode(i):
-        def rgb(x, y):
-            return ((i + 3 * x + 7 * y) % 256, (2 * i + 5 * x + y) % 256,
-                    (i + x + 11 * y) % 256)
-
-        return [(i, encode_png(8 * (1 + i % 3), 8 * (1 + i % 2), rgb))]
+        return [(i, encode_png(8 * (1 + i % 3), 8 * (1 + i % 2), rgb_pattern(i)))]
 
     payloads = _doc_rows(spark, sf_dir, encode, _PAYLOAD)
     return decode_pixel_stats(image_resize_box(payloads, factor=2))

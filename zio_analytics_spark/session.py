@@ -40,6 +40,29 @@ host; the other settings are also the right defaults on a real cluster:
   sets ``defaultJavaOptions`` replaces the policy. JVM flags apply at JVM
   start: a reused session keeps the ones it started with.
   :func:`codegen_stats` reports the JVM's total JIT compile time.
+- Local-mode stream checkpoints: Spark's FileSystem-based checkpoint
+  manager (:data:`LOCAL_CHECKPOINT_FILE_MANAGER`) instead of its default
+  FileContext one. Without libhadoop (``NativeIO`` unavailable) each
+  FileContext rename asks ``RawLocalFileSystem`` for the destination's link
+  status, which forks ``readlink`` through Hadoop's ``Shell``, and every
+  micro-batch renames its offsets, commit, state-store deltas and state
+  checksum files into place. Both managers write a temp file and rename it
+  with the same existence check; ``.crc`` sidecars and Spark's checkpoint
+  checksums stay on. One difference: ``FileSystem.rename`` never replaces a
+  file, so an "overwrite if possible" create onto an existing file keeps
+  the existing one and leaves its temp file behind. Spark's contract makes
+  that overwrite best effort; it asks for it on state-store files, which a
+  replayed batch rewrites for the same version.
+  Measured on 4 vCPUs (``perfbench`` ``stream_events``, 10 s, 10
+  alternating pairs): per trigger, state-store commit 0.29-0.36 s ->
+  0.02 s, WAL and offset commits 0.03-0.046 s -> 0.01 s each; process
+  clones per run 2,922 -> 1,151 and reaped-child CPU about 3.8 -> 2.0 s;
+  the measured region's CPU a median 9.14 -> 8.48 s (-7%).
+  The ``chmod`` forks remain: ``RawLocalFileSystem.setPermission`` falls
+  back to ``Shell`` for every created file (and its ``.crc``) whenever
+  ``NativeIO`` is missing, and no conf changes that. Cluster mode is
+  unchanged: its checkpoints live on a shared file system whose FileContext
+  rename is the primitive Spark expects. An ``extra_conf`` value wins.
 - UTC session timezone so results are comparable with the (UTC-naive) DuckDB
   oracle and deterministic across deployments.
 - Arrow enabled so the Pandas-UDF escape hatches are vectorized.
@@ -51,7 +74,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_CONFIG", "LOCAL_JIT_OPTIONS", "codegen_stats"]
+__all__ = [
+    "get_spark",
+    "DEFAULT_CONFIG",
+    "LOCAL_JIT_OPTIONS",
+    "LOCAL_CHECKPOINT_FILE_MANAGER",
+    "codegen_stats",
+]
 
 DEFAULT_CONFIG: dict[str, str] = {
     # AQE's starting value on a cluster; local mode resizes it (see module doc)
@@ -77,6 +106,13 @@ DEFAULT_CONFIG: dict[str, str] = {
 LOCAL_JIT_OPTIONS = (
     "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
     "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
+
+# Local-mode stream checkpoints: Hadoop FileSystem renames instead of
+# FileContext ones, which fork `readlink` without libhadoop (module doc)
+LOCAL_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
 )
 
 
@@ -106,7 +142,10 @@ def get_spark(
         builder = builder.config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY") or local_driver_memory(),
-        ).config("spark.driver.defaultJavaOptions", LOCAL_JIT_OPTIONS)
+        ).config("spark.driver.defaultJavaOptions", LOCAL_JIT_OPTIONS).config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            LOCAL_CHECKPOINT_FILE_MANAGER,
+        )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

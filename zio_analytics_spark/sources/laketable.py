@@ -751,6 +751,11 @@ def _parse_partition(rel: str, schema: dict) -> dict:
     return values
 
 
+# Stage writers publish only the part files and then delete the stage, so
+# the committer's `_SUCCESS` marker (and its `.crc`) is never read
+_NO_SUCCESS_MARKER = ("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+
+
 def _stage_files(
     df: DataFrame,
     table: str,
@@ -791,7 +796,7 @@ def _stage_files(
         )
     partition_by = list(partition_by)
     stage = os.path.join(table, f"_stage-{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
+    writer = df.write.mode("overwrite").option(*_NO_SUCCESS_MARKER)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(stage)
@@ -1507,7 +1512,9 @@ def _publish_dv_parts(positions: DataFrame, table: str, dv_rel: str) -> bool:
     no parts (empty input)."""
     storage = get_storage()
     stage = os.path.join(table, f"_stage-{uuid.uuid4().hex}")
-    positions.select("file", "pos").write.mode("overwrite").parquet(stage)
+    positions.select("file", "pos").write.mode("overwrite").option(
+        *_NO_SUCCESS_MARKER
+    ).parquet(stage)
     published = False
     for dirpath, _dirs, names in os.walk(stage):
         for name in names:
@@ -2725,7 +2732,8 @@ def table_changes(
 
 def committed_batch_ids(table: str) -> set:
     """Batch ids recorded by :func:`append_stream_batch` commits — the
-    idempotence ledger a streaming writer consults on restart."""
+    idempotence ledger a streaming writer consults on restart. It reads
+    every commit file in the log on each call, whoever wrote it."""
     commits, _ = _list_log(table)
     storage = get_storage()
     out = set()
@@ -2738,13 +2746,17 @@ def committed_batch_ids(table: str) -> set:
 
 
 def append_stream_batch(df: DataFrame, table: str, batch_id: int) -> int | None:
-    """EXACTLY-ONCE streaming sink half (use inside ``foreachBatch``):
+    """Idempotent streaming sink half (use inside ``foreachBatch``):
     Structured Streaming replays the last micro-batch after a failure,
     so a blind append would double its rows. The batch id rides in the
-    commitInfo line; a replayed batch whose id is already in the log is
-    skipped (returns None). This is the published transactional-sink
-    discipline (txn app/version in the table log) on this module's
-    commit protocol."""
+    commitInfo line, and a batch whose id any earlier commit recorded is
+    skipped (returns None). The ledger is not scoped to a writer: a second
+    query appending to the same table, or this query restarted on a fresh
+    checkpoint (its batch ids start again at 0), has its batches skipped
+    too. Each call reads every commit file in the log
+    (:func:`committed_batch_ids`), so a stream's ledger cost grows with the
+    table's versions. The planned fix, a per-writer ``txn`` (app id,
+    version) action held in the snapshot, is item 2 of ROADMAP.md."""
     if batch_id in committed_batch_ids(table):
         return None
     for _ in range(8):
