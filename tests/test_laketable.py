@@ -725,6 +725,79 @@ def test_storage_seam_routes_all_protocol_io(spark, tmp_path):
         assert spy.calls[op] > 0, f"{op} bypassed the storage seam"
 
 
+def test_bounded_replay_reads_each_log_file_once(spark, tmp_path):
+    """Bounded-replay I/O, counted at the storage seam: with a v10
+    checkpoint, a snapshot reads the checkpoint and each tail commit
+    once; MERGE pruning and partition overwrite past the checkpoint read
+    no commit it covers; CDF admission control reads each commit it
+    walks once."""
+    from collections import Counter
+
+    from zio_analytics_spark.sources.lakestream import _LakeCDFStreamReader
+
+    class Spy(lake.LocalFSStorage):
+        def __init__(self):
+            self.reads = Counter()
+
+        def read_bytes(self, path):
+            if os.path.basename(os.path.dirname(path)) == "_log":
+                self.reads[os.path.basename(path)] += 1
+            return super().read_bytes(path)
+
+    def commits_read():
+        return {
+            int(n[: -len(".json")]): c
+            for n, c in spy.reads.items()
+            if n.endswith(".json") and ".checkpoint" not in n
+        }
+
+    cp10 = f"{10:020d}.checkpoint.parquet"
+    schema = "k long, region string, v double"
+    t = str(tmp_path / "t")
+    lake.create_table(
+        spark.createDataFrame(
+            [(k, ["eu", "us"][k % 2], float(k)) for k in range(40)], schema
+        ),
+        t,
+        key_cols=["k"],
+        partition_by=["region"],
+    )
+    for i in range(12):  # v1..v12, one file each; checkpoint at v10
+        lake.append(
+            spark.createDataFrame([(100 + i, "us", 1.0)], schema), t
+        )
+    spy = Spy()
+    prev = lake.set_storage(spy)
+    try:
+        assert lake.snapshot(t).version == 12
+        assert dict(spy.reads) == {
+            cp10: 1,
+            f"{11:020d}.json": 1,
+            f"{12:020d}.json": 1,
+        }
+        spy.reads.clear()
+        assert lake.prune_files(spark, t, {"k": (0, 5)})
+        assert commits_read() and min(commits_read()) > 10
+        assert max(spy.reads.values()) <= 2
+        spy.reads.clear()
+        assert lake.overwrite_partitions(
+            spark.createDataFrame([(900, "eu", -1.0)], schema), t
+        ) == 13
+        assert commits_read() and min(commits_read()) > 10
+        assert max(spy.reads.values()) <= 2
+        # v13 replaced every eu file: 11 and 12 fit under 2 files, and
+        # v13 is read once to learn that it would exceed the cap
+        reader = _LakeCDFStreamReader(
+            {"path": t, "from_version": 10, "max_files_per_trigger": "2",
+             "consumer_id": "spy"}
+        )
+        spy.reads.clear()
+        assert reader.latestOffset() == {"version": 12}
+        assert commits_read() == {11: 1, 12: 1, 13: 1}
+    finally:
+        lake.set_storage(prev)
+
+
 def _partitioned(spark, n=200):
     return spark.range(n).select(
         F.col("id").alias("k"),
@@ -1657,6 +1730,24 @@ def test_prune_files_distributed_matches_driver(spark, tmp_path):
     }
     assert set(got) == want
     assert 0 < len(got) < len(snap.files)  # it actually pruned something
+    # a tail REMOVE (rewrite-mode delete) and a tail RE-ADD of a live
+    # path carrying a deletion vector, both inside the pruned range
+    lake.delete_where(spark, t, "k = 150")
+    lake.delete_where(spark, t, "k = 200", deletion_vectors=True)
+    assert lake.latest_version(t) == 14
+    got = lake.prune_files(spark, t, ranges)
+    snap = lake.snapshot(t)
+    want = {
+        p
+        for p, a in snap.files.items()
+        if not (
+            a.get("stats", {}).get("k")
+            and lake._stats_disjoint(a["stats"]["k"], 100, 260)
+        )
+    }
+    assert set(got) == want
+    assert any(snap.files[p].get("dv") for p in got)
+    assert 0 < len(got) < len(snap.files)
 
 
 def test_merge_bounded_driver_past_checkpoint(spark, tmp_path):
@@ -1844,7 +1935,13 @@ def test_overwrite_partitions_distributed_past_checkpoint(spark, tmp_path):
         ),
         t,
     )
+    # tail REMOVE (rewrite-mode delete) and tail RE-ADDs of live paths
+    # with deletion vectors, in the replaced and a surviving partition
+    lake.delete_where(spark, t, "k = 3")
+    lake.delete_where(spark, t, "k = 6", deletion_vectors=True)
+    lake.delete_where(spark, t, "k = 2", deletion_vectors=True)
     before = dict(lake.snapshot(t).files)
+    assert any(a.get("dv") for a in before.values())
     lake.overwrite_partitions(
         spark.createDataFrame(
             [(9000, "eu", -1.0)], "k long, region string, v double"
@@ -1867,6 +1964,8 @@ def test_overwrite_partitions_distributed_past_checkpoint(spark, tmp_path):
     assert ("eu", 9000) in rows
     assert not any(reg == "eu" and k != 9000 for reg, k in rows)
     assert sum(1 for reg, _ in rows if reg == "us") == 30
+    assert sum(1 for reg, _ in rows if reg == "ap") == 29
+    assert ("ap", 2) not in rows
 
 
 def test_rolled_checkpoint_equals_snapshot_state(spark, tmp_path):

@@ -19,7 +19,10 @@ Streaming's checkpoint protocol needs from a source. No state beyond
 the checkpointed offset exists anywhere.
 
 Scale shape: ``partitions()`` walks the log version by version (driver-
-side, file LISTS only — never data), so a file that is added and then
+side, file LISTS only — never data) through laketable's one log reader
+(``_commit_file_deltas`` and admission control's ``_cap_end`` both
+read commits via ``laketable._read_log``; this module never opens a
+commit file itself), so a file that is added and then
 removed inside one offset range still surfaces as its insert+delete
 pair (an endpoint-only diff would silently drop it); the parquet bytes
 are read task-side via Arrow, one changed file per task. Net mode plans
@@ -256,21 +259,9 @@ class _LakeCDFStreamReader(DataSourceStreamReader):
         if self.max_commits is not None:
             end = min(end, base + self.max_commits)
         if self.max_files is not None and end > base:
-            storage = laketable.get_storage()
-            commits, _ = laketable._list_log(self.table)
             total, capped = 0, base
-            for v in commits:
-                if v <= base or v > end:
-                    continue
-                n = 0
-                for line in storage.read_bytes(
-                    laketable._log_path(self.table, v)
-                ).splitlines():
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "add" in action or "remove" in action:
-                        n += 1
+            for v, actions in laketable._read_log(self.table, base, end):
+                n = sum("add" in a or "remove" in a for a in actions)
                 if capped > base and total + n > self.max_files:
                     break
                 total += n
@@ -347,83 +338,51 @@ class _LakeCDFStreamReader(DataSourceStreamReader):
         for v, added, removed, _schema, dv_chg in (
             laketable._commit_file_deltas(self.table, v0, v1)
         ):
-            if self.net:
-                if added or removed or dv_chg:
-                    # dv-change entries read their file's rows too (the
-                    # delta filter runs after the read), so they count
-                    # toward the bucket sizing like any other side
-                    total_rows = (
-                        sum(a.get("rows") or 0 for a in added.values())
-                        + sum(a.get("rows") or 0 for a in removed.values())
-                        + sum(
-                            n.get("rows") or 0
-                            for _o, n in dv_chg.values()
-                        )
+            # (rel path, add action, change type, dv spec) per changed
+            # file; a vector growth's DELTA rows are this commit's delete
+            # side (round-16 DVs)
+            changed = [(rel, a, "insert", None) for rel, a in sorted(added.items())]
+            changed += [
+                (rel, a, "delete", dv_exclude(a))
+                for rel, a in sorted(removed.items())
+            ]
+            changed += [
+                (rel, new, "delete", dv_delta(old, new))
+                for rel, (old, new) in sorted(dv_chg.items())
+            ]
+            if not self.net:
+                parts += [
+                    _CDFPart(
+                        resolve(self.table, rel), kind, v,
+                        a.get("partition", {}), dv,
                     )
-                    n_buckets = 1
-                    if total_rows and self.net_rows_per_bucket > 0:
-                        n_buckets = min(
-                            self.net_max_buckets,
-                            max(
-                                1,
-                                -(-total_rows // self.net_rows_per_bucket),
-                            ),
-                        )
-                    added_l = [
-                        (resolve(self.table, rel), a.get("partition", {}), None)
-                        for rel, a in sorted(added.items())
-                    ]
-                    removed_l = [
-                        (
-                            resolve(self.table, rel),
-                            a.get("partition", {}),
-                            dv_exclude(a),
-                        )
-                        for rel, a in sorted(removed.items())
-                    ] + [
-                        # vector growth: the DELTA rows are this commit's
-                        # delete side (round-16 DVs)
-                        (
-                            resolve(self.table, rel),
-                            new.get("partition", {}),
-                            dv_delta(old, new),
-                        )
-                        for rel, (old, new) in sorted(dv_chg.items())
-                    ]
-                    for b in range(n_buckets):
-                        parts.append(
-                            _NetCDFPart(v, added_l, removed_l, b, n_buckets)
-                        )
+                    for rel, a, kind, dv in changed
+                ]
                 continue
-            for rel in sorted(added):
-                parts.append(
-                    _CDFPart(
-                        resolve(self.table, rel),
-                        "insert",
-                        v,
-                        added[rel].get("partition", {}),
-                    )
+            if not changed:
+                continue
+            # dv-change entries read their file's rows too (the delta
+            # filter runs after the read), so they count toward the
+            # bucket sizing like any other side
+            total_rows = sum(a.get("rows") or 0 for _r, a, _k, _d in changed)
+            n_buckets = 1
+            if total_rows and self.net_rows_per_bucket > 0:
+                n_buckets = min(
+                    self.net_max_buckets,
+                    max(1, -(-total_rows // self.net_rows_per_bucket)),
                 )
-            for rel in sorted(removed):
-                parts.append(
-                    _CDFPart(
-                        resolve(self.table, rel),
-                        "delete",
-                        v,
-                        removed[rel].get("partition", {}),
-                        dv_exclude(removed[rel]),
-                    )
-                )
-            for rel, (old, new) in sorted(dv_chg.items()):
-                parts.append(
-                    _CDFPart(
-                        resolve(self.table, rel),
-                        "delete",
-                        v,
-                        new.get("partition", {}),
-                        dv_delta(old, new),
-                    )
-                )
+            side = {
+                k: [
+                    (resolve(self.table, rel), a.get("partition", {}), dv)
+                    for rel, a, kind, dv in changed
+                    if kind == k
+                ]
+                for k in ("insert", "delete")
+            }
+            parts += [
+                _NetCDFPart(v, side["insert"], side["delete"], b, n_buckets)
+                for b in range(n_buckets)
+            ]
         if not parts:  # meta-only commits in range: an empty batch
             parts.append(_CDFPart(None, "insert", v1, {}))
         return parts

@@ -57,7 +57,12 @@ table_dir/
   checkpoints from older tables still resolve. Checkpoints are
   published atomically and are PURELY an optimization: one that fails
   to parse is skipped and the snapshot falls back to an older one or
-  full log replay.
+  full log replay. One reader, ``_read_log``, opens commit files: it
+  yields ``(version, actions)`` for a version range and reads each
+  file once; snapshot replay, checkpoint rolls, MERGE pruning,
+  partition overwrite, CDF deltas, history and the stream ledger all
+  go through it, and nothing else opens a commit file. ``meta``
+  actions fold through one ``_apply_meta`` (replace semantics).
 
 Driver-side state is the FILE LIST only (paths + stats), never data:
 all row movement is Spark jobs over parquet.
@@ -397,9 +402,71 @@ def latest_version(table: str) -> int:
     return commits[-1]
 
 
+def _read_log(
+    table: str,
+    after: int = -1,
+    upto: int | None = None,
+    commits: Sequence[int] | None = None,
+) -> Iterator[tuple[int, list[dict]]]:
+    """``(version, actions)`` for each commit in ``(after, upto]``
+    (``upto=None``: through the newest), ascending — the ONE place a
+    commit file is opened and its JSON lines parsed. ``actions[0]`` is
+    the ``commitInfo``; the rest are ``meta``/``add``/``remove``.
+    ``commits`` is a listing the caller already holds (default: list
+    the log). Each file is read once, lazily, so a caller that stops
+    early reads no further commit."""
+    if commits is None:
+        commits, _ = _list_log(table)
+    storage = get_storage()
+    for v in commits:
+        if v > after and (upto is None or v <= upto):
+            raw = storage.read_bytes(_log_path(table, v))
+            yield v, [json.loads(ln) for ln in raw.splitlines() if ln.strip()]
+
+
+def _apply_meta(state: LakeSnapshot, m: dict) -> None:
+    """Fold one ``meta`` action (or a checkpoint's meta) into ``state``.
+    REPLACE, not update: every writer records the FULL schema, and only
+    replacement can express a column drop/rename (round-16);
+    pre-evolution logs carried the full schema too, so replay is
+    unchanged for them."""
+    state.key_cols = m.get("key_cols", state.key_cols)
+    if "schema" in m:
+        state.schema = dict(m["schema"])
+    if "physical" in m:
+        state.physical = dict(m["physical"])
+    if "retired" in m:
+        state.retired = list(m["retired"])
+    state.partition_by = list(m.get("partition_by", state.partition_by))
+
+
 #: parquet key-value metadata key carrying the table meta in a
 #: parquet-format checkpoint
 _CP_META_KEY = b"lake.checkpoint.meta"
+
+
+def _cp_schema_metadata(snap: LakeSnapshot) -> dict:
+    """``snap``'s table meta as a parquet checkpoint's key-value
+    metadata."""
+    meta = {
+        "key_cols": snap.key_cols,
+        "schema": snap.schema,
+        "partition_by": snap.partition_by,
+        "physical": snap.physical,
+        "retired": snap.retired,
+    }
+    return {_CP_META_KEY: json.dumps(meta).encode("utf-8")}
+
+
+def _cp_meta(raw: bytes) -> dict:
+    """The table meta a parquet checkpoint's footer carries. Raises
+    OSError/ValueError/KeyError when ``raw`` is not a readable
+    checkpoint."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    kv = pq.read_schema(pa.BufferReader(raw)).metadata or {}
+    return json.loads(kv[_CP_META_KEY].decode("utf-8"))
 
 
 def _write_checkpoint_parquet(table: str, version: int, snap: LakeSnapshot) -> None:
@@ -417,17 +484,10 @@ def _write_checkpoint_parquet(table: str, version: int, snap: LakeSnapshot) -> N
     for p, a in snap.files.items():
         paths.append(p)
         adds.append(json.dumps(a))
-    meta = {
-        "key_cols": snap.key_cols,
-        "schema": snap.schema,
-        "partition_by": snap.partition_by,
-        "physical": snap.physical,
-        "retired": snap.retired,
-    }
     tbl = pa.table(
         [pa.array(paths, pa.string()), pa.array(adds, pa.string())],
         names=["path", "add_json"],
-    ).replace_schema_metadata({_CP_META_KEY: json.dumps(meta).encode("utf-8")})
+    ).replace_schema_metadata(_cp_schema_metadata(snap))
     buf = pa.BufferOutputStream()
     pq.write_table(tbl, buf)
     get_storage().put_atomic(
@@ -452,46 +512,18 @@ def _roll_checkpoint_parquet(table: str, version: int) -> bool:
     import pyarrow.parquet as pq
 
     commits, checkpoints = _list_log(table)
-    storage = get_storage()
-    prev = None
-    for cp in reversed([c for c in checkpoints if c < version]):
-        try:
-            raw = storage.read_bytes(_checkpoint_parquet_path(table, cp))
-        except OSError:
-            continue
-        try:
-            kv = pq.read_schema(pa.BufferReader(raw)).metadata or {}
-            meta = json.loads(kv[_CP_META_KEY].decode("utf-8"))
-        except (OSError, ValueError, KeyError):
-            continue  # unreadable prev checkpoint: not a rolling base
-        prev = (cp, raw, meta)
-        break
+    prev = _usable_checkpoint(table, version - 1, checkpoints)
     if prev is None:
         return False
-    cp_from, raw, meta = prev
+    cp_from, raw, cp_meta = prev
+    state = LakeSnapshot(version=version)
+    _apply_meta(state, cp_meta)
     tail_added: dict[str, dict] = {}
     tail_removed: set[str] = set()
-    for v in commits:
-        if v <= cp_from or v > version:
-            continue
-        for line in storage.read_bytes(_log_path(table, v)).splitlines():
-            if not line.strip():
-                continue
-            action = json.loads(line)
+    for _v, actions in _read_log(table, cp_from, version, commits):
+        for action in actions:
             if "meta" in action:
-                m = action["meta"]
-                meta["key_cols"] = m.get("key_cols", meta.get("key_cols", []))
-                # replace semantics — mirrors snapshot() replay (a drop/
-                # rename can only be expressed by replacement)
-                if "schema" in m:
-                    meta["schema"] = dict(m["schema"])
-                if "physical" in m:
-                    meta["physical"] = dict(m["physical"])
-                if "retired" in m:
-                    meta["retired"] = list(m["retired"])
-                meta["partition_by"] = m.get(
-                    "partition_by", meta.get("partition_by", [])
-                )
+                _apply_meta(state, action["meta"])
             elif "add" in action:
                 a = action["add"]
                 tail_added[a["path"]] = a
@@ -504,7 +536,7 @@ def _roll_checkpoint_parquet(table: str, version: int) -> bool:
     buf = pa.BufferOutputStream()
     schema = pa.schema(
         [("path", pa.string()), ("add_json", pa.string())],
-        metadata={_CP_META_KEY: json.dumps(meta).encode("utf-8")},
+        metadata=_cp_schema_metadata(state),
     )
     writer = pq.ParquetWriter(buf, schema)
     try:
@@ -541,7 +573,7 @@ def _roll_checkpoint_parquet(table: str, version: int) -> bool:
             )
     finally:
         writer.close()
-    storage.put_atomic(
+    get_storage().put_atomic(
         _checkpoint_parquet_path(table, version), buf.getvalue().to_pybytes()
     )
     return True
@@ -567,15 +599,11 @@ def _load_checkpoint(
             import pyarrow as pa
             import pyarrow.parquet as pq
 
+            files = []
             if with_files:
-                tbl = pq.read_table(pa.BufferReader(raw))
-                kv = tbl.schema.metadata or {}
-                meta = json.loads(kv[_CP_META_KEY].decode("utf-8"))
-                files = [json.loads(s) for s in tbl.column("add_json").to_pylist()]
-                return {**meta, "files": files}
-            kv = pq.read_schema(pa.BufferReader(raw)).metadata or {}
-            meta = json.loads(kv[_CP_META_KEY].decode("utf-8"))
-            return {**meta, "files": []}
+                col = pq.read_table(pa.BufferReader(raw), columns=["add_json"])
+                files = [json.loads(s) for s in col.column(0).to_pylist()]
+            return {**_cp_meta(raw), "files": files}
         except (OSError, ValueError, KeyError):
             pass  # corrupt parquet checkpoint: try the JSON twin / older
     try:
@@ -588,26 +616,22 @@ def _load_checkpoint(
         return None
 
 
-def _usable_checkpoint(table: str, version: int) -> int | None:
-    """Newest parquet-checkpoint version at or before ``version`` that
-    VALIDATES — the bytes parse as parquet and carry the meta key — so
-    the distributed legs of :func:`prune_files` and
-    :func:`_partition_matched_files` never hand Spark a corrupt file
-    (bit rot must degrade to the driver replay, not crash a MERGE:
-    checkpoints are purely an optimization; round-15 ADVICE)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    _, checkpoints = _list_log(table)
+def _usable_checkpoint(
+    table: str, version: int, checkpoints: Sequence[int]
+) -> tuple[int, bytes, dict] | None:
+    """``(version, bytes, meta)`` of the newest parquet checkpoint at or
+    before ``version`` that VALIDATES — the bytes parse as parquet and
+    carry the meta key — so a rolled checkpoint and the distributed leg
+    of :func:`_scan_live_files` never start from a corrupt file (bit rot
+    must degrade to the driver replay, not crash a MERGE: checkpoints
+    are purely an optimization; round-15 ADVICE)."""
     storage = get_storage()
     for cp in reversed([c for c in checkpoints if c <= version]):
         try:
             raw = storage.read_bytes(_checkpoint_parquet_path(table, cp))
-            kv = pq.read_schema(pa.BufferReader(raw)).metadata or {}
-            json.loads(kv[_CP_META_KEY].decode("utf-8"))
+            return cp, raw, _cp_meta(raw)
         except (OSError, ValueError, KeyError):
             continue
-        return cp
     return None
 
 
@@ -635,41 +659,19 @@ def snapshot(
             f"(have {commits[0]}..{commits[-1]})"
         )
     snap = LakeSnapshot(version=version)
-    start = 0
+    after = -1
     for cp in reversed([c for c in checkpoints if c <= version]):
         state = _load_checkpoint(table, cp, with_files=with_files)
         if state is None:
             continue  # corrupt/partial checkpoint: try an older one
         snap.files = {a["path"]: a for a in state["files"]}
-        snap.key_cols = state.get("key_cols", [])
-        snap.schema = dict(state.get("schema", {}))
-        snap.partition_by = list(state.get("partition_by", []))
-        snap.physical = dict(state.get("physical", {}))
-        snap.retired = list(state.get("retired", []))
-        start = cp + 1
+        _apply_meta(snap, state)
+        after = cp
         break
-    storage = get_storage()
-    for v in commits:
-        if v < start or v > version:
-            continue
-        for line in storage.read_bytes(_log_path(table, v)).splitlines():
-            if not line.strip():
-                continue
-            action = json.loads(line)
+    for _v, actions in _read_log(table, after, version, commits):
+        for action in actions:
             if "meta" in action:
-                m = action["meta"]
-                snap.key_cols = m.get("key_cols", snap.key_cols)
-                # REPLACE, not update: every writer records the FULL
-                # schema, and only replacement can express a column
-                # drop/rename (round-16); pre-evolution logs carried the
-                # full schema too, so replay is unchanged for them
-                if "schema" in m:
-                    snap.schema = dict(m["schema"])
-                if "physical" in m:
-                    snap.physical = dict(m["physical"])
-                if "retired" in m:
-                    snap.retired = list(m["retired"])
-                snap.partition_by = m.get("partition_by", snap.partition_by)
+                _apply_meta(snap, action["meta"])
             elif with_files and "add" in action:
                 snap.files[action["add"]["path"]] = action["add"]
             elif with_files and "remove" in action:
@@ -681,14 +683,10 @@ def snapshot(
 
 def table_history(table: str) -> list[dict]:
     """The commitInfo line of every version — the audit log."""
-    commits, _ = _list_log(table)
-    storage = get_storage()
-    out = []
-    for v in commits:
-        first_line = storage.read_bytes(_log_path(table, v)).splitlines()[0]
-        first = json.loads(first_line)
-        out.append(first.get("commitInfo", {"version": v}))
-    return out
+    return [
+        actions[0].get("commitInfo", {"version": v})
+        for v, actions in _read_log(table)
+    ]
 
 
 # --------------------------------------------------------------------- #
@@ -1106,21 +1104,35 @@ def append(df: DataFrame, table: str) -> int:
     clobber a concurrent evolution commit (vanish its new column, or
     resurrect a concurrently dropped one); the abandoned attempt's
     staged files orphan and vacuum reclaims them, the MERGE discipline."""
+    return _append(df, table)
+
+
+def _append(df: DataFrame, table: str, batch_id: int | None = None) -> int | None:
+    """The append transaction behind :func:`append` (``batch_id`` None,
+    an ``APPEND`` commit) and :func:`append_stream_batch` (a
+    ``STREAM_APPEND`` commit whose commitInfo records ``batch_id``).
+    Retries as :func:`append` describes; a streamed batch that finds its
+    id committed after losing a slot was replayed concurrently and
+    returns None."""
+    if batch_id is None:
+        op, who, info = "APPEND", "append", None
+    else:
+        op, who, info = "STREAM_APPEND", "append_stream_batch", {"batch_id": batch_id}
     for _ in range(8):
-        snap = snapshot(table, with_files=False)
-        out, meta, full_schema, physical = _enforce_schema(df, snap, "append")
+        snap = snapshot(table, with_files=False)  # appends never need files
+        out, meta, full_schema, physical = _enforce_schema(df, snap, who)
         adds = _stage_files(
             out, table, snap.key_cols, snap.partition_by, full_schema,
             physical,
         )
+        actions = meta + [{"add": a} for a in adds]
         version = snap.version + 1
         while True:
             try:
-                return _commit(
-                    table, version, meta + [{"add": a} for a in adds],
-                    "APPEND",
-                )
+                return _commit(table, version, actions, op, extra_info=info)
             except ConcurrentCommitError:
+                if batch_id is not None and batch_id in committed_batch_ids(table):
+                    return None
                 if meta:
                     break  # evolving append: re-run on the fresh snapshot
                 version += 1
@@ -1245,64 +1257,93 @@ def _partition_key(values: dict, partition_by: Sequence[str]) -> str:
     return "\x01".join(parts)
 
 
+def _scan_live_files(
+    spark: SparkSession,
+    table: str,
+    version: int,
+    match,
+    spark_match,
+    with_actions: bool,
+) -> dict:
+    """Live files at ``version`` whose add action satisfies ``match`` —
+    rel path → add action. The bounded-driver skeleton behind
+    :func:`prune_files` and :func:`overwrite_partitions`: when a
+    VALIDATED parquet checkpoint backs the snapshot, ``spark_match()``
+    (the same predicate as a Spark Column over ``add_json``) filters
+    the checkpoint rows IN SPARK and only the matches are collected;
+    the tail after the checkpoint replays driver-side through
+    ``match``, O(checkpoint_interval) commits. With no usable
+    checkpoint, with ``spark_match=None``, or when the distributed leg
+    FAILS mid-flight (a checkpoint that validated but has corrupt row
+    pages; round-15 ADVICE) the answer comes from a driver replay of
+    the snapshot — identical, pinned by tests. ``spark_match`` is
+    called only once a checkpoint is found and outside the fallback,
+    so a predicate it cannot express raises. With ``with_actions``
+    False the distributed leg skips collecting add_json and its
+    matches map to None."""
+    cp = None
+    if spark_match is not None:
+        commits, checkpoints = _list_log(table)
+        cp = _usable_checkpoint(table, version, checkpoints)
+    if cp is not None:
+        where = spark_match()
+        cols = ["path", "add_json"] if with_actions else ["path"]
+        try:
+            rows = (
+                spark.read.schema("path string, add_json string")
+                .parquet(
+                    get_storage().resolve_read_path(
+                        table,
+                        os.path.join(
+                            _LOG_DIR, f"{cp[0]:0{_PAD}d}.checkpoint.parquet"
+                        ),
+                    )
+                )
+                .where(where)
+                .select(*cols)
+                .collect()
+            )
+        except Exception:
+            cp = None
+    if cp is None:
+        snap = snapshot(table, version)
+        return {p: a for p, a in snap.files.items() if match(a)}
+    hits = {r.path: json.loads(r.add_json) if with_actions else None for r in rows}
+    for _v, actions in _read_log(table, cp[0], version, commits):
+        for action in actions:
+            if "add" in action:
+                a = action["add"]
+                if match(a):
+                    hits[a["path"]] = a
+                else:
+                    hits.pop(a["path"], None)
+            elif "remove" in action:
+                hits.pop(action["remove"]["path"], None)
+    return hits
+
+
 def _partition_matched_files(
     spark: SparkSession,
     table: str,
     version: int,
     partition_by: Sequence[str],
     replaced_keys: set,
-    schema: dict | None = None,
+    schema: dict,
 ) -> list[str]:
     """Live files whose partition tuple is in ``replaced_keys`` — the
-    remove set of a dynamic partition overwrite. Same bounded-driver
-    shape as :func:`prune_files`: when a VALIDATED parquet checkpoint
-    backs the snapshot, the equality match runs IN SPARK over the
-    checkpoint rows (the replaced set is a small literal list) and only
-    matches are collected; the post-checkpoint tail replays driver-side,
-    O(checkpoint_interval). Falls back to the driver replay otherwise —
-    including when the distributed leg FAILS mid-flight (a checkpoint
-    that validated but has corrupt row pages; round-15 ADVICE).
+    remove set of a dynamic partition overwrite, resolved through
+    :func:`_scan_live_files` (the equality match runs in Spark over the
+    checkpoint rows; the replaced set is a small literal list).
     ``partition_by``/``schema`` are in ADD-ACTION terms — PHYSICAL
     column names (round-16 column mapping); the caller translates."""
 
-    def _driver_replay() -> list[str]:
-        snap = snapshot(table, version)
-        return [
-            p
-            for p, a in snap.files.items()
-            if _partition_key(a.get("partition", {}), partition_by)
+    def match(a: dict) -> bool:
+        return (
+            _partition_key(a.get("partition", {}), partition_by)
             in replaced_keys
-        ]
-
-    # dotted/quoted partition names would break the JSON path, and
-    # float/double partition values render differently in Python
-    # (json.dumps: '12345678.5') vs Spark's get_json_object (Jackson:
-    # '1.23456785E7') so the key strings would NEVER match and stale
-    # partitions would silently survive (round-15 ADVICE) — the driver
-    # replay uses _partition_key on both sides, so route those there
-    if any("." in c or "'" in c or '"' in c for c in partition_by):
-        return _driver_replay()
-    if schema is None:
-        ms = snapshot(table, version, with_files=False)
-        schema = {_phys(ms.physical, c): t for c, t in ms.schema.items()}
-    if any(
-        (schema or {}).get(c, "").lower() in ("float", "double")
-        for c in partition_by
-    ):
-        return _driver_replay()
-    cp_version = _usable_checkpoint(table, version)
-    if cp_version is None:
-        return _driver_replay()
-    commits, _ = _list_log(table)
-    try:
-        cp_df = spark.read.schema("path string, add_json string").parquet(
-            get_storage().resolve_read_path(
-                table,
-                os.path.join(
-                    _LOG_DIR, f"{cp_version:0{_PAD}d}.checkpoint.parquet"
-                ),
-            )
         )
+
+    def spark_match():
         key = F.concat_ws(
             "\x01",
             *[
@@ -1313,34 +1354,23 @@ def _partition_matched_files(
                 for c in partition_by
             ],
         )
-        matched = {
-            r.path
-            for r in cp_df.where(key.isin(*replaced_keys))
-            .select("path")
-            .collect()
-        }
-    except Exception:
-        return _driver_replay()
-    storage = get_storage()
-    for v in commits:
-        if v <= cp_version or v > version:
-            continue
-        for line in storage.read_bytes(_log_path(table, v)).splitlines():
-            if not line.strip():
-                continue
-            action = json.loads(line)
-            if "add" in action:
-                a = action["add"]
-                if (
-                    _partition_key(a.get("partition", {}), partition_by)
-                    in replaced_keys
-                ):
-                    matched.add(a["path"])
-                else:
-                    matched.discard(a["path"])
-            elif "remove" in action:
-                matched.discard(action["remove"]["path"])
-    return sorted(matched)
+        return key.isin(*replaced_keys)
+
+    # dotted/quoted partition names would break the JSON path, and
+    # float/double partition values render differently in Python
+    # (json.dumps: '12345678.5') vs Spark's get_json_object (Jackson:
+    # '1.23456785E7') so the key strings would NEVER match and stale
+    # partitions would silently survive (round-15 ADVICE) — the driver
+    # replay uses _partition_key on both sides, so route those there
+    if any("." in c or "'" in c or '"' in c for c in partition_by) or any(
+        schema.get(c, "").lower() in ("float", "double") for c in partition_by
+    ):
+        spark_match = None
+    return sorted(
+        _scan_live_files(
+            spark, table, version, match, spark_match, with_actions=False
+        )
+    )
 
 
 def overwrite_partitions(df: DataFrame, table: str) -> int:
@@ -1706,18 +1736,16 @@ def _prune_touched(
     validation, ONE Spark scan, ONE tail replay for both shapes).
     Returns rel path → add action; when ``with_actions`` is False the
     distributed leg skips collecting add_json and values may be None."""
-    commits, checkpoints = _list_log(table)
-    if version is None:
-        if not commits:
-            raise FileNotFoundError(f"empty lake table log: {table}")
-        version = commits[-1]
-    keys = [k for k, (mn, _mx) in key_ranges.items() if mn is not None]
     if physical is None or schema is None:
         meta_snap = snapshot(table, version, with_files=False)
+        version = meta_snap.version
         if physical is None:
             physical = meta_snap.physical
         if schema is None:
             schema = meta_snap.schema
+    elif version is None:
+        version = latest_version(table)
+    keys = [k for k, (mn, _mx) in key_ranges.items() if mn is not None]
     # add-action stats are keyed by PHYSICAL names (round-16 column
     # mapping); key_ranges/schema arrive logical
     pk = {k: _phys(physical, k) for k in keys}
@@ -1729,26 +1757,12 @@ def _prune_touched(
             for k in keys
         )
 
-    def _driver_replay() -> dict:
-        # no distributed base: driver replay, same loop MERGE always ran
-        snap = snapshot(table, version)
-        return {p: a for p, a in snap.files.items() if hit(a)}
-
-    cp_version = _usable_checkpoint(table, version)
-    if cp_version is None:
-        return _driver_replay()
-    bad = [k for k in keys if "." in pk[k] or "'" in pk[k] or '"' in pk[k]]
-    if bad:
-        raise ValueError(f"key columns unsupported in JSON-path pruning: {bad}")
-    try:
-        cp_df = spark.read.schema("path string, add_json string").parquet(
-            get_storage().resolve_read_path(
-                table,
-                os.path.join(
-                    _LOG_DIR, f"{cp_version:0{_PAD}d}.checkpoint.parquet"
-                ),
+    def spark_hit():
+        bad = [k for k in keys if "." in pk[k] or "'" in pk[k] or '"' in pk[k]]
+        if bad:
+            raise ValueError(
+                f"key columns unsupported in JSON-path pruning: {bad}"
             )
-        )
         disjoint = F.lit(False)
         for k in keys:
             mn, mx = key_ranges[k]  # raw Spark values: F.lit types them
@@ -1764,38 +1778,11 @@ def _prune_touched(
             disjoint = disjoint | F.coalesce(
                 (hi < F.lit(mn)) | (lo > F.lit(mx)), F.lit(False)
             )
-        surv = cp_df.where(~disjoint)
-        if with_actions:
-            touched = {
-                r.path: json.loads(r.add_json)
-                for r in surv.select("path", "add_json").collect()
-            }
-        else:
-            touched = {
-                r.path: None for r in surv.select("path").collect()
-            }
-    except Exception:
-        # a checkpoint that VALIDATED (footer + meta key) can still have
-        # corrupt row pages — the distributed leg degrades to the driver
-        # replay instead of crashing the MERGE (round-15 ADVICE)
-        return _driver_replay()
-    storage = get_storage()
-    for v in commits:
-        if v <= cp_version or v > version:
-            continue
-        for line in storage.read_bytes(_log_path(table, v)).splitlines():
-            if not line.strip():
-                continue
-            action = json.loads(line)
-            if "add" in action:
-                a = action["add"]
-                if hit(a):
-                    touched[a["path"]] = a
-                else:
-                    touched.pop(a["path"], None)
-            elif "remove" in action:
-                touched.pop(action["remove"]["path"], None)
-    return touched
+        return ~disjoint
+
+    return _scan_live_files(
+        spark, table, version, hit, spark_hit, with_actions
+    )
 
 
 def merge(
@@ -2380,27 +2367,15 @@ def _commit_file_deltas(
     (round-16): it lands in ``dv_changed`` as path → (old_action,
     new_action) — consumers emit the vector DELTA rows as deletes, never
     the whole file as an insert."""
-    commits, _ = _list_log(table)
-    storage = get_storage()
-    snap0 = snapshot(table, from_version)
-    live = dict(snap0.files)
-    schema = dict(snap0.schema)
-    for v in commits:
-        if v <= from_version or v > to_version:
-            continue
+    state = snapshot(table, from_version)
+    live = dict(state.files)
+    for v, actions in _read_log(table, from_version, to_version):
         added: dict = {}
         removed: dict = {}
         dv_changed: dict = {}
-        for line in storage.read_bytes(_log_path(table, v)).splitlines():
-            if not line.strip():
-                continue
-            action = json.loads(line)
+        for action in actions:
             if "meta" in action:
-                # replace semantics — mirrors snapshot() replay (a drop/
-                # rename can only be expressed by replacement; round-16
-                # review)
-                if "schema" in action["meta"]:
-                    schema = dict(action["meta"]["schema"])
+                _apply_meta(state, action["meta"])
             elif "add" in action:
                 a = action["add"]
                 if a["path"] in live:
@@ -2414,7 +2389,7 @@ def _commit_file_deltas(
                 elif p in live:
                     removed[p] = live[p]
                     dv_changed.pop(p, None)
-        yield v, added, removed, dict(schema), dv_changed
+        yield v, added, removed, dict(state.schema), dv_changed
         live.update(added)
         for p, (_old, new) in dv_changed.items():
             live[p] = new
@@ -2733,13 +2708,12 @@ def table_changes(
 def committed_batch_ids(table: str) -> set:
     """Batch ids recorded by :func:`append_stream_batch` commits — the
     idempotence ledger a streaming writer consults on restart. It reads
-    every commit file in the log on each call, whoever wrote it."""
-    commits, _ = _list_log(table)
-    storage = get_storage()
+    the commitInfo of every commit in the log through the log reader on
+    each call, whoever wrote the commit, bypassing the checkpoints that
+    bound :func:`snapshot`'s replay (ROADMAP item 2)."""
     out = set()
-    for v in commits:
-        first = storage.read_bytes(_log_path(table, v)).splitlines()[0]
-        info = json.loads(first).get("commitInfo", {})
+    for _v, actions in _read_log(table):
+        info = actions[0].get("commitInfo", {})
         if "batch_id" in info:
             out.add(info["batch_id"])
     return out
@@ -2759,35 +2733,4 @@ def append_stream_batch(df: DataFrame, table: str, batch_id: int) -> int | None:
     version) action held in the snapshot, is item 2 of ROADMAP.md."""
     if batch_id in committed_batch_ids(table):
         return None
-    for _ in range(8):
-        snap = snapshot(table, with_files=False)  # appends never need files
-        out, meta, full_schema, physical = _enforce_schema(
-            df, snap, "append_stream_batch"
-        )
-        adds = _stage_files(
-            out, table, snap.key_cols, snap.partition_by, full_schema,
-            physical,
-        )
-        version = snap.version + 1
-        actions = meta + [{"add": a} for a in adds]
-        while True:
-            try:
-                return _commit(
-                    table,
-                    version,
-                    actions,
-                    "STREAM_APPEND",
-                    extra_info={"batch_id": batch_id},
-                )
-            except ConcurrentCommitError:
-                # racing writer took the slot: if it was THIS batch
-                # replayed concurrently, stop; else retry — a slot bump
-                # for data-only batches, a full re-run for evolving ones
-                # (stale full-schema meta would clobber concurrent
-                # evolution under replace semantics; round-16 review)
-                if batch_id in committed_batch_ids(table):
-                    return None
-                if meta:
-                    break
-                version += 1
-    raise ConcurrentCommitError(snapshot(table, with_files=False).version + 1)
+    return _append(df, table, batch_id)
