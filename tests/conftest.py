@@ -23,6 +23,20 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def embeddings_oracle():
+    """Run a catalog oracle's SQL in DuckDB over a view named
+    ``embeddings`` that holds the given Spark frame; returns sorted rows."""
+    import duckdb
+
+    def run(df, sql):
+        con = duckdb.connect()
+        con.register("embeddings", df.toArrow())
+        return sorted(con.sql(sql).fetchall())
+
+    return run
+
+
 @pytest.fixture(scope="session", autouse=True)
 def _sweep_stream_tmpdirs():
     """Session-end sweep of the scratch dirs the streaming tests create.

@@ -44,14 +44,16 @@ def test_kmeans_deterministic_across_runs(spark):
     assert a == b
 
 
-def test_kmeans_engines_equivalent(spark):
-    """Round-7: arrow (mapInPandas + numpy) assignment must reproduce the
-    codegen literal-inline path exactly — same clusters every iteration
-    (the centroid updates run through identical rounded aggregates)."""
+def test_kmeans_engines_equivalent(spark, embeddings_oracle):
+    """The Spark engine reproduces the catalog's DuckDB k-means replay
+    (``catalog._kmeans_oracle``) exactly: same cluster for every row after
+    three iterations of rounded centroid updates."""
+    from zio_analytics_spark.catalog import _kmeans_oracle
+
     df = _blobs(spark, n_per=12)
-    a = sorted(map(tuple, kmeans_assign(df, k=4, n_iter=3, dim=8, engine="codegen").collect()))
-    b = sorted(map(tuple, kmeans_assign(df, k=4, n_iter=3, dim=8, engine="arrow").collect()))
-    assert a == b
+    got = sorted(map(tuple, kmeans_assign(df, k=4, n_iter=3, dim=8).collect()))
+    assert len(got) == 48
+    assert got == embeddings_oracle(df, _kmeans_oracle(4, 8, 3))
 
 
 def test_kmeans_requires_k_rows(spark):

@@ -55,9 +55,14 @@ def test_pq_train_validates_inputs(spark):
     df = _planted(spark)
     with pytest.raises(ValueError, match="not divisible"):
         pq_train(df, m=3, k=4, dim=8)
+    cbs = pq_train(df, m=2, k=4, n_iter=1, dim=8)
     with pytest.raises(ValueError, match="query dim"):
-        cbs = pq_train(df, m=2, k=4, n_iter=1, dim=8)
         pq_adc_topk(pq_encode(df, cbs), cbs, [0.0] * 5)
+    from zio_analytics_spark.operators.pq import ivfpq_fit_encode, ivfpq_search
+
+    coarse, ivf_cbs, enc = ivfpq_fit_encode(df, n_cells=4, m=2, k=4, n_iter=1, dim=8)
+    with pytest.raises(ValueError, match="query dim"):
+        ivfpq_search(enc, coarse, ivf_cbs, [0.0] * 2)
 
 
 def test_ivfpq_retrieves_planted_cluster(spark):
@@ -101,21 +106,27 @@ def test_ivfpq_residual_codes_differ_from_raw_pq(spark):
     assert cells[0] != cells[24]
 
 
-def test_pq_engines_equivalent(spark):
-    """Round-7: the arrow (mapInPandas + numpy) engine must reproduce the
-    codegen engine exactly — codebooks, codes, and ADC results."""
+def test_pq_engines_equivalent(spark, embeddings_oracle):
+    """The Spark engine reproduces the catalog's DuckDB PQ replay
+    (``catalog._pq_oracle``): with ``top_k`` = every row, each row's ADC
+    distance — a function of all m codes and every trained codebook — is
+    equal."""
+    from zio_analytics_spark.catalog import _pq_oracle
+
     df = _planted(spark, n_clusters=4, per=12, d=8)
-    cb_cg = pq_train(df, m=2, k=4, n_iter=3, dim=8, engine="codegen")
-    cb_ar = pq_train(df, m=2, k=4, n_iter=3, dim=8, engine="arrow")
-    assert cb_cg == cb_ar
-    enc_cg = {r.vec_id: list(r.codes) for r in pq_encode(df, cb_cg, engine="codegen").collect()}
-    enc_ar = {r.vec_id: list(r.codes) for r in pq_encode(df, cb_cg, engine="arrow").collect()}
-    assert enc_cg == enc_ar
+    cbs = pq_train(df, m=2, k=4, n_iter=3, dim=8)
+    query = df.where("vec_id = 0").collect()[0]["embedding"]
+    got = sorted(map(tuple, pq_adc_topk(pq_encode(df, cbs), cbs, query, top_k=48).collect()))
+    assert len(got) == 48
+    assert got == embeddings_oracle(df, _pq_oracle(2, 4, 4, 3, 48))
 
 
-def test_ivfpq_engines_equivalent_and_fit_encode(spark):
-    """ivfpq arrow engine == codegen engine for train/encode/search, and
-    ivfpq_fit_encode (single coarse-assignment pass) == train-then-encode."""
+def test_ivfpq_engines_equivalent_and_fit_encode(spark, embeddings_oracle):
+    """The Spark engine reproduces the catalog's DuckDB IVF-PQ replay
+    (``catalog._ivfpq_oracle``) with every cell probed and ``top_k`` = every
+    row, and ivfpq_fit_encode (single coarse-assignment pass) ==
+    train-then-encode."""
+    from zio_analytics_spark.catalog import _ivfpq_oracle
     from zio_analytics_spark.operators.pq import (
         ivfpq_encode,
         ivfpq_fit_encode,
@@ -124,55 +135,33 @@ def test_ivfpq_engines_equivalent_and_fit_encode(spark):
     )
 
     df = _planted(spark, n_clusters=4, per=12, d=8)
-    co_cg, cb_cg = ivfpq_train(df, n_cells=4, m=2, k=4, n_iter=2, dim=8, engine="codegen")
-    co_ar, cb_ar = ivfpq_train(df, n_cells=4, m=2, k=4, n_iter=2, dim=8, engine="arrow")
-    assert co_cg == co_ar and cb_cg == cb_ar
-    enc_cg = {
+    coarse, cbs = ivfpq_train(df, n_cells=4, m=2, k=4, n_iter=2, dim=8)
+    enc = {
         r.vec_id: (r.cell, list(r.codes))
-        for r in ivfpq_encode(df, co_cg, cb_cg, engine="codegen").collect()
+        for r in ivfpq_encode(df, coarse, cbs).collect()
     }
-    enc_ar = {
-        r.vec_id: (r.cell, list(r.codes))
-        for r in ivfpq_encode(df, co_cg, cb_cg, engine="arrow").collect()
-    }
-    assert enc_cg == enc_ar
-
     co_f, cb_f, enc_f = ivfpq_fit_encode(df, n_cells=4, m=2, k=4, n_iter=2, dim=8)
-    assert co_f == co_cg and cb_f == cb_cg
-    assert {r.vec_id: (r.cell, list(r.codes)) for r in enc_f.collect()} == enc_cg
+    assert co_f == coarse and cb_f == cbs
+    assert {r.vec_id: (r.cell, list(r.codes)) for r in enc_f.collect()} == enc
 
-    enc = ivfpq_encode(df, co_cg, cb_cg)
-    query = df.where("vec_id = 30").collect()[0]["embedding"]
-    s_cg = [
-        tuple(r)
-        for r in ivfpq_search(enc, co_cg, cb_cg, query, nprobe=2, top_k=10, engine="codegen").collect()
-    ]
-    s_ar = [
-        tuple(r)
-        for r in ivfpq_search(enc, co_cg, cb_cg, query, nprobe=2, top_k=10, engine="arrow").collect()
-    ]
-    assert s_cg == s_ar
+    query = df.where("vec_id = 0").collect()[0]["embedding"]
+    got = sorted(
+        map(tuple, ivfpq_search(enc_f, coarse, cbs, query, nprobe=4, top_k=48).collect())
+    )
+    assert len(got) == 48
+    oracle = _ivfpq_oracle(n_cells=4, m=2, k=4, sub=4, d=8, n_iter=2, nprobe=4, topk=48)
+    assert got == embeddings_oracle(df, oracle)
 
 
 def test_pq_production_parameter_plan_ceiling(spark):
-    """Round-7 scale pin: at real-world PQ parameters (k=256, m=8, d=256 —
-    ~65k inlined literals on the codegen path, measured ~80 s of py4j plan
-    construction) the auto engine must route to the arrow path and build +
-    analyze + execute the encode plan in seconds, not minutes."""
+    """Scale pin: at real-world PQ parameters (k=256, m=8, d=256 — ~65k
+    codebook values, which as inlined SQL literals took ~80 s of plan
+    construction) the encode plan must build, analyze and execute in
+    seconds, not minutes: codebooks travel as closure state."""
     import random
     import time
 
-    from zio_analytics_spark.operators.pq import _pick_engine
-
     k, m, d = 256, 8, 256
-    assert _pick_engine("auto", k * d) == "arrow"
-    # Round-16: the auto threshold moved 2048 -> 384 (Janino COMPILE cost
-    # dominates below the old plan-BUILD wall; measured in pq.py's module
-    # docstring), so the shipped 16x64 shape now routes to arrow too and
-    # only genuinely small expressions keep codegen.
-    assert _pick_engine("auto", 16 * 64) == "arrow"
-    assert _pick_engine("auto", 2 * 4 * 16) == "codegen"  # ivfpq_search LUTs
-
     rnd = random.Random(11)
     sub_d = d // m
     cbs = [
@@ -186,7 +175,7 @@ def test_pq_production_parameter_plan_ceiling(spark):
         F.array(*[F.rand(seed=3) for _ in range(d)]).alias("embedding"),
     )
     t0 = time.time()
-    enc = pq_encode(df, cbs)  # engine=auto -> arrow
+    enc = pq_encode(df, cbs)
     enc.schema  # analysis
     n = enc.count()  # execution
     elapsed = time.time() - t0
@@ -196,11 +185,14 @@ def test_pq_production_parameter_plan_ceiling(spark):
     assert elapsed < 15.0, f"production-parameter encode took {elapsed:.1f}s"
 
 
-def test_pq_engines_equivalent_randomized(spark):
-    """Randomized dims/params: arrow and codegen engines must emit the
-    identical codes (the closest real argmin-tie stress available —
-    uniform random vectors with several (m, k, d) shapes)."""
+def test_pq_engines_equivalent_randomized(spark, embeddings_oracle):
+    """Randomized dims/params: the Spark engine and the catalog's DuckDB
+    PQ replay must give every row the identical ADC distance (the closest
+    real argmin-tie stress available — uniform random vectors with
+    several (m, k, d) shapes)."""
     import random
+
+    from zio_analytics_spark.catalog import _pq_oracle
 
     rnd = random.Random(99)
     for m, k, d in ((2, 3, 8), (4, 5, 16), (1, 7, 6)):
@@ -208,11 +200,11 @@ def test_pq_engines_equivalent_randomized(spark):
             (i, [rnd.uniform(-3, 3) for _ in range(d)]) for i in range(40)
         ]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        cbs = pq_train(df, m=m, k=k, n_iter=2, dim=d, engine="codegen")
-        assert cbs == pq_train(df, m=m, k=k, n_iter=2, dim=d, engine="arrow"), (m, k, d)
-        a = {r.vec_id: list(r.codes) for r in pq_encode(df, cbs, engine="codegen").collect()}
-        b = {r.vec_id: list(r.codes) for r in pq_encode(df, cbs, engine="arrow").collect()}
-        assert a == b, (m, k, d)
+        cbs = pq_train(df, m=m, k=k, n_iter=2, dim=d)
+        enc = pq_encode(df, cbs)
+        got = sorted(map(tuple, pq_adc_topk(enc, cbs, rows[0][1], top_k=40).collect()))
+        assert len(got) == 40, (m, k, d)
+        assert got == embeddings_oracle(df, _pq_oracle(m, k, d // m, 2, 40)), (m, k, d)
 
 
 def test_ivfpq_recall_on_real_embeddings(spark, sf_dir):

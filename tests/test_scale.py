@@ -477,15 +477,17 @@ def test_point_in_time_join_is_keyed(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_kmeans_assignment_is_codegen_not_udf(spark, sf_dir):
-    """The distance argmin must be inlined Column arithmetic (whole-stage
-    codegen) — no Python evaluation in the per-row path."""
+def test_kmeans_assignment_is_batch_stage_not_udf(spark, sf_dir):
+    """The distance argmin runs as one Arrow-batch numpy stage
+    (MapInPandas) — no row-at-a-time Python UDF evaluation — and the scan
+    and projections around it stay whole-stage codegen."""
     from zio_analytics_spark.operators.clustering import kmeans_assign
     from zio_analytics_spark.sources.parquet import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
     out = kmeans_assign(emb, k=4, n_iter=1, dim=64)
     plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan, plan[:500]
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # '*(n)' prefixes are executedPlan's whole-stage-codegen stage markers
     assert "*(1)" in plan, plan[:500]

@@ -7651,10 +7651,9 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrame-native k-means (operators/clustering.py): Lloyd's
     algorithm, 3 fixed iterations, k=10 over the 64-dim embeddings — the
     MLlib-shaped distributed iteration with bounded k·d driver state, a
-    nearest-centroid assignment per round (k·d = 640 literals is above
-    pq's 384-literal codegen ceiling, so ``engine="auto"`` runs the Arrow
-    engine: mapInPandas + numpy argmin), and one k×d-cell aggregate per
-    round. Every determinism lever is pinned so
+    nearest-centroid assignment per round (one mapInPandas stage, numpy
+    argmin per Arrow batch, centroids as closure state), and one
+    k×d-cell aggregate per round. Every determinism lever is pinned so
     the DuckDB oracle replays ALL three iterations and every final
     assignment exactly: data-derived init (k smallest ids), ties to the
     lowest cluster index, centroids rounded 6 dp per update (summation-
@@ -11113,10 +11112,11 @@ def q_similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (256 B → 4 B), and the query runs Asymmetric Distance Computation —
     per-subspace query→centroid lookup tables inlined as literal arrays,
     a row's score = 4 element_at sums inside codegen, plan = scan →
-    project → TakeOrdered. Training is 4 bounded-driver-state Lloyd runs
-    on subvector slices (the kmeans determinism contract: smallest-id
-    init, lowest-code ties, rounded updates); the oracle replays ALL of
-    it — every per-subspace iteration, every code assignment, the lookup
+    project → TakeOrdered. Training and encoding assign through the same
+    mapInPandas + numpy argmin stage as k-means; training is the shared
+    Lloyd loop over 4 subvector slices at once (the kmeans determinism
+    contract: smallest-id init, lowest-code ties, rounded updates); the
+    oracle replays ALL of it — every per-subspace iteration, every code assignment, the lookup
     tables, and the final rounded ADC ranking. Completes the ANN ladder:
     brute (similarity_topk) → LSH/IVF partition-pruned layouts → int8
     scalar quantization → PQ."""

@@ -324,7 +324,8 @@ def random_project(
     All codegen: each output component is one ``zip_with``/``aggregate``
     dot product against a literal sign array (k·d literal numbers — well
     under the round-7 plan-size ceiling for the shipped shapes; at
-    k·d ≳ 10⁵ use the same mapInPandas escape hatch as pq._pick_engine).
+    k·d ≳ 10⁵ the literals belong in closure state, as in the mapInPandas
+    stage k-means and PQ assign through, ``clustering._quantize``).
     One scan, no shuffle, no UDF; the sign matrix never exists as data —
     it is pinned by the md5 derivation (:func:`rp_signs`), which is what
     lets the oracle replay every output coordinate exactly.
