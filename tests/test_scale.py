@@ -544,26 +544,11 @@ def test_bpe_train_pair_count_is_partial_agg(spark, sf_dir):
     """Pair counting must map-side combine (partial_sum before the
     exchange) — the vocab shuffle carries (pair, partial count), not raw
     exploded pairs."""
-    from pyspark.sql import functions as F
-
-    from zio_analytics_spark.operators.bpe import _word_vocab
+    from zio_analytics_spark.operators._subword import pair_counts, word_vocab, words
     from zio_analytics_spark.sources.parquet import read_table
 
-    vocab = _word_vocab(read_table(spark, sf_dir, "documents"), "text")
-    pairs = (
-        vocab.select(
-            "freq",
-            F.explode(
-                F.expr(
-                    "zip_with(slice(syms, 1, size(syms) - 1),"
-                    "         slice(syms, 2, size(syms) - 1),"
-                    "         (a, b) -> struct(a AS lhs, b AS rhs))"
-                )
-            ).alias("p"),
-        )
-        .groupBy("p.lhs", "p.rhs")
-        .agg(F.sum("freq").alias("cnt"))
-    )
+    vocab = word_vocab(read_table(spark, sf_dir, "documents"), words("text"))
+    pairs = pair_counts(vocab)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "partial_sum" in plan, plan[:800]
 

@@ -170,6 +170,8 @@ def test_validation(spark):
         unigram_train(df, n_iters=0)
     with pytest.raises(ValueError):
         unigram_train(df, max_piece_len=0)
+    with pytest.raises(ValueError, match="engine"):
+        unigram_train(df, engine="bogus")
 
 
 def test_plan_shape(spark):
@@ -227,10 +229,11 @@ def test_arrow_is_default_and_in_plan(spark):
     df = spark.createDataFrame(
         [(1, "the cat sat on the mat")], "doc_id long, text string"
     )
+    from zio_analytics_spark.operators._subword import word_vocab, words
     from zio_analytics_spark.tmpdirs import materialize_table
 
     vocab = materialize_table(
-        U._word_freqs(df, "text", "[a-z]+"), prefix="zas_unigram_voc_"
+        word_vocab(df, words("text", "[a-z]+"), syms=None), prefix="zas_unigram_voc_"
     )
     plan = (
         U._viterbi_recount_arrow(vocab, {"t": -1, "h": -1, "e": -1}, 3)

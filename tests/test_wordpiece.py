@@ -127,6 +127,8 @@ def test_wordpiece_validation(spark):
     df = spark.createDataFrame([(0, "abc")], "doc_id long, text string")
     with pytest.raises(ValueError, match="n_merges"):
         wordpiece_train(df, n_merges=0)
+    with pytest.raises(ValueError, match="engine"):
+        wordpiece_train(df, n_merges=2, engine="bogus")
 
 
 def test_wordpiece_wordless_docs_excluded(spark):

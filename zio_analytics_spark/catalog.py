@@ -10884,11 +10884,10 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND the post-merge corpus symbol total, so both the selection and
     the application step are pinned; text_bpe_tokens is the fixed-lexer
     counting sibling, this entry is the trainer."""
+    from zio_analytics_spark.operators._subword import BPE_RESULTS, results_frame
+
     results, _ = _bpe_model(spark, sf_dir)
-    return spark.createDataFrame(
-        results,
-        "iter int, lhs string, rhs string, pair_count bigint, total_syms bigint",
-    )
+    return results_frame(spark, results, BPE_RESULTS)
 
 
 def _pq_oracle(m: int = 4, k: int = 16, sub: int = 16, n_iter: int = 2, topk: int = 10) -> str:
@@ -15063,10 +15062,10 @@ def q_wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     score denominators pinned, deterministic double-division tiebreak,
     and the post-merge symbol total; naive-equivalence vs a dict-based
     reference trainer is asserted over three corpora in test_wordpiece."""
-    from zio_analytics_spark.operators.wordpiece import wordpiece_results_df
+    from zio_analytics_spark.operators._subword import WP_RESULTS, results_frame
 
     results, _ = _wordpiece_model(spark, sf_dir)
-    return wordpiece_results_df(spark, results)
+    return results_frame(spark, results, WP_RESULTS)
 
 
 @register("wordpiece_segment", oracle=_wordpiece_segment_oracle())

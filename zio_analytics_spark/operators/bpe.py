@@ -6,20 +6,11 @@ of Rare Words with Subword Units" — public algorithm), which is the actual
 scale problem in tokenizer construction: every iteration needs corpus-wide
 pair frequencies.
 
-Scale design (the classic trainer restated for Spark):
-
-- The corpus is scanned ONCE to build the ``(word, freq)`` vocabulary.
-  Everything after runs on that vocab table, whose size is Zipf-bounded by
-  the language, NOT by corpus row count — at 100 TB the distinct-word table
-  is still broadcast-scale, so iteration cost is corpus-size-independent.
-- Pair counting is a map-side-combinable ``explode → groupBy → sum(freq)``
-  over the vocab; the argmax brings ONE row to the driver per iteration
-  (same bounded-driver-state discipline as clustering.kmeans).
-- Merge application is a pure Column HOF (``aggregate`` over the symbol
-  array — a left-to-right stack: top-of-stack == left and next == right
-  collapses into the merged symbol), so it stays JVM-side with no UDF; the
-  stack scan IS greedy leftmost-non-overlapping merging, the reference
-  semantics of BPE merge application.
+The shared scale shape (one corpus scan into a Zipf-bounded vocab, a
+map-side-combined pair count, a one-row argmax per merge, greedy merge
+application as one Column stack HOF, broadcast-dimension serving) lives in
+``_subword``; this module supplies BPE's pick (most frequent pair), the
+batched variant, and the byte-level (GPT-2) alphabet.
 
 The learned table (one row per iteration: pair, weighted frequency, total
 corpus symbol count after applying the merge) is exactly replayable in SQL:
@@ -32,8 +23,22 @@ unrolls that replay per iteration.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from zio_analytics_spark.operators._subword import (
+    BPE_RESULTS,
+    WORD_PATTERN,
+    assemble_tokens,
+    chars,
+    count_tokens,
+    merge_expr,
+    pair_counts,
+    results_frame,
+    train_merges,
+    word_vocab,
+    words,
+)
 
 __all__ = [
     "bpe_train",
@@ -50,12 +55,6 @@ __all__ = [
     "bpe_serving_dim_bytes",
     "bpe_tokenize_bytes",
 ]
-
-#: default pre-tokenizer: lowercase letter runs — identical in Java regex
-#: and RE2 so the catalog oracle replays the same words. The operator
-#: itself accepts ANY ``word_pattern``/alphabet (symbols bind as literals,
-#: never as SQL text — apostrophes/quotes/unicode train fine).
-WORD_PATTERN = "[a-z]+"
 
 #: GPT-2-STYLE pre-tokenizer (round-10 verdict ask #3) — the production
 #: byte-level-BPE split: contractions, optionally-space-prefixed letter /
@@ -134,136 +133,16 @@ def byte_word_expr(tok):
     )
 
 
-def _byte_words(text_col: str):
-    """Byte-level pre-tokenization as a Column: GPT-2-style split (case
-    preserved), each pre-token mapped to its byte-unicode word."""
-    toks = F.regexp_extract_all(
-        F.col(text_col), F.lit(BYTE_PRETOKEN_PATTERN), 0
-    )
-    return F.transform(toks, byte_word_expr)
+
+def _byte_pretokens(text_col: str):
+    """GPT-2-style pre-tokens of ``text_col`` (case preserved)."""
+    return F.regexp_extract_all(F.col(text_col), F.lit(BYTE_PRETOKEN_PATTERN), 0)
 
 
-def _byte_word_vocab(df: DataFrame, text_col: str) -> DataFrame:
-    """One corpus scan → the (word, freq, syms) table over BYTE-LEVEL
-    words. Same Zipf bound as the word-level vocab (pre-tokens are
-    words-with-a-leading-space), so training stays corpus-size-
-    independent after this scan.
-
-    The per-character byte→unicode mapping (``byte_word_expr`` — hex +
-    per-pair conv/char, the corpus pass's hot path) runs AFTER the
-    group-by, on the Zipf-bounded DISTINCT pre-tokens only: the mapping
-    is injective per byte sequence, so grouping on the raw token is the
-    same partition of the corpus (round-16, guide §2.3 "aggregate before
-    the expensive work" — the byte-train vocab pass measured 3.7 s →
-    ~1 s warm at sf0.1)."""
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(BYTE_PRETOKEN_PATTERN), 0)
-    return (
-        df.select(F.explode(toks).alias("__tok"))
-        .groupBy("__tok")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select(byte_word_expr(F.col("__tok")).alias("word"), "freq")
-        .withColumn("syms", F.regexp_extract_all(F.col("word"), F.lit("."), 0))
-    )
-
-
-def _merge_expr(left: str, right: str):
-    """Column expression applying ONE merge greedily to ``syms``.
-
-    Left-to-right stack scan: push each symbol; when the stack top is
-    ``left`` and the incoming symbol is ``right``, replace the top with the
-    concatenated symbol. Overlaps resolve exactly like the sequential scan
-    (a just-merged top spells ``left+right`` and can never equal ``left``),
-    so this is greedy leftmost-non-overlapping merging as a single
-    whole-stage-codegen expression. Built with the Column API (symbols
-    enter as bound literals, never interpolated into SQL text), so ANY
-    alphabet works — apostrophes, quotes, unicode.
-    """
-    empty = F.array().cast("array<string>")
-
-    def step(acc, x):
-        mergeable = (
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (x == F.lit(right))
-        )
-        return F.when(
-            mergeable,
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(F.lit(left + right))
-            ),
-        ).otherwise(F.concat(acc, F.array(x)))
-
-    return F.aggregate(F.col("syms"), empty, step)
-
-
-def _words(text_col: str, word_pattern: str):
-    """Pre-tokenizer as a Column: lowercase + regexp word extraction (the
-    pattern enters as a bound literal, not SQL text)."""
-    return F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(word_pattern), 0)
-
-
-def _word_vocab(df: DataFrame, text_col: str, word_pattern: str = WORD_PATTERN) -> DataFrame:
-    """One corpus scan → the Zipf-bounded ``(word, freq, syms)`` table."""
-    return (
-        df.select(F.explode(_words(text_col, word_pattern)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .withColumn("syms", F.regexp_extract_all(F.col("word"), F.lit("."), 0))
-    )
-
-
-def _train_loop(vocab: DataFrame, n_merges: int) -> tuple[list, DataFrame]:
-    """Run the merge-learning iterations; returns (merge rows, FINAL vocab —
-    persisted, caller unpersists). Driver state per iteration: one
-    (lhs, rhs, count) row + one scalar."""
-    # the vocab is re-scanned 2x per iteration — keep it materialized, and
-    # re-materialize after each merge so iteration lineage doesn't stack.
-    # Round-16: the post-merge corpus symbol total rides the NEXT
-    # iteration's pair-count job as an Observation over the same cached
-    # scan (same sum(freq·|syms|) expression, same rows) instead of its
-    # own collect — one Spark job per iteration instead of two; only the
-    # last iteration still pays a dedicated total pass (which doubles as
-    # the action that materializes the final vocab's cache for callers).
-    from pyspark.sql import Observation
-
-    total_expr = F.sum(F.col("freq") * F.size("syms")).alias("t")
-    cur = vocab.persist()
-    results = []
-    pending = None  # previous iteration's (it, lhs, rhs, cnt) awaiting total
-    for it in range(n_merges):
-        obs = Observation() if pending is not None else None
-        base = cur.observe(obs, total_expr) if obs is not None else cur
-        pairs = (
-            base.select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "zip_with(slice(syms, 1, size(syms) - 1),"
-                        "         slice(syms, 2, size(syms) - 1),"
-                        "         (a, b) -> struct(a AS lhs, b AS rhs))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.lhs", "p.rhs")
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        top = pairs.orderBy(F.desc("cnt"), "lhs", "rhs").limit(1).collect()
-        if obs is not None:
-            results.append((*pending, int(obs.get["t"])))
-            pending = None
-        if not top:  # vocabulary of single-symbol words: nothing to merge
-            break
-        best = top[0]
-        nxt = cur.withColumn(
-            "syms", _merge_expr(best["lhs"], best["rhs"])
-        ).persist()
-        pending = (it, best["lhs"], best["rhs"], int(best["cnt"]))
-        cur.unpersist()
-        cur = nxt
-    if pending is not None:
-        total = cur.agg(total_expr).collect()[0]["t"]
-        results.append((*pending, int(total)))
-    return results, cur
+def _best_by_count(_cur: DataFrame, pairs: DataFrame):
+    """BPE's pick: the most frequent pair, ties to (lhs, rhs) ascending."""
+    top = pairs.orderBy(F.desc("cnt"), "lhs", "rhs").limit(1).collect()  # bound: 1 row
+    return (top[0]["lhs"], top[0]["rhs"], int(top[0]["cnt"])) if top else None
 
 
 def bpe_train(
@@ -282,14 +161,10 @@ def bpe_train(
     merge — a corpus-level invariant that pins the application step, not
     just the argmax.
     """
-    spark: SparkSession = df.sparkSession
-    vocab = _word_vocab(df, text_col, word_pattern).select("freq", "syms")
-    results, cur = _train_loop(vocab, n_merges)
+    vocab = word_vocab(df, words(text_col, word_pattern)).select("freq", "syms")
+    results, cur = train_merges(vocab, n_merges, _best_by_count)
     cur.unpersist()
-    return spark.createDataFrame(
-        results,
-        "iter int, lhs string, rhs string, pair_count bigint, total_syms bigint",
-    )
+    return results_frame(df.sparkSession, results, BPE_RESULTS)
 
 
 def _batch_compatible(lhs: str, rhs: str, used: set, concats: set) -> bool:
@@ -332,6 +207,8 @@ def _greedy_select(pairs: DataFrame, target: int) -> list:
     concats: set = set()
     acc: list = []
     while True:
+        # bound: max(64, 8·target) rows, doubling only while fewer than
+        # ``target`` compatible pairs turned up (at worst every distinct pair)
         rows = pairs.orderBy(F.desc("cnt"), "lhs", "rhs").limit(window).collect()
         for row in rows[seen:]:
             l, r = row["lhs"], row["rhs"]
@@ -387,46 +264,44 @@ def bpe_train_batched(
     ``min(batch, remaining)`` target slots, so a DuckDB oracle can replay
     the exact round layout; a round that finds no pairs at all ends
     training (all-single-symbol vocabulary)."""
-    spark: SparkSession = df.sparkSession
     if batch < 1:
         raise ValueError(f"batch must be >= 1, got {batch}")
-    vocab = _word_vocab(df, text_col, word_pattern).select("freq", "syms")
+    vocab = word_vocab(df, words(text_col, word_pattern)).select("freq", "syms")
     cur = vocab.persist()
     results = []
     n_rounds = -(-n_merges // batch)
     for rnd in range(n_rounds):
         target = min(batch, n_merges - rnd * batch)
-        pairs = (
-            cur.select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "zip_with(slice(syms, 1, size(syms) - 1),"
-                        "         slice(syms, 2, size(syms) - 1),"
-                        "         (a, b) -> struct(a AS lhs, b AS rhs))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.lhs", "p.rhs")
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        selected = _greedy_select(pairs, target)
+        selected = _greedy_select(pair_counts(cur), target)
         if not selected:  # single-symbol vocabulary: nothing left to merge
             break
         nxt = cur
         for l, r, _cnt in selected:
-            nxt = nxt.withColumn("syms", _merge_expr(l, r))
+            nxt = nxt.withColumn("syms", merge_expr(l, r, l + r))
         nxt = nxt.persist()
+        # bound: 1 row
         total = nxt.agg(F.sum(F.col("freq") * F.size("syms")).alias("t")).collect()[0]["t"]
         for slot, (l, r, cnt) in enumerate(selected):
             results.append((rnd, slot, l, r, cnt, int(total)))
         cur.unpersist()
         cur = nxt
     cur.unpersist()
-    return spark.createDataFrame(
+    return results_frame(
+        df.sparkSession,
         results,
         "round int, slot int, lhs string, rhs string, pair_count bigint, total_syms bigint",
     )
+
+
+def _model(vocab: DataFrame, n_merges: int, prefix: str) -> tuple[list, DataFrame]:
+    """Train on a ``(word, freq, syms)`` vocab; returns the merge rows and
+    the trained ``(word, syms)`` segmentation as a materialized scan."""
+    from zio_analytics_spark.tmpdirs import materialize_table
+
+    results, cur = train_merges(vocab, n_merges, _best_by_count)
+    seg = materialize_table(cur.select("word", "syms"), prefix=prefix)
+    cur.unpersist()
+    return results, seg
 
 
 def bpe_model(
@@ -442,13 +317,7 @@ def bpe_model(
     materialized parquet scan — the broadcast dimension every serving
     pass (:func:`bpe_segment` / :func:`bpe_tokenize`) derives from with
     zero training jobs."""
-    from zio_analytics_spark.tmpdirs import materialize_table
-
-    vocab = _word_vocab(df, text_col, word_pattern)
-    results, cur = _train_loop(vocab, n_merges)
-    seg = materialize_table(cur.select("word", "syms"), prefix="zas_bpe_seg_")
-    cur.unpersist()
-    return results, seg
+    return _model(word_vocab(df, words(text_col, word_pattern)), n_merges, "zas_bpe_seg_")
 
 
 def bpe_segment(
@@ -460,36 +329,16 @@ def bpe_segment(
     seg: DataFrame | None = None,
 ) -> DataFrame:
     """Apply-side of the trainer: segment every document with the learned
-    merges and return ``(id, n_words, n_tokens)`` per document.
-
-    Scale shape — the reason application is NOT "replay the merges per
-    document": segmentation is computed ONCE on the Zipf-bounded vocab
-    (the same iteration loop as training), producing a
-    ``word → subword-count`` dimension table; the corpus pass is then one
-    explode + broadcast dimension join + per-doc sum. With a real 50 k-
-    merge tokenizer the per-document work is identical — only the vocab
-    table's segmentation gets deeper — so corpus cost stays one scan
-    regardless of merge count. Documents with no ``[a-z]+`` word are
-    excluded (no tokens), matching the oracle's inner join.
+    merges and return ``(id, n_words, n_tokens)`` per document (the
+    ``_subword`` serving shape: the vocab is segmented once, never the
+    merges replayed per document).
 
     ``seg`` is the pretrained ``(word, syms)`` table from
     :func:`bpe_model`; when given, zero training jobs run here.
     """
     if seg is None:
         _, seg = bpe_model(df, text_col, n_merges, word_pattern)
-    dim = seg.select("word", F.size("syms").alias("n_sub"))
-    words = df.select(
-        F.col(id_col),
-        F.explode(_words(text_col, word_pattern)).alias("word"),
-    )
-    return (
-        words.join(F.broadcast(dim), "word")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_sub").alias("n_tokens"),
-        )
-    )
+    return count_tokens(df, id_col, words(text_col, word_pattern), seg)
 
 
 def bpe_tokenize(
@@ -501,42 +350,21 @@ def bpe_tokenize(
     seg: DataFrame | None = None,
 ) -> DataFrame:
     """Emit the actual SUBWORD SEQUENCE per document — the tokenizer's
-    serving surface (``bpe_segment`` emits only counts): train the merges,
-    segment the Zipf-bounded vocab once, then one corpus pass reassembles
-    each document's token stream in word order.
-
-    Returns ``(id, tokens array<string>, n_tokens)``. Scale shape matches
-    bpe_segment: the ``word → syms`` dimension broadcasts; the corpus pass
-    is posexplode → broadcast join → per-doc ordered reassembly
-    (array_sort over (pos, syms) structs + flatten — all codegen). The
-    output row carries the tokenized document, so this stage's output
-    volume ≈ input volume: at 100 TB you'd write it straight to the
-    training-shard sink (sequence packing consumes exactly this shape).
-    Documents with no word are excluded (no tokens), like bpe_segment.
+    serving surface (``bpe_segment`` emits only counts). Returns
+    ``(id, tokens array<string>, n_tokens)``, tokens in word order.
 
     ``seg`` is the pretrained ``(word, syms)`` table from
     :func:`bpe_model`; when given, zero training jobs run here.
     """
     if seg is None:
         _, seg = bpe_model(df, text_col, n_merges, word_pattern)
-    dim = seg.select("word", "syms")
-    words = df.select(
-        F.col(id_col),
-        F.posexplode(_words(text_col, word_pattern)).alias("pos", "word"),
-    )
-    assembled = (
-        words.join(F.broadcast(dim), "word")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "syms"))),
-                    lambda s: s["syms"],
-                )
-            ).alias("tokens")
-        )
-    )
-    return assembled.select(id_col, "tokens", F.size("tokens").alias("n_tokens"))
+    return assemble_tokens(df, id_col, words(text_col, word_pattern), seg)
+
+
+def _byte_vocab(df: DataFrame, text_col: str) -> DataFrame:
+    """The ``(word, freq, syms)`` vocab over BYTE-LEVEL words: the
+    byte→unicode mapping runs once per distinct pre-token."""
+    return word_vocab(df, _byte_pretokens(text_col), word=byte_word_expr)
 
 
 def bpe_train_bytes(
@@ -548,20 +376,15 @@ def bpe_train_bytes(
     #3): GPT-2-style pre-tokenization (:data:`BYTE_PRETOKEN_PATTERN`,
     case preserved, leading spaces bind to words), words decomposed to
     the 256-symbol byte-unicode alphabet (:func:`byte_to_unicode`), then
-    the EXACT :func:`bpe_train` merge loop — pair counts over the
-    Zipf-bounded vocab, (cnt DESC, lhs, rhs) argmax, greedy merge
-    application as one codegen HOF. Same output schema as bpe_train.
+    the EXACT :func:`bpe_train` merge loop. Same output schema as
+    bpe_train.
 
     No [UNK] by construction: the starting alphabet covers every byte,
     so any text — any language, any binary-ish junk — segments."""
-    spark: SparkSession = df.sparkSession
-    vocab = _byte_word_vocab(df, text_col).select("freq", "syms")
-    results, cur = _train_loop(vocab, n_merges)
+    results, cur = train_merges(_byte_vocab(df, text_col).select("freq", "syms"),
+                                n_merges, _best_by_count)
     cur.unpersist()
-    return spark.createDataFrame(
-        results,
-        "iter int, lhs string, rhs string, pair_count bigint, total_syms bigint",
-    )
+    return results_frame(df.sparkSession, results, BPE_RESULTS)
 
 
 def bpe_model_bytes(
@@ -573,13 +396,7 @@ def bpe_model_bytes(
     per-merge row list (bounded driver state — this IS the merge table a
     GPT-style tokenizer ships) plus the trained vocab segmentation as a
     materialized parquet scan (the serving fast path for seen words)."""
-    from zio_analytics_spark.tmpdirs import materialize_table
-
-    vocab = _byte_word_vocab(df, text_col)
-    results, cur = _train_loop(vocab.select("word", "freq", "syms"), n_merges)
-    seg = materialize_table(cur.select("word", "syms"), prefix="zas_bbpe_seg_")
-    cur.unpersist()
-    return results, seg
+    return _model(_byte_vocab(df, text_col), n_merges, "zas_bbpe_seg_")
 
 
 def bpe_serving_dim_bytes(
@@ -587,31 +404,25 @@ def bpe_serving_dim_bytes(
     merges: list,
     text_col: str = "text",
 ) -> DataFrame:
-    """Build the OPEN-VOCABULARY serving dimension ``(word, syms)`` for a
-    serving corpus: every distinct byte-word of ``df`` decomposed to byte
-    symbols, then the learned ``merges`` replayed in training order as
-    n_merges chained codegen HOFs. This is the expensive half of
-    :func:`bpe_tokenize_bytes` (the per-character ``regexp_extract_all``
-    byte mapping plus the merge chain over the Zipf-bounded distinct-word
-    table); it is deterministic given (corpus, merges), so a serving
-    pipeline materializes it ONCE beside the model artifact and every
-    corpus pass joins the stored table (the bpe_model seg discipline,
-    VERDICT r12 #1a)."""
-    # Distinct RAW pre-tokens first; the injective per-character byte
-    # mapping then runs once per distinct token, and the dimension keeps
-    # the raw token as a join key so the corpus pass never pays the
-    # mapping per occurrence (round-16 — see _byte_word_vocab).
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(BYTE_PRETOKEN_PATTERN), 0)
+    """Build the OPEN-VOCABULARY serving dimension ``(tok, word, syms)``
+    for a serving corpus: every distinct raw pre-token ``tok`` of ``df``,
+    its byte-word decomposed to byte symbols, then the learned ``merges``
+    replayed in training order as n_merges chained codegen HOFs. This is
+    the expensive half of :func:`bpe_tokenize_bytes`; it is deterministic
+    given (corpus, merges), so a serving pipeline materializes it ONCE
+    beside the model artifact and every corpus pass joins the stored table
+    on ``tok`` (the bpe_model seg discipline, VERDICT r12 #1a) and never
+    pays the byte mapping per occurrence."""
     dim = (
-        df.select(F.explode(toks).alias("tok"))
+        df.select(F.explode(_byte_pretokens(text_col)).alias("tok"))
         .distinct()
         .withColumn("word", byte_word_expr(F.col("tok")))
-        .withColumn("syms", F.regexp_extract_all(F.col("word"), F.lit("."), 0))
+        .withColumn("syms", chars(F.col("word")))
     )
     for row in merges:
         lhs = row["lhs"] if not isinstance(row, tuple) else row[1]
         rhs = row["rhs"] if not isinstance(row, tuple) else row[2]
-        dim = dim.withColumn("syms", _merge_expr(lhs, rhs))
+        dim = dim.withColumn("syms", merge_expr(lhs, rhs, lhs + rhs))
     return dim
 
 
@@ -631,49 +442,15 @@ def bpe_tokenize_bytes(
     byte symbols — so there is no [UNK] and no dropped word, unlike the
     closed-vocab join of :func:`bpe_tokenize` (asserted in test_bpe).
 
-    Scale shape: merges apply on the SERVING corpus's distinct-word
-    table (Zipf-bounded — n_merges chained codegen HOFs over it, zero
-    training jobs, zero Python), then the corpus pass is the same
-    posexplode → broadcast join → ordered reassembly as bpe_tokenize.
-
     Returns ``(id, tokens array<string>, n_tokens)`` — token strings in
     the byte-unicode alphabet ('Ġhello'-style), documents with no
     pre-token excluded (empty text), matching the oracle's inner join.
 
-    ``dim`` is a precomputed serving dimension from
+    ``dim`` is a precomputed ``(tok, word, syms)`` serving dimension from
     :func:`bpe_serving_dim_bytes` (e.g. materialized beside the model
     artifact); when given, the merge replay is skipped and this is one
     corpus pass.
     """
     if dim is None:
         dim = bpe_serving_dim_bytes(df, merges, text_col)
-    if "tok" in dim.columns:
-        # Round-16 dim shape: join on the RAW pre-token — the corpus pass
-        # pays only pre-tokenization, never the per-character byte mapping
-        # (it lives in the dim build, once per distinct token).
-        raw = F.regexp_extract_all(
-            F.col(text_col), F.lit(BYTE_PRETOKEN_PATTERN), 0
-        )
-        words = df.select(
-            F.col(id_col), F.posexplode(raw).alias("pos", "tok")
-        )
-        join_key = "tok"
-    else:  # stored pre-round-16 dims keyed by byte-word only
-        words = df.select(
-            F.col(id_col),
-            F.posexplode(_byte_words(text_col)).alias("pos", "word"),
-        )
-        join_key = "word"
-    assembled = (
-        words.join(F.broadcast(dim), join_key)
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "syms"))),
-                    lambda s: s["syms"],
-                )
-            ).alias("tokens")
-        )
-    )
-    return assembled.select(id_col, "tokens", F.size("tokens").alias("n_tokens"))
+    return assemble_tokens(df, id_col, _byte_pretokens(text_col), dim, key="tok")

@@ -21,25 +21,12 @@ bit-for-bit:
   the match with the SMALLEST start (= longest last piece), recursively;
 - seed selection tie-break: candidates rank by (count DESC, piece ASC).
 
-Scale design (the same discipline as bpe.py):
-
-- ONE corpus scan builds the Zipf-bounded ``(word, freq)`` vocabulary;
-  every EM iteration runs on that table — iteration cost is independent
-  of corpus row count, so a 100 TB corpus trains at the same per-round
-  cost as a 1 GB one (only the single vocab-building scan scales).
-- The piece table is bounded by ``top_k + |alphabet|`` rows and BROADCASTS
-  into the substring-match join; the per-word Viterbi (DP + backtrace) is
-  a pure Column higher-order-function pipeline — whole-stage codegen, no
-  UDF, no driver loop over rows. Driver state per iteration: one scalar
-  (nothing — the total enters the plan via a broadcast 1-row aggregate).
-- Single characters are never pruned (floor count 1): full coverage is
-  guaranteed, so the DP never sees an unreachable position.
-
-The apply side (:func:`unigram_segment`) mirrors ``bpe_segment``:
-segmentation is computed ONCE on the vocab, materialized as a
-``word → token-count`` dimension, and the corpus pass is one explode +
-broadcast join + per-doc sum — corpus cost is one scan regardless of
-vocab size or iteration count.
+Scale shape: the corpus scan, the vocab it builds and the serving passes
+are the ``_subword`` ones every tokenizer here shares. Every EM round runs
+on the Zipf-bounded ``(word, freq)`` vocab, so its cost is independent of
+the corpus row count. The piece table is bounded by ``top_k + |alphabet|``
+rows; single characters are never pruned (floor count 1), so the DP never
+sees an unreachable position.
 
 Reference scope note: the zio-analytics reference (Expression.scala:19-43)
 stops at fixed string ops; tokenizer training is part of this repo's
@@ -51,7 +38,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zio_analytics_spark.operators.bpe import WORD_PATTERN
+from zio_analytics_spark.operators._subword import (
+    WORD_PATTERN,
+    assemble_tokens,
+    count_tokens,
+    engine_name,
+    results_frame,
+    word_vocab,
+    words,
+)
 
 __all__ = ["unigram_train", "unigram_model", "unigram_segment", "unigram_tokenize"]
 
@@ -68,19 +63,6 @@ __all__ = ["unigram_train", "unigram_model", "unigram_segment", "unigram_tokeniz
 #: the bounded piece table) so the only float op keeps bit-identical
 #: JVM semantics in both engines.
 VITERBI_ENGINE = "arrow"
-
-
-def _word_freqs(df: DataFrame, text_col: str, word_pattern: str) -> DataFrame:
-    """One corpus scan → the Zipf-bounded ``(word, freq)`` table."""
-    return (
-        df.select(
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(word_pattern), 0)
-            ).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
 
 
 def _substr_structs(max_piece_len: int):
@@ -119,36 +101,15 @@ def _ilogp_rows(spark: SparkSession, pairs: list) -> list:
     sum the driver already holds), so no aggregate and no broadcast
     exchange: the r16 shape cost ~1-3 s PER ROUND in plan/exchange
     overhead on an 88-row local table (measured r17)."""
-    import pandas as pd
-
     tot = sum(c for _, c in pairs)
-    # pandas input rides the Arrow createDataFrame path: ~0.07 s vs ~0.5-2 s
-    # for the pickled-list path on an 88-row table (measured r17)
-    df = spark.createDataFrame(
-        pd.DataFrame(pairs, columns=["piece", "cnt"]).astype({"cnt": "int64"}),
-        schema="piece string, cnt long",
-    )
-    scored = df.withColumn(
+    scored = results_frame(spark, pairs, "piece string, cnt bigint").withColumn(
         "ilogp",
         F.round(
             (F.log(F.col("cnt").cast("double")) - F.log(F.lit(tot).cast("double")))
             * F.lit(1000000.0)
         ).cast("long"),
     )
-    return [(r["piece"], r["cnt"], r["ilogp"]) for r in scored.collect()]
-
-
-def _pieces_df(spark: SparkSession, scored: list) -> DataFrame:
-    """The BOUNDED ``(piece, cnt, ilogp)`` model table as an Arrow-backed
-    local DataFrame — the values are final driver-side data, so a parquet
-    round-trip (~1.4-2.7 s of committer overhead measured r17) buys
-    nothing: a local frame recomputes nothing and survives clearCache()."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(scored, columns=["piece", "cnt", "ilogp"]).astype(
-        {"cnt": "int64", "ilogp": "int64"}
-    )
-    return spark.createDataFrame(pdf, schema="piece string, cnt long, ilogp long")
+    return [(r["piece"], r["cnt"], r["ilogp"]) for r in scored.collect()]  # bound: |pieces| rows
 
 
 def _viterbi_toks_py(word: str, lp: dict, L: int) -> list:
@@ -381,18 +342,13 @@ def _seed_cand_arrow(
 
 
 def _seed_pieces(
-    vocab: DataFrame,
-    max_piece_len: int,
-    top_k: int,
-    engine: str | None = None,
-    n_parts: int = 1,
-) -> tuple[DataFrame, DataFrame]:
+    vocab: DataFrame, max_piece_len: int, top_k: int, engine: str, n_parts: int
+) -> DataFrame:
     """Seed candidate set: every substring of length ≤ max_piece_len,
     counted with multiplicity × word frequency. Keeps ALL single characters
     (the coverage floor) plus the ``top_k`` multi-char candidates by
-    (count DESC, piece ASC) — a TakeOrdered, never a global window rank.
-    Returns (pieces0, alphabet)."""
-    if (engine or VITERBI_ENGINE) == "arrow":
+    (count DESC, piece ASC) — a TakeOrdered, never a global window rank."""
+    if engine == "arrow":
         cand = (
             _seed_cand_arrow(vocab, max_piece_len, n_parts)
             .groupBy("piece")
@@ -411,7 +367,7 @@ def _seed_pieces(
         .orderBy(F.desc("cnt"), "piece")
         .limit(int(top_k))
     )
-    return singles.unionByName(multi), singles.select("piece")
+    return singles.unionByName(multi)
 
 
 def _em_driver(
@@ -420,8 +376,8 @@ def _em_driver(
     n_iters: int,
     max_piece_len: int,
     top_k: int,
-    engine: str | None = None,
-    n_parts: int | None = None,
+    engine: str,
+    n_parts: int,
 ) -> list[tuple[str, int]]:
     """Run ``n_iters`` hard-EM rounds with BOUNDED driver state; returns the
     FINAL ``[(piece, cnt), …]`` list.
@@ -442,28 +398,20 @@ def _em_driver(
     two nodes; the "sql" path keeps the per-round Column-HOF Viterbi plan
     (re-analyzed + Janino-compiled every round — the r16-measured 10.4 s
     first-shot)."""
-    eng = engine or VITERBI_ENGINE
-    # one cheap count on the checkpointed vocab sizes EVERY Python stage of
-    # the run (seed, per-round recounts, the caller's seg pass)
-    if n_parts is None:
-        n_parts = _vocab_parts(vocab.count(), spark) if eng == "arrow" else 1
-    pieces0, _alpha_df = _seed_pieces(
-        vocab, max_piece_len, top_k, engine=eng, n_parts=n_parts
-    )
-    rows = pieces0.collect()  # bounded: all singles + top_k multis
+    # bound: |alphabet| singles + top_k multis
+    rows = _seed_pieces(vocab, max_piece_len, top_k, engine, n_parts).collect()
     cur: list[tuple[str, int]] = sorted((r["piece"], int(r["cnt"])) for r in rows)
     # WORD_PATTERN-extracted words are plain codepoint strings on both
     # sides, so Python len() and Spark length() agree on "single char"
     alphabet = sorted(p for p, _ in cur if len(p) == 1)
     for _ in range(n_iters):
-        if eng == "arrow":
-            # bounded: |pieces| rows through the SAME ilogp expression
+        if engine == "arrow":
             lp = {p: int(il) for p, _c, il in _ilogp_rows(spark, cur)}
             counts = (
                 _viterbi_recount_arrow(vocab, lp, max_piece_len, n_parts)
                 .groupBy("piece")
                 .agg(F.sum("cnt").alias("cnt"))
-                .collect()
+                .collect()  # bound: ≤ |pieces| rows
             )
         else:
             cur_df = spark.createDataFrame(cur, "piece string, cnt long")
@@ -472,7 +420,7 @@ def _em_driver(
                 .select("freq", F.explode("toks").alias("piece"))
                 .groupBy("piece")
                 .agg(F.sum("freq").alias("cnt"))
-                .collect()
+                .collect()  # bound: ≤ |pieces| rows
             )
         cmap = {r["piece"]: int(r["cnt"]) for r in counts}
         cur = sorted(
@@ -480,6 +428,51 @@ def _em_driver(
             + [(ch, max(cmap.get(ch, 0), 1)) for ch in alphabet]
         )
     return cur
+
+
+def _fit(
+    df: DataFrame,
+    text_col: str,
+    n_iters: int,
+    max_piece_len: int,
+    top_k: int,
+    word_pattern: str,
+    engine: str | None,
+) -> tuple[DataFrame, DataFrame, dict | None, int]:
+    """Validate, scan the vocab once and run EM. Returns ``(vocab, pieces,
+    lp, n_parts)``: the checkpointed ``(word, freq)`` vocab, the final
+    ``(piece, cnt, ilogp)`` table, and on the arrow engine the piece →
+    ilogp dict and the Python-stage fan-out (``None`` and 1 on sql)."""
+    from zio_analytics_spark.tmpdirs import materialize_table
+
+    eng = engine_name(engine, VITERBI_ENGINE, "unigram")
+    if n_iters < 1:
+        raise ValueError(f"n_iters must be >= 1, got {n_iters}")
+    if max_piece_len < 1:
+        raise ValueError(f"max_piece_len must be >= 1, got {max_piece_len}")
+    spark = df.sparkSession
+    # localCheckpoint, not a parquet materialize: the vocab is a training-
+    # internal intermediate re-scanned by every EM round (the same class
+    # cluster_duplicates / linkage checkpoint — §5); the parquet committer
+    # alone cost 1.4-2.7 s per write on this host (measured r17)
+    vocab = word_vocab(df, words(text_col, word_pattern), syms=None).localCheckpoint()
+    # one count (a scalar) on the checkpointed vocab sizes EVERY Python
+    # stage of the run (seed, per-round recounts, the seg pass)
+    n_parts = _vocab_parts(vocab.count(), spark) if eng == "arrow" else 1
+    final = _em_driver(spark, vocab, n_iters, max_piece_len, top_k, eng, n_parts)
+    if eng == "arrow":
+        # same values as _with_ilogp (the JVM expression ran in
+        # _ilogp_rows); the BOUNDED final table ships as an Arrow local
+        # frame — a parquet round-trip (~1.4-2.7 s of committer overhead,
+        # measured r17) buys nothing and clearCache() cannot evict it
+        scored = _ilogp_rows(spark, final)
+        pieces = results_frame(spark, scored, "piece string, cnt bigint, ilogp bigint")
+        return vocab, pieces, {p: int(il) for p, _c, il in scored}, n_parts
+    pieces = materialize_table(
+        _with_ilogp(spark.createDataFrame(final, "piece string, cnt long")),
+        prefix="zas_unigram_",
+    )
+    return vocab, pieces, None, n_parts
 
 
 def unigram_train(
@@ -500,29 +493,7 @@ def unigram_train(
     Viterbi implementation ("arrow" default / "sql" reference — identical
     results, pinned in test_unigram).
     """
-    from zio_analytics_spark.tmpdirs import materialize_table
-
-    if n_iters < 1:
-        raise ValueError(f"n_iters must be >= 1, got {n_iters}")
-    if max_piece_len < 1:
-        raise ValueError(f"max_piece_len must be >= 1, got {max_piece_len}")
-    spark = df.sparkSession
-    # localCheckpoint, not a parquet materialize: the vocab is a training-
-    # internal intermediate re-scanned by every EM round (the same class
-    # cluster_duplicates / linkage checkpoint — §5); the parquet committer
-    # alone cost 1.4-2.7 s per write on this host (measured r17)
-    vocab = _word_freqs(df, text_col, word_pattern).localCheckpoint()
-    eng = engine or VITERBI_ENGINE
-    final = _em_driver(spark, vocab, n_iters, max_piece_len, top_k, engine=eng)
-    if eng == "arrow":
-        # same values as _with_ilogp (the JVM expression ran in
-        # _ilogp_rows); the BOUNDED final table ships as an Arrow local
-        # frame — nothing to recompute, nothing clearCache() can evict
-        return _pieces_df(spark, _ilogp_rows(spark, final))
-    return materialize_table(
-        _with_ilogp(spark.createDataFrame(final, "piece string, cnt long")),
-        prefix="zas_unigram_",
-    )
+    return _fit(df, text_col, n_iters, max_piece_len, top_k, word_pattern, engine)[1]
 
 
 def unigram_model(
@@ -539,45 +510,24 @@ def unigram_model(
     shape from classify.py): train ONCE, hand the artifacts to every
     serving call instead of re-running EM inside each query.
 
-    Returns ``(pieces, seg)``, both materialized parquet scans:
+    Returns ``(pieces, seg)``:
 
     - ``pieces`` — ``(piece, cnt, ilogp)``, exactly :func:`unigram_train`'s
       output;
     - ``seg`` — ``(word, toks array<string>)``, the final model's Viterbi
       segmentation of the Zipf-bounded vocab (tokens last-piece-first, the
-      backtrace order) — the dimension both :func:`unigram_segment` and
-      :func:`unigram_tokenize` broadcast.
-
-    At 100 TB these are the slim model tables a pipeline stores next to
-    the tokenizer config; every downstream corpus pass is then one scan +
-    broadcast join with zero training jobs."""
+      backtrace order), materialized — the dimension both
+      :func:`unigram_segment` and :func:`unigram_tokenize` broadcast."""
     from zio_analytics_spark.tmpdirs import materialize_table
 
-    if n_iters < 1:
-        raise ValueError(f"n_iters must be >= 1, got {n_iters}")
-    if max_piece_len < 1:
-        raise ValueError(f"max_piece_len must be >= 1, got {max_piece_len}")
-    spark = df.sparkSession
-    vocab = _word_freqs(df, text_col, word_pattern).localCheckpoint()
-    eng = engine or VITERBI_ENGINE
-    n_parts = _vocab_parts(vocab.count(), spark) if eng == "arrow" else None
-    final = _em_driver(
-        spark, vocab, n_iters, max_piece_len, top_k, engine=eng, n_parts=n_parts
+    vocab, pieces, lp, n_parts = _fit(
+        df, text_col, n_iters, max_piece_len, top_k, word_pattern, engine
     )
-    if eng == "arrow":
-        scored = _ilogp_rows(spark, final)  # same JVM expression, one job
-        pieces = _pieces_df(spark, scored)
-        lp = {p: int(il) for p, _c, il in scored}
-        seg_df = _viterbi_paths_arrow(
-            vocab, lp, max_piece_len, n_parts
-        ).select("word", "toks")
+    if lp is not None:
+        seg_df = _viterbi_paths_arrow(vocab, lp, max_piece_len, n_parts)
     else:
-        pieces = materialize_table(
-            _with_ilogp(spark.createDataFrame(final, "piece string, cnt long")),
-            prefix="zas_unigram_",
-        )
-        seg_df = _viterbi_paths(vocab, pieces, max_piece_len).select("word", "toks")
-    seg = materialize_table(seg_df, prefix="zas_unigram_seg_")
+        seg_df = _viterbi_paths(vocab, pieces, max_piece_len)
+    seg = materialize_table(seg_df.select("word", "toks"), prefix="zas_unigram_seg_")
     return pieces, seg
 
 
@@ -591,11 +541,8 @@ def unigram_segment(
     word_pattern: str = WORD_PATTERN,
     seg: DataFrame | None = None,
 ) -> DataFrame:
-    """Apply side: Viterbi-segment the Zipf-bounded vocab ONCE into a
-    ``word → token-count`` dimension, then one corpus pass (explode +
-    broadcast join + per-doc sum) — identical scale shape to
-    ``bpe_segment``. Returns ``(id, n_words, n_tokens)``; documents with
-    no word are excluded (no tokens), matching the oracle's inner join.
+    """Apply side: ``(id, n_words, n_tokens)`` per document over the
+    Viterbi segmentation of the vocab (the ``_subword`` serving shape).
 
     ``seg`` is the pretrained ``(word, toks)`` table from
     :func:`unigram_model` — the train-offline/serve-online split: when
@@ -605,21 +552,8 @@ def unigram_segment(
         _, seg = unigram_model(
             df, text_col, n_iters, max_piece_len, top_k, word_pattern
         )
-    dim = seg.select("word", F.size("toks").alias("n_tok"))
-    words = df.select(
-        F.col(id_col),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(word_pattern), 0)
-        ).alias("word"),
-    )
-    return (
-        words.join(F.broadcast(dim), "word")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_tok").alias("n_tokens"),
-        )
-    )
+    seg = seg.withColumnRenamed("toks", "syms")
+    return count_tokens(df, id_col, words(text_col, word_pattern), seg)
 
 
 def unigram_tokenize(
@@ -632,16 +566,10 @@ def unigram_tokenize(
     word_pattern: str = WORD_PATTERN,
     seg: DataFrame | None = None,
 ) -> DataFrame:
-    """Serving surface (``bpe_tokenize``'s sibling): emit each document's
-    actual PIECE SEQUENCE in word order. Viterbi-segment the Zipf-bounded
-    vocab once into a ``word → pieces`` dimension (backtrace pieces
-    reversed into word order), then one corpus pass reassembles each
-    document: posexplode → broadcast join → per-doc ordered reassembly
-    (array_sort over (pos, pieces) structs + flatten — all codegen).
-    Returns ``(id, tokens array<string>, n_tokens)``; output volume ≈
-    input volume — at 100 TB this writes straight to the training-shard
-    sink (sequence packing consumes exactly this shape). Wordless
-    documents are excluded, like unigram_segment.
+    """Serving surface (``bpe_tokenize``'s sibling): each document's
+    actual PIECE SEQUENCE in word order, ``(id, tokens array<string>,
+    n_tokens)`` — the backtrace pieces are reversed into word order in the
+    broadcast dimension.
 
     ``seg`` is the pretrained ``(word, toks)`` table from
     :func:`unigram_model`; when given, zero training jobs run here."""
@@ -649,23 +577,5 @@ def unigram_tokenize(
         _, seg = unigram_model(
             df, text_col, n_iters, max_piece_len, top_k, word_pattern
         )
-    dim = seg.select("word", F.reverse("toks").alias("pieces"))
-    words = df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(word_pattern), 0)
-        ).alias("pos", "word"),
-    )
-    assembled = (
-        words.join(F.broadcast(dim), "word")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "pieces"))),
-                    lambda s: s["pieces"],
-                )
-            ).alias("tokens")
-        )
-    )
-    return assembled.select(id_col, "tokens", F.size("tokens").alias("n_tokens"))
+    dim = seg.select("word", F.reverse("toks").alias("syms"))
+    return assemble_tokens(df, id_col, words(text_col, word_pattern), dim)

@@ -16,13 +16,11 @@ initial alphabet is {first char} ∪ {##c for word-internal chars}, and
 merging ``a`` + ``##b`` yields ``a b`` spelled ``a##b``-stripped → ``ab``,
 while ``##a`` + ``##b`` yields ``##ab``.
 
-Scale design (identical shape to bpe.py, and the reason all three trainers
-share it): ONE corpus scan builds the Zipf-bounded ``(word, freq, syms)``
-vocab; per merge round, pair counts AND symbol unigram counts are two
-map-side-combinable aggregates over that vocab; the score argmax brings
-ONE row to the driver; merge application is the same pure-Column
-stack-scan HOF (no UDF). Iteration cost is corpus-size-independent — at
-100 TB the distinct-word table is still broadcast-scale.
+The shared scale shape (one corpus scan into a Zipf-bounded vocab, a
+one-row argmax per merge, greedy merge application as one Column stack
+HOF, broadcast-dimension serving) lives in ``_subword``. WordPiece adds the
+symbol unigram counts the score needs, and the ``engine="sql"`` reference
+is ``_subword.train_merges`` itself with WordPiece's pick and merge rule.
 
 Determinism contract (what makes the DuckDB oracle exact): the score is
 ``cnt::double / (lhs_cnt · rhs_cnt)`` — one IEEE-double division of exact
@@ -37,26 +35,35 @@ north star.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from zio_analytics_spark.operators.bpe import WORD_PATTERN, _words
+from zio_analytics_spark.operators._subword import (
+    WORD_PATTERN,
+    WP_RESULTS,
+    assemble_tokens,
+    chars,
+    count_tokens,
+    engine_name,
+    results_frame,
+    train_merges,
+    word_vocab,
+    words,
+)
 
 __all__ = ["wordpiece_train", "wordpiece_model", "wordpiece_segment",
-           "wordpiece_tokenize", "wordpiece_vocab_pieces", "wordpiece_apply",
-           "wordpiece_results_df"]
+           "wordpiece_tokenize", "wordpiece_vocab_pieces", "wordpiece_apply"]
 
 #: Default training engine (round-17, guide §4). "arrow": pair/symbol
 #: counting runs as ONE mapInPandas with per-task Counter partials, merges
 #: apply in Python inside the NEXT round's count job (the base vocab is
 #: localCheckpoint'd once; re-apply depth is bounded by
 #: _WP_CHECKPOINT_EVERY), and the post-merge symbol total rides the next
-#: round's job as an Observation (bpe's pattern) — one small constant-shape
-#: job per round. Scoring, the argmax and its (score DESC, lhs, rhs)
-#: tie-break stay in Spark SQL with the same expressions, so every number
-#: the oracle pins is produced by the same engine as before. "sql" keeps
-#: the r16 Column-HOF loop — the cross-engine reference test_wordpiece
-#: pins the arrow path against.
+#: round's job as an Observation — one small constant-shape job per round.
+#: Scoring, the argmax and its (score DESC, lhs, rhs) tie-break are the one
+#: Spark SQL block both engines share (_best_by_score). "sql" runs the
+#: Column-HOF loop ``_subword.train_merges`` — the cross-engine reference
+#: test_wordpiece pins the arrow path against.
 WP_ENGINE = "arrow"
 
 #: bound the Python re-apply depth: every this-many merges the vocab is
@@ -64,62 +71,72 @@ WP_ENGINE = "arrow"
 #: (n_merges in the thousands stays O(k·V), not O(k²·V))
 _WP_CHECKPOINT_EVERY = 8
 
-#: schema of the per-round training rows (wordpiece_train's output)
-_RESULTS_SCHEMA = (
-    "iter int, lhs string, rhs string, pair_count bigint, "
-    "lhs_count bigint, rhs_count bigint, total_syms bigint"
-)
+
+def _merged(lhs: str, rhs: str) -> str:
+    """The merged symbol: ``a`` + ``##b`` → ``ab``, ``##a`` + ``##b`` →
+    ``##ab``. A just-merged stack top is strictly longer than ``lhs`` (a
+    bare ``##`` is never a symbol), so the greedy stack scan holds."""
+    return lhs + (rhs[2:] if rhs.startswith("##") else rhs)
 
 
-def _strip_cont(sym: str) -> str:
-    return sym[2:] if sym.startswith("##") else sym
-
-
-def _wp_vocab(df: DataFrame, text_col: str, word_pattern: str) -> DataFrame:
-    """One corpus scan → (word, freq, syms) with the ``##`` alphabet:
-    first char bare, every word-internal char ##-prefixed."""
-    chars = F.regexp_extract_all(F.col("word"), F.lit("."), 0)
-    syms = F.concat(
-        F.slice(chars, 1, 1),
+def _wp_syms(word):
+    """The ``##`` alphabet: first char bare, every word-internal char
+    ##-prefixed."""
+    cs = chars(word)
+    return F.concat(
+        F.slice(cs, 1, 1),
         F.transform(
-            F.slice(chars, 2, F.greatest(F.size(chars) - 1, F.lit(0))),
+            F.slice(cs, 2, F.greatest(F.size(cs) - 1, F.lit(0))),
             lambda c: F.concat(F.lit("##"), c),
         ),
     )
-    return (
-        df.select(F.explode(_words(text_col, word_pattern)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .withColumn("syms", syms)
-    )
 
 
-def _merge_expr_wp(lhs: str, rhs: str):
-    """One greedy WordPiece merge as a Column HOF — bpe._merge_expr with
-    the ``##``-stripping concat rule. The greedy-leftmost argument holds
-    unchanged: a just-merged stack top spells ``lhs + strip(rhs)`` which is
-    strictly longer than ``lhs`` (a bare ``##`` is never a symbol), so it
-    can never re-match as ``lhs`` — except when lhs == rhs, where the same
-    even-offset-within-run resolution as BPE applies."""
-    merged = lhs + _strip_cont(rhs)
-    empty = F.array().cast("array<string>")
+def _wp_vocab(df: DataFrame, text_col: str, word_pattern: str) -> DataFrame:
+    """One corpus scan → (word, freq, syms) over the ``##`` alphabet."""
+    return word_vocab(df, words(text_col, word_pattern), syms=_wp_syms)
 
-    def step(acc, x):
-        mergeable = (
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(lhs))
-            & (x == F.lit(rhs))
+
+def _best_by_score(pairs: DataFrame, sym_counts: DataFrame):
+    """WordPiece's pick over ``(lhs, rhs, cnt)`` pairs and ``(sym, scnt)``
+    unigram counts: ``cnt::double / (lhs_cnt · rhs_cnt)``, ties to
+    (lhs, rhs) ascending. Returns ``(lhs, rhs, cnt, lhs_cnt, rhs_cnt)`` or
+    None."""
+
+    def side(name):
+        return sym_counts.select(
+            F.col("sym").alias(name), F.col("scnt").alias(f"{name}_cnt")
         )
-        return F.when(
-            mergeable,
-            F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(F.lit(merged))),
-        ).otherwise(F.concat(acc, F.array(x)))
 
-    return F.aggregate(F.col("syms"), empty, step)
+    top = (
+        pairs.join(side("lhs"), "lhs")
+        .join(side("rhs"), "rhs")
+        .withColumn(
+            "score",
+            F.col("cnt").cast("double") / (F.col("lhs_cnt") * F.col("rhs_cnt")),
+        )
+        .orderBy(F.desc("score"), "lhs", "rhs")
+        .limit(1)
+        .collect()  # bound: 1 row
+    )
+    if not top:  # all-single-symbol vocabulary
+        return None
+    b = top[0]
+    return (b["lhs"], b["rhs"], int(b["cnt"]), int(b["lhs_cnt"]), int(b["rhs_cnt"]))
+
+
+def _pick_sql(cur: DataFrame, pairs: DataFrame):
+    """``train_merges``' pick: the symbol counts scan the unobserved vocab."""
+    sym_counts = (
+        cur.select("freq", F.explode("syms").alias("sym"))
+        .groupBy("sym")
+        .agg(F.sum("freq").alias("scnt"))
+    )
+    return _best_by_score(pairs, sym_counts)
 
 
 def _apply_merges_py(syms, merges) -> list:
-    """Exact Python mirror of :func:`_merge_expr_wp`'s stack fold, applied
+    """Exact Python mirror of ``_subword.merge_expr``'s stack fold, applied
     for each learned merge in order: greedy-leftmost, a just-merged top
     never re-matches as lhs except in the lhs == rhs run case, which the
     linear scan resolves identically (even offsets within a run merge)."""
@@ -140,8 +157,6 @@ def _merged_vocab_arrow(base: DataFrame, merges: tuple) -> DataFrame:
     mapInPandas carrying all other columns through unchanged."""
     if not merges:
         return base
-    import pandas as pd
-
     schema = base.schema
     cols = [f.name for f in schema.fields]
 
@@ -188,9 +203,9 @@ def _wp_count_arrow(cur: DataFrame) -> DataFrame:
 def _wp_train_loop_arrow(vocab: DataFrame, n_merges: int) -> tuple[list, DataFrame]:
     """Arrow engine for the merge loop (see ``WP_ENGINE``). Exactness: the
     counts are integer sums (order-free), the score division/argmax/
-    tie-break run in Spark SQL with the r16 expressions, the merge fold is
-    mirrored exactly, and the post-merge total is the same exact integer
-    sum observed on the next round's scan."""
+    tie-break are the sql engine's own block, the merge fold is mirrored
+    exactly, and the post-merge total is the same exact integer sum
+    observed on the next round's scan."""
     from pyspark.sql import Observation
 
     base = vocab.localCheckpoint()
@@ -210,54 +225,27 @@ def _wp_train_loop_arrow(vocab: DataFrame, n_merges: int) -> tuple[list, DataFra
             .groupBy("kind", "a", "b")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        pairs = agg.where(F.col("kind") == "P").select(
-            F.col("a").alias("lhs"), F.col("b").alias("rhs"), "cnt"
+        best = _best_by_score(
+            agg.where(F.col("kind") == "P").select(
+                F.col("a").alias("lhs"), F.col("b").alias("rhs"), "cnt"
+            ),
+            agg.where(F.col("kind") == "S").select(
+                F.col("a").alias("sym"), F.col("cnt").alias("scnt")
+            ),
         )
-        sym_counts = agg.where(F.col("kind") == "S").select(
-            F.col("a").alias("sym"), F.col("cnt").alias("scnt")
-        )
-        scored = (
-            pairs.join(
-                sym_counts.select(
-                    F.col("sym").alias("lhs"), F.col("scnt").alias("lhs_cnt")
-                ),
-                "lhs",
-            )
-            .join(
-                sym_counts.select(
-                    F.col("sym").alias("rhs"), F.col("scnt").alias("rhs_cnt")
-                ),
-                "rhs",
-            )
-            .withColumn(
-                "score",
-                F.col("cnt").cast("double") / (F.col("lhs_cnt") * F.col("rhs_cnt")),
-            )
-        )
-        top = scored.orderBy(F.desc("score"), "lhs", "rhs").limit(1).collect()
         if pending is not None:
-            # the observation on THIS round's scan is Σ freq·|syms| of the
-            # vocab AFTER the pending round's merge — bpe's one-job-per-
-            # iteration trick
+            # this round's scan observed Σ freq·|syms| AFTER the pending merge
             results.append((*pending, int(obs.get["t"])))
             pending = None
-        if not top:  # all-single-symbol vocabulary
+        if best is None:
             break
-        best = top[0]
-        merges.append((best["lhs"], best["rhs"], best["lhs"] + _strip_cont(best["rhs"])))
-        pending = (
-            it,
-            best["lhs"],
-            best["rhs"],
-            int(best["cnt"]),
-            int(best["lhs_cnt"]),
-            int(best["rhs_cnt"]),
-        )
+        merges.append((best[0], best[1], _merged(best[0], best[1])))
+        pending = (it, *best)
     final = _merged_vocab_arrow(base, tuple(merges))
     if pending is not None:
         total = final.agg(
             F.sum(F.col("freq") * F.size("syms")).alias("t")
-        ).collect()[0]["t"]
+        ).collect()[0]["t"]  # bound: 1 row
         results.append((*pending, int(total)))
     return results, final
 
@@ -268,68 +256,9 @@ def _wp_train_loop(
     """The merge-learning loop; returns (rows, FINAL vocab). Driver state
     per round: one 5-number row (plus the bounded merge list on the arrow
     engine)."""
-    if (engine or WP_ENGINE) == "arrow":
+    if engine_name(engine, WP_ENGINE, "wordpiece") == "arrow":
         return _wp_train_loop_arrow(vocab, n_merges)
-    cur = vocab.persist()
-    results = []
-    for it in range(n_merges):
-        pairs = (
-            cur.select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "zip_with(slice(syms, 1, size(syms) - 1),"
-                        "         slice(syms, 2, size(syms) - 1),"
-                        "         (a, b) -> struct(a AS lhs, b AS rhs))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.lhs", "p.rhs")
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        sym_counts = (
-            cur.select("freq", F.explode("syms").alias("sym"))
-            .groupBy("sym")
-            .agg(F.sum("freq").alias("scnt"))
-        )
-        scored = (
-            pairs.join(
-                sym_counts.select(
-                    F.col("sym").alias("lhs"), F.col("scnt").alias("lhs_cnt")
-                ),
-                "lhs",
-            )
-            .join(
-                sym_counts.select(
-                    F.col("sym").alias("rhs"), F.col("scnt").alias("rhs_cnt")
-                ),
-                "rhs",
-            )
-            .withColumn(
-                "score",
-                F.col("cnt").cast("double") / (F.col("lhs_cnt") * F.col("rhs_cnt")),
-            )
-        )
-        top = scored.orderBy(F.desc("score"), "lhs", "rhs").limit(1).collect()
-        if not top:  # all-single-symbol vocabulary
-            break
-        best = top[0]
-        nxt = cur.withColumn("syms", _merge_expr_wp(best["lhs"], best["rhs"])).persist()
-        total = nxt.agg(F.sum(F.col("freq") * F.size("syms")).alias("t")).collect()[0]["t"]
-        results.append(
-            (
-                it,
-                best["lhs"],
-                best["rhs"],
-                int(best["cnt"]),
-                int(best["lhs_cnt"]),
-                int(best["rhs_cnt"]),
-                int(total),
-            )
-        )
-        cur.unpersist()
-        cur = nxt
-    return results, cur
+    return train_merges(vocab, n_merges, _pick_sql, _merged)
 
 
 def wordpiece_train(
@@ -347,32 +276,13 @@ def wordpiece_train(
     unigram symbol counts entering the score denominator (so the oracle
     pins the score's inputs exactly, not just the winner), and
     Σ freq·|syms| over the vocab AFTER the merge (pins the application
-    step, like bpe_train)."""
-    spark: SparkSession = df.sparkSession
+    step, like bpe_train). ``engine`` is "arrow" (default) or "sql"."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     vocab = _wp_vocab(df, text_col, word_pattern).select("freq", "syms")
     results, cur = _wp_train_loop(vocab, n_merges, engine=engine)
     cur.unpersist()
-    return wordpiece_results_df(spark, results)
-
-
-def wordpiece_results_df(spark: SparkSession, results: list) -> DataFrame:
-    """Per-round training rows as a DataFrame (wordpiece_train's schema).
-    pandas input rides the Arrow createDataFrame path — the pickled-list
-    path costs ~0.5-2 s of py4j/Python-runner overhead even for a handful
-    of rows (measured r17); empty results keep the explicit schema."""
-    if not results:
-        return spark.createDataFrame([], _RESULTS_SCHEMA)
-    import pandas as pd
-
-    cols = ["iter", "lhs", "rhs", "pair_count", "lhs_count", "rhs_count",
-            "total_syms"]
-    pdf = pd.DataFrame(results, columns=cols).astype(
-        {"iter": "int32", "pair_count": "int64", "lhs_count": "int64",
-         "rhs_count": "int64", "total_syms": "int64"}
-    )
-    return spark.createDataFrame(pdf, schema=_RESULTS_SCHEMA)
+    return results_frame(df.sparkSession, results, WP_RESULTS)
 
 
 def wordpiece_model(
@@ -414,32 +324,18 @@ def wordpiece_segment(
     seg: DataFrame | None = None,
 ) -> DataFrame:
     """Apply side: segment every document with the learned merges →
-    ``(id, n_words, n_tokens)``. Same shape as bpe_segment: the trained
-    segmentation is computed ONCE on the Zipf-bounded vocab, materialized
-    as a word → piece-count dimension, and the corpus pass is one explode
-    + broadcast join + per-doc sum — corpus cost is one scan regardless
-    of merge count. (This is the merge-consistent segmentation the
-    trainer defines; serving stacks usually apply longest-match over the
-    final vocab, which coincides on merge-closed vocabularies —
-    :func:`wordpiece_tokenize` exposes the pieces themselves, ``##``
-    prefixes included.) Wordless documents are excluded (inner join).
+    ``(id, n_words, n_tokens)`` (the ``_subword`` serving shape). This is
+    the merge-consistent segmentation the trainer defines; serving stacks
+    usually apply longest-match over the final vocab, which coincides on
+    merge-closed vocabularies — :func:`wordpiece_tokenize` exposes the
+    pieces themselves, ``##`` prefixes included, and
+    :func:`wordpiece_apply` runs longest-match.
 
     ``seg`` is the pretrained ``(word, syms)`` table from
     :func:`wordpiece_model`; when given, zero training jobs run here."""
     if seg is None:
         _, seg = wordpiece_model(df, text_col, n_merges, word_pattern)
-    dim = seg.select("word", F.size("syms").alias("n_sub"))
-    words = df.select(
-        F.col(id_col), F.explode(_words(text_col, word_pattern)).alias("word")
-    )
-    return (
-        words.join(F.broadcast(dim), "word")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_sub").alias("n_tokens"),
-        )
-    )
+    return count_tokens(df, id_col, words(text_col, word_pattern), seg)
 
 
 def wordpiece_tokenize(
@@ -451,33 +347,14 @@ def wordpiece_tokenize(
     seg: DataFrame | None = None,
 ) -> DataFrame:
     """Serving surface: the actual ``##``-prefixed piece sequence per
-    document — ``(id, tokens array<string>, n_tokens)``. One corpus pass:
-    posexplode → broadcast word→pieces dimension → ordered reassembly
-    (array_sort over (pos, syms) structs + flatten), exactly
-    bpe_tokenize's plan shape.
+    document — ``(id, tokens array<string>, n_tokens)``, bpe_tokenize's
+    plan shape.
 
     ``seg`` is the pretrained ``(word, syms)`` table from
     :func:`wordpiece_model`; when given, zero training jobs run here."""
     if seg is None:
         _, seg = wordpiece_model(df, text_col, n_merges, word_pattern)
-    dim = seg.select("word", "syms")
-    words = df.select(
-        F.col(id_col),
-        F.posexplode(_words(text_col, word_pattern)).alias("pos", "word"),
-    )
-    assembled = (
-        words.join(F.broadcast(dim), "word")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "syms"))),
-                    lambda s: s["syms"],
-                )
-            ).alias("tokens")
-        )
-    )
-    return assembled.select(id_col, "tokens", F.size("tokens").alias("n_tokens"))
+    return assemble_tokens(df, id_col, words(text_col, word_pattern), seg)
 
 
 def wordpiece_vocab_pieces(
@@ -503,7 +380,7 @@ def wordpiece_vocab_pieces(
         vocab = _wp_vocab(df, text_col, word_pattern).select("freq", "syms")
         results, cur = _wp_train_loop(vocab, n_merges)
     alphabet = {
-        r["sym"]
+        r["sym"]  # bound: ≤ |alphabet| + n_merges rows
         for r in cur.select(F.explode("syms").alias("sym")).distinct().collect()
     }
     if model is None:
@@ -513,9 +390,7 @@ def wordpiece_vocab_pieces(
     # stay in the vocab — serving may still need them)
     pieces = set(alphabet)
     for _it, lhs, rhs, _pc, _lc, _rc, _tot in results:
-        pieces.add(lhs)
-        pieces.add(rhs)
-        pieces.add(lhs + _strip_cont(rhs))
+        pieces.update((lhs, rhs, _merged(lhs, rhs)))
     bare = sorted(p for p in pieces if not p.startswith("##"))
     cont = sorted(p[2:] for p in pieces if p.startswith("##"))
     return bare, cont
@@ -547,12 +422,10 @@ def wordpiece_apply(
     pair from :func:`wordpiece_model`; when given, zero training jobs
     run here (the round-9 bench-breach fix).
 
-    Scale shape: the piece vocab is a broadcast Python set; maximal munch
-    runs ONCE per DISTINCT word of the apply corpus (Zipf-bounded) inside
-    one Arrow ``mapInPandas``, and the corpus pass is posexplode +
-    broadcast dimension join + ordered reassembly — identical plan shape
-    to wordpiece_tokenize. Returns ``(id, tokens array<string>,
-    n_tokens)``; wordless documents are excluded."""
+    The piece vocab is a broadcast Python set; maximal munch runs ONCE per
+    DISTINCT word of the apply corpus (Zipf-bounded) inside one Arrow
+    ``mapInPandas``, and the corpus pass is wordpiece_tokenize's. Returns
+    ``(id, tokens array<string>, n_tokens)``; wordless documents are excluded."""
     import pandas as pd
 
     from zio_analytics_spark.tmpdirs import materialize_table
@@ -564,9 +437,8 @@ def wordpiece_apply(
     max_len = max((len(p) for p in bare_set | cont_set), default=1)
     target = apply_df if apply_df is not None else df
 
-    words = target.select(
-        F.explode(_words(text_col, word_pattern)).alias("word")
-    ).distinct()
+    toks = words(text_col, word_pattern)
+    distinct = target.select(F.explode(toks).alias("word")).distinct()
 
     def munch(batches):
         for pdf in batches:
@@ -590,25 +462,9 @@ def wordpiece_apply(
             yield pd.DataFrame({"word": out_w, "syms": out_p})
 
     dim = materialize_table(
-        words.repartition(
-            words.sparkSession.sparkContext.defaultParallelism
+        distinct.repartition(
+            distinct.sparkSession.sparkContext.defaultParallelism
         ).mapInPandas(munch, "word string, syms array<string>"),
         prefix="zas_wp_mm_",
     )
-    toks = target.select(
-        F.col(id_col),
-        F.posexplode(_words(text_col, word_pattern)).alias("pos", "word"),
-    )
-    assembled = (
-        toks.join(F.broadcast(dim), "word")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "syms"))),
-                    lambda s: s["syms"],
-                )
-            ).alias("tokens")
-        )
-    )
-    return assembled.select(id_col, "tokens", F.size("tokens").alias("n_tokens"))
+    return assemble_tokens(target, id_col, toks, dim)
