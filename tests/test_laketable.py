@@ -728,9 +728,9 @@ def test_storage_seam_routes_all_protocol_io(spark, tmp_path):
 def test_bounded_replay_reads_each_log_file_once(spark, tmp_path):
     """Bounded-replay I/O, counted at the storage seam: with a v10
     checkpoint, a snapshot reads the checkpoint and each tail commit
-    once; MERGE pruning and partition overwrite past the checkpoint read
-    no commit it covers; CDF admission control reads each commit it
-    walks once."""
+    once; file pruning, partition overwrite and MERGE past the checkpoint
+    read no commit it covers and no log file twice; CDF admission control
+    reads each commit it walks once."""
     from collections import Counter
 
     from zio_analytics_spark.sources.lakestream import _LakeCDFStreamReader
@@ -778,13 +778,13 @@ def test_bounded_replay_reads_each_log_file_once(spark, tmp_path):
         spy.reads.clear()
         assert lake.prune_files(spark, t, {"k": (0, 5)})
         assert commits_read() and min(commits_read()) > 10
-        assert max(spy.reads.values()) <= 2
+        assert max(spy.reads.values()) <= 1
         spy.reads.clear()
         assert lake.overwrite_partitions(
             spark.createDataFrame([(900, "eu", -1.0)], schema), t
         ) == 13
         assert commits_read() and min(commits_read()) > 10
-        assert max(spy.reads.values()) <= 2
+        assert max(spy.reads.values()) <= 1
         # v13 replaced every eu file: 11 and 12 fit under 2 files, and
         # v13 is read once to learn that it would exceed the cap
         reader = _LakeCDFStreamReader(
@@ -794,6 +794,12 @@ def test_bounded_replay_reads_each_log_file_once(spark, tmp_path):
         spy.reads.clear()
         assert reader.latestOffset() == {"version": 12}
         assert commits_read() == {11: 1, 12: 1, 13: 1}
+        spy.reads.clear()
+        assert lake.merge(
+            spark, t, spark.createDataFrame([(3, "us", 7.0)], schema)
+        ) == 14
+        assert commits_read() and min(commits_read()) > 10
+        assert max(spy.reads.values()) <= 1
     finally:
         lake.set_storage(prev)
 

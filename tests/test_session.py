@@ -1,17 +1,21 @@
 """Local-mode session sizing: shuffle partitions follow the master's core
 count and the driver heap follows physical memory, unless the caller sets
 them; the generated-code cache holds a repeated multi-entry pass; the driver
-JVM starts with raised C2 compile thresholds; stream checkpoints go through
-Hadoop's FileSystem API. The shared test session pins 8 partitions and JVM
-flags only apply at JVM start, so the end-to-end checks run in fresh
-interpreters."""
+JVM starts with raised C2 compile thresholds and from a cached class-data
+archive; stream checkpoints go through Hadoop's FileSystem API. The shared
+test session pins 8 partitions and JVM flags only apply at JVM start, so the
+end-to-end checks run in fresh interpreters."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import signal
 import subprocess
 import sys
+import time
+import zipfile
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -19,6 +23,7 @@ from pyspark.sql import functions as F
 
 from zio_analytics_spark.session import (
     LOCAL_CHECKPOINT_FILE_MANAGER,
+    _archive_path,
     codegen_stats,
     local_driver_memory,
 )
@@ -34,21 +39,34 @@ POLICY = {
 }
 
 
-def _fresh_session(body: str, **env_overrides: str) -> dict:
-    """Run ``body`` (which builds its own sessions) in a fresh interpreter,
-    so a new driver JVM starts, and return the JSON object it prints last."""
+def _fresh_code(body: str, **env_overrides: str) -> tuple[list[str], dict]:
+    """The command line and environment that run ``body`` in a fresh
+    interpreter, so a new driver JVM starts."""
     code = (
-        "import json, sys; sys.path.insert(0, %r)\n"
+        "import json, os, sys; sys.path.insert(0, %r)\n"
         "from zio_analytics_spark.session import codegen_stats, get_spark\n"
         % REPO
     ) + body
     env = {**os.environ, "SPARK_LOCAL_MODE": "1", **env_overrides}
     env.pop("SPARK_DRIVER_MEMORY", None)
+    return [sys.executable, "-c", code], env
+
+
+def _run_fresh(body: str, **env_overrides: str) -> subprocess.CompletedProcess:
+    """Run ``body`` (which builds its own sessions) in a fresh interpreter;
+    the completed process, whose stdout holds the JVM's too."""
+    cmd, env = _fresh_code(body, **env_overrides)
     out = subprocess.run(
-        [sys.executable, "-c", code], env=env, capture_output=True, text=True,
-        timeout=300,
+        cmd, env=env, capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
+    return out
+
+
+def _fresh_session(body: str, **env_overrides: str) -> dict:
+    """Run ``body`` in a fresh interpreter and return the JSON object it
+    prints last."""
+    out = _run_fresh(body, **env_overrides)
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
@@ -180,3 +198,148 @@ def test_repeated_plans_reuse_generated_code(spark):
     before = codegen_stats(spark)["codegen_compiles"]
     one_round()
     assert codegen_stats(spark)["codegen_compiles"] - before == 0
+
+
+# Reads the driver JVM's class-data-sharing flags, the archives of the cache
+# it has mapped, its SPARK_CONF_DIR, and the cache directory's listing
+_READ_CDS = (
+    "jvm = spark.sparkContext._jvm\n"
+    "cache = os.path.join(os.environ['XDG_CACHE_HOME'], 'zio_analytics_spark')\n"
+    "pid = jvm.java.lang.ProcessHandle.current().pid()\n"
+    "args = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()"
+    ".getInputArguments()\n"
+    "maps = open('/proc/%d/maps' % pid).read().splitlines()\n"
+    "rec = {'cds': [a for a in args if 'Archive' in a or a.startswith('-Xlog:cds')],\n"
+    "       'mapped': sorted({l.split()[-1] for l in maps if cache in l}),\n"
+    "       'conf_dir': jvm.java.lang.System.getenv('SPARK_CONF_DIR'),\n"
+    "       'py_conf_dir': os.environ.get('SPARK_CONF_DIR'),\n"
+    "       'cache': sorted(os.listdir(cache)) if os.path.isdir(cache) else None,\n"
+    "       'pid': os.getpid()}\n"
+    "spark.stop()\n"
+    "print(json.dumps(rec))\n"
+)
+_QUIET = ["-Xlog:cds=off", "-Xlog:cds+dynamic=off"]
+
+
+def _cds_session(
+    tmp_path, extra_conf: dict | None = None, **env_overrides: str
+) -> tuple[dict, str]:
+    """A fresh session caching its archive under ``tmp_path``: the
+    :data:`_READ_CDS` record and the interpreter's stdout."""
+    out = _run_fresh(
+        "spark = get_spark('cds', extra_conf=%r)\n" % (extra_conf or {})
+        + _READ_CDS,
+        XDG_CACHE_HOME=str(tmp_path), **env_overrides,
+    )
+    return json.loads(out.stdout.strip().splitlines()[-1]), out.stdout
+
+
+def _jar(path) -> str:
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
+    return str(path)
+
+
+def test_class_archive_promoted_after_clean_exit_then_mapped(
+    tmp_path, monkeypatch
+):
+    """The first session dumps the archive to a temp file under a lock and
+    promotes it only once its JVM has exited; the next one maps it. A
+    mismatched archive (dumped for another classpath) is not mapped. No
+    session prints a ``[cds]`` line."""
+    cache = tmp_path / "zio_analytics_spark"
+    conf_dir = str(cache / "spark-conf")
+    rec, stdout = _cds_session(tmp_path)
+    (lock,) = [n for n in rec["cache"] if n.endswith(".lock")]
+    archive = str(cache / lock[: -len(".lock")])
+    tmp = f"{archive}.{rec['pid']}.tmp"
+    assert archive.endswith(".jsa")
+    assert rec["cds"] == [f"-XX:ArchiveClassesAtExit={tmp}", *_QUIET]
+    assert rec["cache"] == sorted([lock, "spark-conf"]) and rec["mapped"] == []
+    assert rec["conf_dir"] == conf_dir
+    assert rec["py_conf_dir"] == os.environ.get("SPARK_CONF_DIR")
+    assert sorted(os.listdir(cache)) == sorted([os.path.basename(archive), "spark-conf"])
+    assert os.path.getsize(archive) > 50 << 20
+    assert "[cds" not in stdout
+
+    rec, stdout = _cds_session(tmp_path)
+    assert rec["cds"] == [f"-XX:SharedArchiveFile={archive}", *_QUIET]
+    assert rec["mapped"] == [archive] and rec["conf_dir"] == conf_dir
+    assert sorted(os.listdir(cache)) == sorted([os.path.basename(archive), "spark-conf"])
+
+    extra = {"spark.driver.extraClassPath": _jar(tmp_path / "a.jar")}
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    other, _ = _archive_path(extra)
+    assert other != archive
+    shutil.copy(archive, other)
+    rec, stdout = _cds_session(tmp_path, extra_conf=extra)
+    assert rec["cds"] == [f"-XX:SharedArchiveFile={other}", *_QUIET]
+    assert rec["mapped"] == []
+    assert "[cds" not in stdout
+
+
+def _gone(pid: int) -> bool:
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rpartition(")")[2].split()[0] in ("Z", "X")
+    except FileNotFoundError:
+        return True
+
+
+def test_killed_dumper_promotes_nothing_and_is_swept(tmp_path):
+    """A dumping interpreter killed with SIGKILL never runs its exit hook:
+    its orphaned JVM still writes the archive to the temp file, which stays
+    unpromoted; the next session removes that temp file and the lock and
+    takes the dump over."""
+    cache = tmp_path / "zio_analytics_spark"
+    log = tmp_path / "stdout"
+    cmd, env = _fresh_code(
+        "spark = get_spark('cds')\n"
+        "jvm = spark.sparkContext._jvm\n"
+        "print(json.dumps({'pid': os.getpid(),"
+        " 'jvm': jvm.java.lang.ProcessHandle.current().pid()}), flush=True)\n"
+        "import time; time.sleep(600)\n",
+        XDG_CACHE_HOME=str(tmp_path),
+    )
+    with open(log, "w") as out:
+        child = subprocess.Popen(cmd, env=env, stdout=out, stderr=subprocess.DEVNULL)
+    try:
+        deadline = time.monotonic() + 240
+        while not log.read_text().strip() and time.monotonic() < deadline:
+            assert child.poll() is None
+            time.sleep(0.5)
+        dead = json.loads(log.read_text().strip().splitlines()[-1])
+    finally:
+        child.send_signal(signal.SIGKILL)
+        child.wait()
+    deadline = time.monotonic() + 120
+    while not _gone(dead["jvm"]) and time.monotonic() < deadline:
+        time.sleep(0.5)
+    assert _gone(dead["jvm"])
+    names = os.listdir(cache)
+    assert not [n for n in names if n.endswith(".jsa")]
+    (tmp,) = [n for n in names if n.endswith(f".{dead['pid']}.tmp")]
+    (lock,) = [n for n in names if n.endswith(".lock")]
+    assert (cache / lock).read_text() == str(dead["pid"])
+
+    rec, _ = _cds_session(tmp_path)
+    assert tmp not in rec["cache"] and not any(str(dead["pid"]) in n for n in rec["cache"])
+    assert (lock in rec["cache"]) and rec["cds"][0].startswith("-XX:ArchiveClassesAtExit=")
+    assert sorted(os.listdir(cache)) == sorted([lock[: -len(".lock")], "spark-conf"])
+
+
+def test_conf_dir_with_a_real_file_gets_no_archive(tmp_path):
+    """Spark reads a conf dir that holds more than templates, so the launch
+    keeps it and starts without an archive."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("# no settings\n")
+    rec, _ = _cds_session(tmp_path, SPARK_CONF_DIR=str(conf))
+    assert rec["cds"] == [] and rec["cache"] is None
+    assert rec["conf_dir"] == rec["py_conf_dir"] == str(conf)
+
+
+def test_cluster_session_gets_no_archive(tmp_path):
+    rec, _ = _cds_session(tmp_path, SPARK_LOCAL_MODE="0")
+    assert rec["cds"] == [] and rec["cache"] is None
+    assert rec["py_conf_dir"] == os.environ.get("SPARK_CONF_DIR")

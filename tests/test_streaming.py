@@ -354,6 +354,80 @@ def test_run_kill_restart_mid_stream(spark, tmp_path):
     assert len(leftovers) <= 2, leftovers
 
 
+def test_replayed_batch_rewrites_equal_output_and_state(spark, tmp_path):
+    """Removing the last ``commits/`` entry and restarting replays that
+    batch against the same checkpoint: the replayed output and the state
+    rows equal the first run's. The replay re-commits the batch's
+    state-store version onto files that already exist, which the local
+    FileSystem-based checkpoint manager cannot replace: each replay leaves
+    a temp file and its ``.crc`` for every rewritten delta file and for
+    its checksum file, and nothing removes them."""
+    from zio_analytics_spark.streaming import recovery
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    df = spark.createDataFrame(
+        [(i, f"k{i % 5}") for i in range(60)], "v long, k string"
+    )
+    recovery.split_into_files(df, src, n_files=3)
+    outputs: dict[int, list] = {}
+
+    def sink(batch, batch_id):
+        outputs.setdefault(batch_id, []).append(
+            sorted(tuple(r) for r in batch.collect())
+        )
+
+    def run():
+        stream = (
+            spark.readStream.schema("v long, k string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        agg = stream.groupBy("k").agg(
+            F.sum("v").alias("s"), F.count("*").alias("n")
+        )
+        drive(
+            agg.writeStream.outputMode("update")
+            .foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+        )
+
+    def state():
+        rows = spark.read.format("statestore").load(ckpt)
+        return sorted(map(str, rows.select("key", "value").collect()))
+
+    def leftovers():
+        return [
+            os.path.join(d, f)
+            for d, _, fs in os.walk(os.path.join(ckpt, "state"))
+            for f in fs
+            if f.endswith((".tmp", ".tmp.crc"))
+        ]
+
+    run()
+    last = max(outputs)
+    want_out, want_state = outputs[last][0], state()
+    assert want_out and leftovers() == []
+    state_files = [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(os.path.join(ckpt, "state"))
+        for f in fs
+        if f in (f"{last + 1}.delta", f"{last + 1}.zip")  # HDFS or RocksDB
+    ]
+    counts = []
+    for replay in (1, 2):
+        for name in (str(last), f".{last}.crc"):
+            os.remove(os.path.join(ckpt, "commits", name))
+        run()
+        assert len(outputs[last]) == replay + 1
+        assert outputs[last][-1] == want_out
+        assert state() == want_state
+        counts.append(len(leftovers()))
+    # per replay, at most one temp pair for each rewritten state file and
+    # one for its checkpoint checksum file; they add up across replays
+    assert counts[0] <= 4 * len(state_files), leftovers()
+    assert counts[1] <= 8 * len(state_files), leftovers()
+
+
 def test_fold_window_group_stream_multi_trigger(spark, tmp_path):
     """General-fold streaming windows under MULTI-trigger delivery: each
     trigger re-emits the updated fold for groups it touched (changelog

@@ -357,6 +357,12 @@ class LakeSnapshot:
     #: physical names of DROPPED columns — a re-added logical name gets
     #: a FRESH physical name so dropped data never resurfaces
     retired: list = field(default_factory=list)
+    #: meta-only snapshots: the validated parquet checkpoint the replay
+    #: started from (None without one) and the action lists of the
+    #: commits replayed after it — :func:`_scan_live_files` resumes from
+    #: them instead of reading the checkpoint and the tail a second time
+    checkpoint: int | None = None
+    tail: list = field(default_factory=list)
 
 
 def _phys(mapping: dict | None, col: str) -> str:
@@ -588,7 +594,8 @@ def _load_checkpoint(
     to full log replay (round-13 ADVICE). Parquet format is preferred;
     JSON (pre-round-15 writer) stays readable. ``with_files=False``
     returns the meta only — for parquet that skips parsing the file
-    rows entirely (the bounded-driver path)."""
+    rows entirely (the bounded-driver path). A state read from a
+    parquet checkpoint carries ``"parquet": True``."""
     storage = get_storage()
     try:
         raw = storage.read_bytes(_checkpoint_parquet_path(table, version))
@@ -603,7 +610,7 @@ def _load_checkpoint(
             if with_files:
                 col = pq.read_table(pa.BufferReader(raw), columns=["add_json"])
                 files = [json.loads(s) for s in col.column(0).to_pylist()]
-            return {**_cp_meta(raw), "files": files}
+            return {**_cp_meta(raw), "files": files, "parquet": True}
         except (OSError, ValueError, KeyError):
             pass  # corrupt parquet checkpoint: try the JSON twin / older
     try:
@@ -621,10 +628,12 @@ def _usable_checkpoint(
 ) -> tuple[int, bytes, dict] | None:
     """``(version, bytes, meta)`` of the newest parquet checkpoint at or
     before ``version`` that VALIDATES — the bytes parse as parquet and
-    carry the meta key — so a rolled checkpoint and the distributed leg
-    of :func:`_scan_live_files` never start from a corrupt file (bit rot
-    must degrade to the driver replay, not crash a MERGE: checkpoints
-    are purely an optimization; round-15 ADVICE)."""
+    carry the meta key — so a rolled checkpoint never starts from a
+    corrupt file (:func:`snapshot` applies the same test before a
+    meta-only snapshot hands its checkpoint to the distributed leg of
+    :func:`_scan_live_files`: bit rot must degrade to the driver
+    replay, not crash a MERGE; checkpoints are purely an optimization;
+    round-15 ADVICE)."""
     storage = get_storage()
     for cp in reversed([c for c in checkpoints if c <= version]):
         try:
@@ -647,7 +656,9 @@ def snapshot(
     materializes the file list (a parquet checkpoint's rows are not even
     parsed). This is the bounded-driver mode MERGE uses together with
     :func:`prune_files`; any accidental ``snap.files`` use fails loudly
-    on the None."""
+    on the None. When a parquet checkpoint backs it, a meta-only
+    snapshot keeps that checkpoint's version and the tail commits it
+    replayed (``checkpoint``/``tail``), O(checkpoint_interval)."""
     commits, checkpoints = _list_log(table)
     if version is None:
         if not commits:
@@ -666,9 +677,13 @@ def snapshot(
             continue  # corrupt/partial checkpoint: try an older one
         snap.files = {a["path"]: a for a in state["files"]}
         _apply_meta(snap, state)
+        if not with_files and state.get("parquet"):
+            snap.checkpoint = cp
         after = cp
         break
     for _v, actions in _read_log(table, after, version, commits):
+        if snap.checkpoint is not None:
+            snap.tail.append(actions)
         for action in actions:
             if "meta" in action:
                 _apply_meta(snap, action["meta"])
@@ -1260,19 +1275,20 @@ def _partition_key(values: dict, partition_by: Sequence[str]) -> str:
 def _scan_live_files(
     spark: SparkSession,
     table: str,
-    version: int,
+    snap: LakeSnapshot,
     match,
     spark_match,
     with_actions: bool,
 ) -> dict:
-    """Live files at ``version`` whose add action satisfies ``match`` —
-    rel path → add action. The bounded-driver skeleton behind
-    :func:`prune_files` and :func:`overwrite_partitions`: when a
-    VALIDATED parquet checkpoint backs the snapshot, ``spark_match()``
+    """Live files of the meta-only snapshot ``snap`` whose add action
+    satisfies ``match`` — rel path → add action. The bounded-driver
+    skeleton behind :func:`prune_files` and :func:`overwrite_partitions`:
+    when a VALIDATED parquet checkpoint backs ``snap``, ``spark_match()``
     (the same predicate as a Spark Column over ``add_json``) filters
     the checkpoint rows IN SPARK and only the matches are collected;
-    the tail after the checkpoint replays driver-side through
-    ``match``, O(checkpoint_interval) commits. With no usable
+    the tail after the checkpoint (the commits ``snap`` already read)
+    replays driver-side through ``match``, O(checkpoint_interval)
+    commits. With no usable
     checkpoint, with ``spark_match=None``, or when the distributed leg
     FAILS mid-flight (a checkpoint that validated but has corrupt row
     pages; round-15 ADVICE) the answer comes from a driver replay of
@@ -1281,10 +1297,7 @@ def _scan_live_files(
     so a predicate it cannot express raises. With ``with_actions``
     False the distributed leg skips collecting add_json and its
     matches map to None."""
-    cp = None
-    if spark_match is not None:
-        commits, checkpoints = _list_log(table)
-        cp = _usable_checkpoint(table, version, checkpoints)
+    cp = snap.checkpoint if spark_match is not None else None
     if cp is not None:
         where = spark_match()
         cols = ["path", "add_json"] if with_actions else ["path"]
@@ -1295,7 +1308,7 @@ def _scan_live_files(
                     get_storage().resolve_read_path(
                         table,
                         os.path.join(
-                            _LOG_DIR, f"{cp[0]:0{_PAD}d}.checkpoint.parquet"
+                            _LOG_DIR, f"{cp:0{_PAD}d}.checkpoint.parquet"
                         ),
                     )
                 )
@@ -1306,10 +1319,10 @@ def _scan_live_files(
         except Exception:
             cp = None
     if cp is None:
-        snap = snapshot(table, version)
-        return {p: a for p, a in snap.files.items() if match(a)}
+        full = snapshot(table, snap.version)
+        return {p: a for p, a in full.files.items() if match(a)}
     hits = {r.path: json.loads(r.add_json) if with_actions else None for r in rows}
-    for _v, actions in _read_log(table, cp[0], version, commits):
+    for actions in snap.tail:
         for action in actions:
             if "add" in action:
                 a = action["add"]
@@ -1325,7 +1338,7 @@ def _scan_live_files(
 def _partition_matched_files(
     spark: SparkSession,
     table: str,
-    version: int,
+    snap: LakeSnapshot,
     partition_by: Sequence[str],
     replaced_keys: set,
     schema: dict,
@@ -1368,7 +1381,7 @@ def _partition_matched_files(
         spark_match = None
     return sorted(
         _scan_live_files(
-            spark, table, version, match, spark_match, with_actions=False
+            spark, table, snap, match, spark_match, with_actions=False
         )
     )
 
@@ -1404,7 +1417,7 @@ def overwrite_partitions(df: DataFrame, table: str) -> int:
     removes = _partition_matched_files(
         df.sparkSession,
         table,
-        snap.version,
+        snap,
         phys_pb,
         replaced,
         schema=phys_schema,
@@ -1574,8 +1587,8 @@ def prune_file_actions(
     while the driver stays bounded by the SURVIVOR count, exactly like
     the path list."""
     return _prune_touched(
-        spark, table, key_ranges, version, schema, physical,
-        with_actions=True,
+        spark, table, key_ranges, snapshot(table, version, with_files=False),
+        schema, physical, with_actions=True,
     )
 
 
@@ -1716,7 +1729,8 @@ def prune_files(
     or quotes would break the JSON path and are rejected loudly."""
     return sorted(
         _prune_touched(
-            spark, table, key_ranges, version, schema, physical,
+            spark, table, key_ranges,
+            snapshot(table, version, with_files=False), schema, physical,
             with_actions=False,
         )
     )
@@ -1726,25 +1740,22 @@ def _prune_touched(
     spark: SparkSession,
     table: str,
     key_ranges: dict,
-    version: int | None,
+    snap: LakeSnapshot,
     schema: dict | None,
     physical: dict | None,
     with_actions: bool,
 ) -> dict:
-    """Shared engine behind :func:`prune_files` and
-    :func:`prune_file_actions` (round-16 review: ONE checkpoint
-    validation, ONE Spark scan, ONE tail replay for both shapes).
+    """Shared engine behind :func:`prune_files`,
+    :func:`prune_file_actions` and :func:`merge` (round-16 review: ONE
+    checkpoint validation, ONE Spark scan, ONE tail replay for both
+    shapes), over the meta-only snapshot ``snap``: each log file is
+    read once per call. ``schema``/``physical`` default to ``snap``'s.
     Returns rel path → add action; when ``with_actions`` is False the
     distributed leg skips collecting add_json and values may be None."""
-    if physical is None or schema is None:
-        meta_snap = snapshot(table, version, with_files=False)
-        version = meta_snap.version
-        if physical is None:
-            physical = meta_snap.physical
-        if schema is None:
-            schema = meta_snap.schema
-    elif version is None:
-        version = latest_version(table)
+    if physical is None:
+        physical = snap.physical
+    if schema is None:
+        schema = snap.schema
     keys = [k for k, (mn, _mx) in key_ranges.items() if mn is not None]
     # add-action stats are keyed by PHYSICAL names (round-16 column
     # mapping); key_ranges/schema arrive logical
@@ -1780,9 +1791,7 @@ def _prune_touched(
             )
         return ~disjoint
 
-    return _scan_live_files(
-        spark, table, version, hit, spark_hit, with_actions
-    )
+    return _scan_live_files(spark, table, snap, hit, spark_hit, with_actions)
 
 
 def merge(
@@ -1841,9 +1850,8 @@ def merge(
         # actions (not just paths): the bounded-driver read needs each
         # touched file's dv descriptor — a merge reading rows a vector
         # already deleted would resurrect them in the rewrite
-        touched_actions = prune_file_actions(
-            spark, table, src_range, version=snap.version,
-            schema=snap.schema, physical=snap.physical,
+        touched_actions = _prune_touched(
+            spark, table, src_range, snap, None, None, with_actions=True
         )
         touched = sorted(touched_actions)
         from zio_analytics_spark.operators.merge import merge_upsert
